@@ -16,7 +16,7 @@ install-dev:
 	pip install -e ".[dev]" || python setup.py develop
 
 test:
-	python -m pytest tests/ -x -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 coverage:
 	python -m pytest tests/ -q --cov=cordon_spark --cov-report=term-missing

@@ -258,7 +258,7 @@ SQL_KNN_SCORE = f"WITH {KNN_SQL} SELECT vec_id, floor(score*10000 + 0.5)/10000 A
 def q_threshold_percentile(spark, sf_dir):
     ship_package(spark)
     scored = _knn_scored(spark, sf_dir)
-    kept, _, _ = select_significant(scored, AnalysisConfig(anomaly_percentile=P))
+    kept, _, _, _ = select_significant(scored, AnalysisConfig(anomaly_percentile=P))
     return kept.select("vec_id", r4(F.col("score"), "score"))
 
 
@@ -272,7 +272,7 @@ def q_threshold_range(spark, sf_dir):
     ship_package(spark)
     scored = _knn_scored(spark, sf_dir)
     cfg = AnalysisConfig(anomaly_range_min=0.05, anomaly_range_max=0.15)
-    kept, _, _ = select_significant(scored, cfg)
+    kept, _, _, _ = select_significant(scored, cfg)
     return kept.select("vec_id", r4(F.col("score"), "score"))
 
 
@@ -299,7 +299,7 @@ def q_merge_blocks(spark, sf_dir):
         ((F.col("vec_id") % 125) * 4 + 3).alias("end_idx"),
         "score",
     )
-    kept, _, _ = select_significant(intervals, AnalysisConfig(anomaly_percentile=P))
+    kept, _, _, _ = select_significant(intervals, AnalysisConfig(anomaly_percentile=P))
     blocks = merge_blocks(kept)
     return blocks.select(
         "conv_id",
@@ -398,7 +398,7 @@ def _vec_pipeline(spark, sf_dir):
     windows = S.normalize(windows, "embedding")
     cfg = AnalysisConfig(k_neighbors=K, anomaly_percentile=P)
     scored = score_windows_knn(spark, windows, cfg)
-    kept, _, _ = select_significant(scored, cfg)
+    kept, _, _, _ = select_significant(scored, cfg)
     blocks = merge_blocks(kept)
     return turns, blocks
 
@@ -732,10 +732,9 @@ def _pq_books():
 
     from cordon_spark.pq_codebooks_sf001 import PQ_CODEBOOKS_SF001
 
-    return np.asarray(
-        [[row[:-1] for row in sub] for sub in PQ_CODEBOOKS_SF001],
-        dtype=np.float64,
-    )
+    # rows are [*codeword, half_cc]: Spark scores with the same baked
+    # half_cc column SQL_PQ_ANN reads
+    return np.asarray(PQ_CODEBOOKS_SF001, dtype=np.float64)
 
 
 def q_pq_ann(spark, sf_dir):
@@ -959,13 +958,12 @@ def q_sessionize(spark, sf_dir):
     # sum(CASE...) — a DuckDB HUGEINT, the only non-BIGINT integer any
     # oracle emits — and DuckDB's pandas materialization (`rel.df()`)
     # renders HUGEINT as float64 ("1.0") while Spark's long renders
-    # "1". Under a pandas-rendered value hash that is exactly a
-    # rows-match/schema-match/hash-MISMATCH signature (the r4+r5 driver
-    # cell), while the builder's fetchall-based mirror saw
-    # byte-identical dumps (artifacts/sessionize.*.txt). With the cast
-    # both engines materialize float64 1.0; under any string/typed
-    # rendering the cell is no worse than before. Values are tiny
-    # session ordinals — exact in float64.
+    # "1". Under a pandas-rendered value hash that is a rows-match/
+    # schema-match/hash-MISMATCH signature even though a fetchall-based
+    # comparison sees identical rows. With the cast both engines
+    # materialize float64 1.0; under any string/typed rendering the
+    # cell is no worse than before. Values are tiny session ordinals —
+    # exact in float64.
     return out.select(
         "user_id", F.col("session_id").cast("double").alias("session_id"),
         "n_events", "start_us", "end_us",
@@ -2142,29 +2140,21 @@ SEMDEDUP_TAU = 0.4
 
 def q_semdedup(spark, sf_dir):
     """SemDeDup semantic dedup (operators/dedup.semdedup): assign each
-    embedding to its nearest coarse-quantizer centroid (map-only
-    literal projection), then prune near-duplicates within each
-    cluster only. Both engines use the same BAKED quantizer
-    (ivf_centroids_sf001, the build-once/serve-many shape pq_ann also
-    uses), so unlike ivf_ann this query is valid at ANY sf — the
-    kmeans-fit path is separately exercised in tests/test_dedup.py.
-    All-integer/boolean output: hash-proof across engines.
-
-    Executes via semdedup_blocks (guide §4.2: within-cluster pruning as
-    blocked BLAS matmuls in one applyInPandas pass) instead of the
-    join-based spelling, which evaluated every same-cluster pair's
-    64-dim dot as an interpreted JVM fold — measured 160s vs 3s at
-    sf1.0 (20k vectors, ~25M pairs). The two paths are asserted equal
-    in tests/test_dedup.py and were diffed row-for-row at sf0.001/0.01/
-    0.1/1.0 (OPTIMIZATION_r06.md); D.semdedup stays the semantics
-    oracle."""
+    embedding to its nearest coarse-quantizer centroid, then prune
+    near-duplicates within each cluster only (one shuffle on the
+    cluster id, blocked BLAS matmuls per cluster). Both engines use the
+    same BAKED quantizer (ivf_centroids_sf001, the build-once/serve-many
+    shape pq_ann also uses), so unlike ivf_ann this query is valid at
+    ANY sf — the kmeans-fit path is separately exercised in
+    tests/test_dedup.py. All-integer/boolean output: hash-proof across
+    engines."""
     import numpy as np
 
     from cordon_spark.ivf_centroids_sf001 import IVF_CENTROIDS_SF001
 
     ship_package(spark)
     vecs = _normalized_vectors(spark, sf_dir)
-    return D.semdedup_blocks(
+    return D.semdedup(
         vecs,
         np.asarray(IVF_CENTROIDS_SF001, dtype=np.float64),
         tau=SEMDEDUP_TAU,
@@ -2173,9 +2163,8 @@ def q_semdedup(spark, sf_dir):
 
 # semdedup in SQL: baked centroid literals -> argmax assignment (ties
 # to the lowest cluster — row_number ordered (dot DESC, cluster)
-# mirrors Spark's array_position-of-max) -> within-cluster lower-id
-# neighbor with cosine >= tau marks a duplicate. Dot products are
-# ordered float64 folds on both engines (the ivf_ann-proven parity).
+# mirrors np.argmax's first-max rule) -> within-cluster lower-id
+# neighbor with cosine >= tau marks a duplicate.
 SQL_SEMDEDUP = f"""
 WITH {NORM_EMB_SQL.strip()},
 cen(cluster, w) AS (VALUES

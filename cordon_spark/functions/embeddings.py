@@ -283,13 +283,3 @@ def create_embedder(cfg: AnalysisConfig) -> Callable[[DataFrame, str], DataFrame
         return df.withColumn("embedding", udf(F.col(content_col)))
 
     return embed_stage
-
-
-def normalize_vec_col(df: DataFrame, col: str = "embedding") -> DataFrame:
-    """L2-normalize an array<numeric> column JVM-side (no Python).
-    Delegates to similarity.normalize, which materializes the norm once
-    per row (a norm referenced inside the divide lambda re-evaluates per
-    element — O(dim^2)/row)."""
-    from cordon_spark.operators.similarity import normalize
-
-    return normalize(df, col)

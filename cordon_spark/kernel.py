@@ -22,7 +22,6 @@ Numeric contract:
 from __future__ import annotations
 
 import hashlib
-import math
 import re
 
 import numpy as np
@@ -367,18 +366,6 @@ def l2_normalize(mat: np.ndarray) -> np.ndarray:
     return out
 
 
-def round_half_even(value: float, digits: int) -> float:
-    """Python round() — used when exposing scores to cross-engine hash
-    comparison (DuckDB ROUND is half-up; Spark ROUND is half-up; Python is
-    half-even). For oracle SQL parity we round via floor(x*10^d + 0.5)
-    on both engines instead; this helper is only for driver-side stats."""
-    return round(value, digits)
-
-
-def clear_caches() -> None:
-    _TOKEN_CACHE.clear()
-
-
 def stable_hash64(text: str) -> int:
     """Deterministic 64-bit hash (md5-based) shared with SQL oracles via
     md5 hex strings; independent of PYTHONHASHSEED."""
@@ -399,10 +386,6 @@ def simhash64(tokens: list[str]) -> int:
         if acc[b] > 0:
             out |= 1 << b
     return out
-
-
-def hamming64(a: int, b: int) -> int:
-    return int(bin(a ^ b).count("1"))
 
 
 def token_shingles(tokens: list[str], n: int) -> list[str]:
@@ -445,7 +428,3 @@ def jaccard(a: list[str], b: list[str]) -> float:
     inter = len(sa & sb)
     union = len(sa) + len(sb) - inter
     return inter / union if union else 0.0
-
-
-def isclose_frac(a: float, b: float) -> bool:
-    return math.isclose(a, b)

@@ -15,6 +15,8 @@ Scale notes per variant:
   simhash      64-bit fingerprints, candidates via band equality
   embedding    cosine near-dup: exact pairwise at test scale; at scale
                bucket by LSH sign-planes first (similarity.lsh_ann)
+  semdedup     cosine near-dup within coarse-quantizer clusters: one
+               shuffle on the cluster id, blocked BLAS pruning per cluster
 """
 
 from __future__ import annotations
@@ -534,112 +536,18 @@ def minhash_lsh_pairs_collapsed(
     return pairs.unionByName(star)
 
 
-def assign_to_centroids(
-    vectors: DataFrame,
-    centroids,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-    out_col: str = "cluster",
-) -> DataFrame:
-    """Nearest-centroid assignment as a zero-shuffle JVM projection:
-    the k centroid vectors become array literals, the k dot products
-    materialize ONCE per row behind a Generate barrier (the same
-    spelling ivf_ann uses — a bare argmax expression would re-evaluate
-    every dot per comparison), and the winner is
-    array_position-of-max, ties to the LOWEST cluster id. `centroids`
-    is a (k, dim) numpy array, typically from similarity.kmeans_fit or
-    a baked quantizer; at any corpus size this is a map-only pass."""
-    from cordon_spark.operators.similarity import _dot
-
-    k = centroids.shape[0]
-    cen_arrs = [
-        F.array(*[F.lit(float(x)) for x in centroids[c]]) for c in range(k)
-    ]
-    dots_expr = F.array(*[_dot(F.col(vec_col), a) for a in cen_arrs])
-    return (
-        vectors.withColumn("_d", F.explode(F.array(dots_expr)))
-        .withColumn(out_col, F.expr("array_position(_d, array_max(_d)) - 1"))
-        .drop("_d")
-    )
-
-
-def semdedup(
-    vectors: DataFrame,
-    centroids,
-    tau: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-) -> DataFrame:
-    """SemDeDup semantic deduplication (Abbas et al. 2023,
-    arXiv:2303.09540): cluster the embedding space with a coarse
-    quantizer, then prune near-duplicates WITHIN each cluster — the
-    cross-cluster pair space is never materialized, which is the whole
-    scale trick (the paper runs it at LAION/C4 scale with ~100k
-    clusters). A row is a duplicate iff some SAME-CLUSTER row with a
-    smaller id has cosine >= tau to it; the survivor of every dup
-    group is therefore deterministic (the paper keeps the member with
-    the lowest centroid similarity — we pin the lowest id instead so
-    both engines and repeated runs agree bit-for-bit).
-
-    Inputs are L2-normalized embeddings (similarity.normalize) and a
-    (k, dim) centroid matrix (kmeans_fit, or a baked quantizer for
-    build-once/serve-many). Returns (id, cluster, kept).
-
-    Plan shape: assignment is a map-only literal projection; the
-    within-cluster pair search is ONE self-join exchange on the
-    cluster id (AQE reuses the exchange for both sides), with pair
-    count bounded by sum(c_i^2) over cluster sizes — choose
-    k ~ N/1000 like the paper and no task sees more than a bounded
-    block. Byte-identical embedding floods (the analog of LSH's exact-
-    dup hot bucket) should be collapsed by digest first via
-    exact_dedup on a vector digest; clusters here bound the damage to
-    one cluster either way."""
-    assigned = assign_to_centroids(
-        vectors.select(id_col, vec_col), centroids, id_col=id_col, vec_col=vec_col
-    )
-    from cordon_spark.operators.similarity import _dot
-
-    a = assigned.alias("a")
-    b = assigned.alias("b")
-    cos = _dot(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}"))
-    dup_ids = (
-        a.join(
-            b,
-            (F.col("a.cluster") == F.col("b.cluster"))
-            & (F.col(f"b.{id_col}") < F.col(f"a.{id_col}")),
-        )
-        .filter(cos >= F.lit(float(tau)))
-        .select(F.col(f"a.{id_col}").alias(id_col))
-        .distinct()
-    )
-    return (
-        assigned.join(
-            dup_ids.withColumn("_dup", F.lit(True)), on=id_col, how="left"
-        )
-        .select(
-            id_col,
-            F.col("cluster").cast("long").alias("cluster"),
-            F.col("_dup").isNull().alias("kept"),
-        )
-    )
-
-
 def assign_to_centroids_pandas(
     vectors: DataFrame,
     centroids,
     vec_col: str = "v",
     out_col: str = "cluster",
 ) -> DataFrame:
-    """Large-k spelling of assign_to_centroids: broadcast the (k, dim)
-    matrix and argmax a BLAS matmul per Arrow batch. The literal-
-    projection path embeds k*dim literals in the plan — right for the
-    small quantizers the oracles pin (k<=64), wrong for the k ~ N/1000
-    quantizers SemDeDup wants at corpus scale (the expression tree and
-    codegen grow with k; numpy is O(1) plan-size and ~BLAS-fast).
-    np.argmax ties to the FIRST maximum = the lowest cluster id, the
-    same tie rule as array_position-of-max; the two paths may disagree
-    only when two dots tie within 1 ulp (never observed — asserted
-    equal on the test quantizers)."""
+    """Nearest-centroid assignment: broadcast the (k, dim) matrix and
+    argmax a BLAS matmul per Arrow batch — a map-only pass whose plan
+    size stays constant in k (SemDeDup wants k ~ N/1000 quantizers at
+    corpus scale). np.argmax ties to the FIRST maximum = the lowest
+    cluster id, the tie rule SQL_SEMDEDUP's row_number (dot DESC,
+    cluster) mirrors."""
     import numpy as np
 
     spark = vectors.sparkSession
@@ -660,7 +568,7 @@ def assign_to_centroids_pandas(
     return vectors.mapInPandas(assign, out_schema)
 
 
-def semdedup_blocks(
+def semdedup(
     vectors: DataFrame,
     centroids,
     tau: float = 0.95,
@@ -668,13 +576,26 @@ def semdedup_blocks(
     vec_col: str = "v",
     row_block: int = 1024,
 ) -> DataFrame:
-    """Scale path of semdedup, shaped like the paper's own
-    implementation: ONE shuffle groups each cluster's members onto an
-    executor, and the within-cluster pair search is a blocked BLAS
-    matmul instead of a JVM fold per pair — same (id, cluster, kept)
-    output, same lowest-id survivor rule (rows sorted by id; row i is
-    a dup iff any j < i has cosine >= tau, witnesses need not
-    themselves survive).
+    """SemDeDup semantic deduplication (Abbas et al. 2023,
+    arXiv:2303.09540): cluster the embedding space with a coarse
+    quantizer, then prune near-duplicates WITHIN each cluster — the
+    cross-cluster pair space is never materialized, which is the whole
+    scale trick (the paper runs it at LAION/C4 scale with ~100k
+    clusters). A row is a duplicate iff some SAME-CLUSTER row with a
+    smaller id has cosine >= tau to it (witnesses need not themselves
+    survive); the survivor of every dup group is therefore
+    deterministic (the paper keeps the member with the lowest centroid
+    similarity — we pin the lowest id instead so both engines and
+    repeated runs agree bit-for-bit).
+
+    Inputs are L2-normalized embeddings (similarity.normalize) and a
+    (k, dim) centroid matrix (kmeans_fit, or a baked quantizer for
+    build-once/serve-many). Returns (id, cluster, kept).
+
+    Plan shape, like the paper's own implementation: a map-only
+    assignment, then ONE shuffle groups each cluster's members onto an
+    executor and the within-cluster pair search is a blocked BLAS
+    matmul over the id-sorted rows.
 
     Memory: a cluster of size m holds its (m, dim) float64 matrix plus
     one (row_block, m) similarity block — choose k ~ N/1000 like the
@@ -682,10 +603,8 @@ def semdedup_blocks(
     Byte-identical floods should be digest-collapsed first
     (exact_dedup); the cluster bound caps the damage either way.
 
-    The join-based semdedup stays the semantics oracle (DuckDB-checked
-    in the driver gate); equality of the two paths is asserted in
-    tests at margins where a last-ulp dot difference cannot flip a
-    tau comparison."""
+    Semantics are pinned by SQL_SEMDEDUP (the DuckDB oracle in the
+    driver gate) and by a numpy reference in tests."""
     import numpy as np
 
     assigned = assign_to_centroids_pandas(

@@ -1,44 +1,18 @@
-"""OP-10 + lineage: score-distribution aggregate and per-stage /
-per-partition metrics.
+"""Per-stage / per-partition metrics.
 
-Score distribution (pipeline.py:100-126): min/max/mean/median/p90 with
-zeros when empty; median/p90 via Spark's EXACT `percentile` (same
-linear-interpolation definition as np.percentile).
-
-Stage metrics use `pyspark.sql.Observation` — metrics ride along with
-the stage's own action instead of re-running the plan. Per-partition
-lineage (north_rule: "per-partition lineage + metrics") is an explicit
-`groupBy(spark_partition_id())` count emitted to the metrics sink."""
+StageMetrics records driver-side wall-clock per stage plus explicit
+values (row counts, sink counts); it does not read Spark's task
+metrics, so a lazily built plan's work is charged to whichever stage
+runs the action. Per-partition lineage (north_rule: "per-partition
+lineage + metrics") is an explicit `groupBy(spark_partition_id())`
+count emitted to the metrics sink. The OP-10 score distribution is
+computed by threshold.thresholds_and_stats."""
 
 from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, Observation, functions as F
-
-
-def score_distribution(scored: DataFrame, score_col: str = "score") -> dict:
-    """One pass: count + min/max/mean + exact median/p90 (OP-10)."""
-    row = scored.select(
-        F.count(F.lit(1)).alias("n"),
-        F.min(score_col).alias("min"),
-        F.max(score_col).alias("max"),
-        F.avg(score_col).alias("mean"),
-        F.expr(f"percentile({score_col}, 0.5)").alias("median"),
-        F.expr(f"percentile({score_col}, 0.90)").alias("p90"),
-    ).first()
-    if row["n"] == 0:
-        return {"min": 0.0, "max": 0.0, "mean": 0.0, "median": 0.0, "p90": 0.0, "n": 0}
-    out = {k: float(row[k]) for k in ("min", "max", "mean", "median", "p90")}
-    out["n"] = int(row["n"])
-    return out
-
-
-def observed(df: DataFrame, name: str) -> tuple[DataFrame, Observation]:
-    """Attach a row-count observation that is collected for free when the
-    stage's action runs."""
-    obs = Observation(name)
-    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
+from pyspark.sql import DataFrame, functions as F
 
 
 def partition_lineage(df: DataFrame, stage: str) -> DataFrame:

@@ -819,7 +819,8 @@ def pq_fit(
     difference between iters+1 and m*(iters+1) corpus passes — the
     sequential spelling measured scaling efficiency 0.36 at 1M vectors
     because m*iters driver round-trips serialize (BENCH.md). Returns
-    codebooks of shape (m, n_codes, dim/m).
+    codebooks of shape (m, n_codes, dim/m + 1): each row is
+    [*codeword, half_cc] (pq_with_half_cc).
 
     Determinism discipline matches kmeans_fit: init = the n_codes rows
     with smallest md5(id) (engine/partitioning-independent; the SAME
@@ -935,26 +936,34 @@ def pq_fit(
                 nz = cnts[j] > 0
                 books[j][nz] = sums[j][nz] / cnts[j][nz, None]
             bc.destroy()
-        return books
+        return pq_with_half_cc(books)
     finally:
         if owns_cache:
             vectors.unpersist(blocking=False)
 
 
+def pq_with_half_cc(codewords: np.ndarray) -> np.ndarray:
+    """Append half_cc = 0.5*dot(c, c) to every codeword: (m, n_codes,
+    dsub) -> (m, n_codes, dsub + 1) rows [*codeword, half_cc], the
+    layout pq_fit returns and pq_codebooks_sf001.py bakes. This is the
+    only place the constant is computed; encoding scores with the
+    carried column, so baked codebooks score on every host with
+    exactly the constants the DuckDB oracle reads."""
+    cw = np.asarray(codewords, dtype=np.float64)
+    half = np.array([[0.5 * float(np.dot(c, c)) for c in sub] for sub in cw])
+    return np.concatenate([cw, half[..., None]], axis=2)
+
+
 def _pq_lit_scores(codebooks: np.ndarray, sub: int, vec_col):
     """Literal argmax-scoring array for one subspace: score_c =
-    dot(v_sub, c) - 0.5*||c||^2 (the L2-argmin equivalent without the
-    query-side norm). ||c||^2 is computed ONCE here in numpy and baked
-    as a literal so every engine (and the DuckDB oracle generator)
-    consumes identical constants."""
-    dsub = codebooks.shape[2]
+    dot(v_sub, c) - half_cc (the L2-argmin equivalent without the
+    query-side norm), half_cc read from the codebook's carried column."""
+    dsub = codebooks.shape[2] - 1
     vsub = F.slice(vec_col, sub * dsub + 1, dsub)
     scores = []
-    for c in range(codebooks.shape[1]):
-        cw = codebooks[sub, c]
-        cc = float(np.dot(cw, cw))
-        lit = F.array(*[F.lit(float(x)) for x in cw])
-        scores.append(_dot(vsub, lit) - F.lit(0.5 * cc))
+    for row in codebooks[sub]:
+        lit = F.array(*[F.lit(float(x)) for x in row[:-1]])
+        scores.append(_dot(vsub, lit) - F.lit(float(row[-1])))
     return F.array(*scores)
 
 
@@ -995,12 +1004,12 @@ def pq_decode_col(codes_col, codebooks: np.ndarray):
     per-subspace codeword lookups against the baked literal tables.
     dot(q, decode(codes)) == the ADC table-sum — one spelling, shared
     with the oracle, instead of two float orders to reconcile."""
-    m, n_codes, dsub = codebooks.shape
+    m, n_codes = codebooks.shape[:2]
     parts = []
     for j in range(m):
         table = F.array(
             *[
-                F.array(*[F.lit(float(x)) for x in codebooks[j, c]])
+                F.array(*[F.lit(float(x)) for x in codebooks[j, c, :-1]])
                 for c in range(n_codes)
             ]
         )

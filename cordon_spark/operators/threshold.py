@@ -6,15 +6,18 @@ exact `percentile` aggregate implements the same definition;
 `percentile_approx` does not and is only used to BRACKET the threshold
 on the scale path.
 
-Tie rules copied verbatim (SURVEY.md §4):
+Tie rules copied verbatim (SURVEY.md §4), held only by
+select_significant:
   percentile mode: keep score >= threshold (ties included, :76)
   range mode:      keep lower <= score < upper (:51-53)
   isclose(p, 1.0) -> keep all; isclose(p, 0.0) -> keep none (:63-68)
 
-Scale path (SURVEY.md §7.5): exact global percentile needs a global
-sort; at 10^12 rows we bracket with percentile_approx(+/- accuracy),
-then run the exact percentile only over the bracketed band (tiny).
-`exact_percentiles()` picks the strategy by row count.
+One percentile plan, thresholds_and_stats: a fused job computes
+count/min/max/avg plus percentile_approx brackets; up to
+EXACT_PERCENTILE_DIRECT_LIMIT rows one exact `percentile` job follows,
+above it the exact order statistics are refined from the bracketed band
+(SURVEY.md §7.5: an exact global percentile at 10^12 rows needs a
+global sort; the band is tiny).
 """
 
 from __future__ import annotations
@@ -30,58 +33,15 @@ from cordon_spark.config import AnalysisConfig
 EXACT_PERCENTILE_DIRECT_LIMIT = 500_000
 
 
-def exact_percentiles(
-    df: DataFrame, col: str, pcts: list[float], n_rows: int | None = None
-) -> list[float]:
-    """Exact linear-interpolation percentiles of df[col] (pcts in [0,100]).
-
-    Direct mode: one exact `percentile` aggregate.
-    Bracketed mode (huge inputs): percentile_approx bounds each target,
-    counts below the band give the exact global rank offset, then the
-    exact order statistics are interpolated from the (small) band.
-    """
-    if n_rows is None:
-        n_rows = df.count()
-    if n_rows == 0:
-        return [float("nan") for _ in pcts]
-    qs = [p / 100.0 for p in pcts]
-    if n_rows <= EXACT_PERCENTILE_DIRECT_LIMIT:
-        row = df.select(
-            F.expr(
-                "percentile({c}, array({qs}))".format(
-                    c=col, qs=",".join(repr(q) for q in qs)
-                )
-            ).alias("p")
-        ).first()
-        return [float(v) for v in row["p"]]
-    return _bracketed_percentiles(df, col, qs, n_rows)
-
-
-def _bracketed_percentiles(df: DataFrame, col: str, qs: list[float], n_rows: int):
-    """Two-phase exact percentile for huge inputs.
-
-    percentile_approx(accuracy=A) guarantees rank error <= n/A; so the
-    approx values at q -/+ margin bound the exact order statistics at
-    ranks floor/ceil((n-1)q). We count rows strictly below the lower
-    bound (-> global rank offset), collect ONLY the bracketed band
-    (O(n/A) rows), and interpolate exactly — identical result to the
-    direct exact percentile."""
-    accuracy = 10_000
-    margin = 3.0 / accuracy  # > guaranteed rank error, with slack
-    lo_qs = [max(q - margin, 0.0) for q in qs]
-    hi_qs = [min(q + margin, 1.0) for q in qs]
-    # job 1: approx brackets for every quantile at once
-    bounds = df.select(
-        F.percentile_approx(col, lo_qs + hi_qs, accuracy).alias("b")
-    ).first()["b"]
-    a_los = [float(bounds[i]) for i in range(len(qs))]
-    a_his = [float(bounds[i + len(qs)]) for i in range(len(qs))]
-    return _refine_brackets(df, col, qs, n_rows, a_los, a_his)
-
-
 def _refine_brackets(df, col, qs, n_rows, a_los, a_his):
     """Exact refinement given approx brackets: one aggregate for the
-    global rank offsets + one collect of the union of (tiny) bands."""
+    global rank offsets + one collect of the union of (tiny) bands.
+
+    percentile_approx(accuracy=A) guarantees rank error <= n/A, so the
+    approx values at q -/+ margin bound the exact order statistics at
+    ranks floor/ceil((n-1)q); rows strictly below the lower bound give
+    the global rank offset and the band is interpolated exactly —
+    identical result to the direct exact percentile."""
     # exact global rank offsets for ALL brackets in one aggregate
     below_row = df.select(
         *[
@@ -89,7 +49,7 @@ def _refine_brackets(df, col, qs, n_rows, a_los, a_his):
             for i, a_lo in enumerate(a_los)
         ]
     ).first()
-    # job 3: one collect of the UNION of all (tiny) bracketed bands
+    # one collect of the UNION of all (tiny) bracketed bands
     band_pred = None
     for a_lo, a_hi in zip(a_los, a_his):
         pred = (F.col(col) >= F.lit(a_lo)) & (F.col(col) <= F.lit(a_hi))
@@ -116,23 +76,6 @@ def _refine_brackets(df, col, qs, n_rows, a_los, a_his):
     return out
 
 
-def compute_thresholds(
-    scored: DataFrame, cfg: AnalysisConfig, score_col: str = "score"
-) -> tuple[float | None, float | None]:
-    """(lower, upper) per kernel.percentile_thresholds semantics."""
-    if cfg.keep_all or cfg.keep_none:
-        return None, None
-    if cfg.range_mode:
-        upper_p = (1.0 - cfg.anomaly_range_min) * 100.0
-        lower_p = (1.0 - cfg.anomaly_range_max) * 100.0
-        lo, up = exact_percentiles(scored, score_col, [lower_p, upper_p])
-        return lo, up
-    (thr,) = exact_percentiles(
-        scored, score_col, [(1.0 - cfg.anomaly_percentile) * 100.0]
-    )
-    return thr, None
-
-
 def thresholds_and_stats(
     scored: DataFrame, cfg: AnalysisConfig, score_col: str = "score"
 ) -> tuple[float | None, float | None, dict]:
@@ -148,7 +91,7 @@ def thresholds_and_stats(
             pcts += [(1.0 - cfg.anomaly_percentile) * 100.0]
     qs = [p / 100.0 for p in pcts]
     accuracy = 10_000
-    margin = 3.0 / accuracy
+    margin = 3.0 / accuracy  # > guaranteed rank error, with slack
     lo_qs = [max(q - margin, 0.0) for q in qs]
     hi_qs = [min(q + margin, 1.0) for q in qs]
     row = scored.agg(
@@ -162,7 +105,10 @@ def thresholds_and_stats(
     if n == 0:
         return None, None, {"min": 0.0, "max": 0.0, "mean": 0.0, "median": 0.0, "p90": 0.0, "n": 0}
     if n <= EXACT_PERCENTILE_DIRECT_LIMIT:
-        vals = exact_percentiles(scored, score_col, pcts, n_rows=n)
+        exact = scored.select(
+            F.expr(f"percentile({score_col}, array({','.join(repr(q) for q in qs)}))")
+        ).first()[0]
+        vals = [float(v) for v in exact]
     else:
         a_los = [float(row["bounds"][i]) for i in range(len(qs))]
         a_his = [float(row["bounds"][i + len(qs)]) for i in range(len(qs))]
@@ -184,19 +130,19 @@ def thresholds_and_stats(
 
 def select_significant(
     scored: DataFrame, cfg: AnalysisConfig, score_col: str = "score"
-) -> tuple[DataFrame, float | None, float | None]:
-    """Filter scored windows by the threshold; returns (df, lower, upper).
+) -> tuple[DataFrame, float | None, float | None, dict]:
+    """Filter scored windows by the threshold; returns (df, lower,
+    upper, stats) with stats the thresholds_and_stats distribution.
     Sorting score-desc (thresholder.py:79) is left to consumers — a
     global orderBy is only warranted at output time."""
+    lower, upper, stats = thresholds_and_stats(scored, cfg, score_col)
+    score = F.col(score_col)
     if cfg.keep_none:
-        return scored.filter(F.lit(False)), None, None
-    if cfg.keep_all:
-        return scored, None, None
-    lower, upper = compute_thresholds(scored, cfg, score_col)
-    if cfg.range_mode:
-        kept = scored.filter(
-            (F.col(score_col) >= F.lit(lower)) & (F.col(score_col) < F.lit(upper))
-        )
+        kept = scored.filter(F.lit(False))
+    elif cfg.keep_all:
+        kept = scored
+    elif cfg.range_mode:
+        kept = scored.filter((score >= F.lit(lower)) & (score < F.lit(upper)))
     else:
-        kept = scored.filter(F.col(score_col) >= F.lit(lower))
-    return kept, lower, upper
+        kept = scored.filter(score >= F.lit(lower))
+    return kept, lower, upper, stats

@@ -3,7 +3,9 @@
 Wires the stages parse -> window -> embed -> score -> threshold ->
 merge -> route -> sinks with:
 
-  * stage timings + row counts (StageMetrics, Observation-based),
+  * driver-side stage wall-clock timings + snapshot row counts
+    (StageMetrics; a lazy plan's work is charged to the stage whose
+    action runs it),
   * per-partition lineage records (north_rule),
   * optional snapshot checkpointing per stage through a Catalog, with
     idempotent RESUME: a stage keyed (run_id, stage) whose snapshot is
@@ -157,17 +159,7 @@ def analyze_transcripts(
 
     # ---- threshold + score distribution (one percentile pass) --------
     metrics.start("threshold")
-    lower, upper, dist_stats = TH.thresholds_and_stats(scored, cfg)
-    if cfg.keep_none:
-        significant = scored.filter(F.lit(False))
-    elif cfg.keep_all:
-        significant = scored
-    elif cfg.range_mode:
-        significant = scored.filter(
-            (F.col("score") >= F.lit(lower)) & (F.col("score") < F.lit(upper))
-        )
-    else:
-        significant = scored.filter(F.col("score") >= F.lit(lower))
+    significant, lower, upper, dist_stats = TH.select_significant(scored, cfg)
     metrics.stop("threshold")
 
     # ---- merge ---------------------------------------------------------

@@ -7,12 +7,13 @@ bit-reproducible Lloyd fit (md5-seeded init, pid-sorted reduces) per
 subspace, so the sf0.01 codebooks are stable constants. Unlike
 ivf_ann (which re-fits inside the query), the pq_ann entry query
 CONSUMES the baked codebooks directly — the build-once/serve-many
-shape a real PQ index has — and a test asserts baked == fresh fit so
-drift is caught in CI as well as by the driver's hash gate.
+shape a real PQ index has — and a test asserts the baked codewords
+equal a fresh fit so drift is caught in CI as well as by the driver's hash gate.
 
-Each codeword row also bakes half_cc = 0.5 * dot(c, c) computed HERE
-(numpy) so both engines score with the identical constant instead of
-each re-deriving it with their own float-sum order.
+Each codeword row also bakes half_cc = 0.5 * dot(c, c): pq_fit returns
+rows [*codeword, half_cc] from similarity.pq_with_half_cc, and they are
+written verbatim, so both engines score with the identical constant
+instead of each re-deriving it on its own host.
 
 Usage: python scripts/gen_pq_codebooks.py [sf_dir]
 """
@@ -32,7 +33,6 @@ PQ_ITERS = 3
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    import numpy as np
     from pyspark.sql import SparkSession
 
     spark = (
@@ -54,11 +54,7 @@ def main() -> None:
     subs = []
     for j in range(books.shape[0]):
         rows = ",\n".join(
-            "        ["
-            + ", ".join(repr(float(x)) for x in books[j, c])
-            + ", "
-            + repr(float(0.5 * np.dot(books[j, c], books[j, c])))
-            + "]"
+            "        [" + ", ".join(repr(float(x)) for x in books[j, c]) + "]"
             for c in range(books.shape[1])
         )
         subs.append(f"    [\n{rows},\n    ]")

@@ -1,5 +1,5 @@
 """SemDeDup at scale: coarse-quantizer fit + blocked within-cluster
-pruning (operators/dedup.semdedup_blocks) over 1M 64-dim vectors on
+pruning (operators/dedup.semdedup) over 1M 64-dim vectors on
 the standalone cluster at two cluster sizes (the north rule's N vs 4N
 criterion applied to the semantic-dedup tier; the driver-gate semdedup
 query only proves sf-scale correctness).
@@ -157,16 +157,16 @@ vecs = spark.read.parquet("{data}").persist(StorageLevel.MEMORY_AND_DISK)
 n_total = vecs.count()
 
 # warm python workers (numpy import + BLAS) on a slice
-D.semdedup_blocks(vecs.filter(F.col("vec_id") % 199 == 0),
-                  __import__("numpy").random.RandomState(0).randn(4, {dim}),
-                  tau={tau}).count()
+D.semdedup(vecs.filter(F.col("vec_id") % 199 == 0),
+           __import__("numpy").random.RandomState(0).randn(4, {dim}),
+           tau={tau}).count()
 
 with CpuProbe() as p_fit:
     cen = kmeans_fit(vecs, k={k}, iters=2, persist=False)
 t_fit = p_fit.wall
 
 with CpuProbe() as p_dedup:
-    out = D.semdedup_blocks(vecs, cen, tau={tau}).persist(StorageLevel.MEMORY_AND_DISK)
+    out = D.semdedup(vecs, cen, tau={tau}).persist(StorageLevel.MEMORY_AND_DISK)
     n_out = out.count()
     n_dropped = out.filter(~F.col("kept")).count()
 t_dedup = p_dedup.wall
@@ -246,7 +246,7 @@ def main() -> None:
         f"## SemDeDup at {n:,} x {DIM}-dim vectors "
         f"(+{planted:,} planted near-dups), {time.strftime('%Y-%m-%d %H:%M')}",
         "",
-        f"kmeans_fit k={k} iters=2 (fit) then semdedup_blocks tau={TAU} "
+        f"kmeans_fit k={k} iters=2 (fit) then semdedup tau={TAU} "
         "(one shuffle on the cluster id; blocked BLAS within-cluster "
         "pruning). Planted partners whose cluster matches their "
         "original and whose true cosine >= tau MUST prune — recall "

@@ -320,7 +320,13 @@ def _semdedup_reference(mat, centroids, tau):
     return assign, kept
 
 
-def test_semdedup_matches_numpy_reference(spark):
+# the default row_block, and row_block=4, which splits every cluster
+# into several similarity blocks (the cross-block witness case)
+ROW_BLOCKS = [pytest.param({}, id="default"), pytest.param({"row_block": 4}, id="row_block4")]
+
+
+@pytest.mark.parametrize("blocks", ROW_BLOCKS)
+def test_semdedup_matches_numpy_reference(spark, blocks):
     """semdedup with a FRESH kmeans_fit quantizer (the non-baked path
     the entry query does not exercise) against a brute-force numpy
     oracle, including planted near-dup groups."""
@@ -338,7 +344,7 @@ def test_semdedup_matches_numpy_reference(spark):
     cen = kmeans_fit(vecs, k=4, iters=3)
     got = {
         r.vec_id: (r.cluster, r.kept)
-        for r in D.semdedup(vecs, cen, tau=0.9).collect()
+        for r in D.semdedup(vecs, cen, tau=0.9, **blocks).collect()
     }
     assign, kept = _semdedup_reference(mat, cen, 0.9)
     assert len(got) == len(mat)
@@ -348,7 +354,8 @@ def test_semdedup_matches_numpy_reference(spark):
     assert sum(1 for _, k in got.values() if not k) >= 5
 
 
-def test_semdedup_tau_extremes(spark):
+@pytest.mark.parametrize("blocks", ROW_BLOCKS)
+def test_semdedup_tau_extremes(spark, blocks):
     """tau > 1: nothing prunes. tau <= -1: exactly one survivor per
     cluster (the min id) — the degenerate bounds pin the comparison
     direction and the lower-id witness rule."""
@@ -362,58 +369,15 @@ def test_semdedup_tau_extremes(spark):
     from cordon_spark.operators.similarity import kmeans_fit
 
     cen = kmeans_fit(vecs, k=3, iters=2)
-    all_kept = D.semdedup(vecs, cen, tau=1.5).collect()
+    all_kept = D.semdedup(vecs, cen, tau=1.5, **blocks).collect()
     assert all(r.kept for r in all_kept)
-    one_per = D.semdedup(vecs, cen, tau=-1.5).collect()
+    one_per = D.semdedup(vecs, cen, tau=-1.5, **blocks).collect()
     by_cluster = {}
     for r in one_per:
         by_cluster.setdefault(r.cluster, []).append(r)
     for rows in by_cluster.values():
         kept_ids = sorted(r.vec_id for r in rows if r.kept)
         assert kept_ids == [min(r.vec_id for r in rows)]
-
-
-def test_assign_to_centroids_map_only(spark):
-    """Centroid assignment must stay a zero-exchange literal
-    projection at any corpus size (the SemDeDup/IVF scale property)."""
-    import numpy as np
-
-    mat = kernel.l2_normalize(np.random.RandomState(5).randn(10, 4))
-    vecs = spark.createDataFrame(
-        pd.DataFrame({"vec_id": range(len(mat)), "v": [list(r) for r in mat]})
-    )
-    out = D.assign_to_centroids(vecs, mat[:3])
-    out.collect()
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
-
-
-def test_semdedup_blocks_matches_join_path(spark):
-    """The BLAS scale path must reproduce the join-based oracle path
-    exactly — same clusters, same survivors — including across a
-    row_block boundary (row_block=4 forces multi-block pruning)."""
-    import numpy as np
-
-    from cordon_spark.operators.similarity import kmeans_fit
-
-    rng = np.random.RandomState(17)
-    base = kernel.l2_normalize(rng.randn(40, 8))
-    near = kernel.l2_normalize(base[:15] + 0.02 * rng.randn(15, 8))
-    mat = np.vstack([base, near])
-    vecs = spark.createDataFrame(
-        pd.DataFrame({"vec_id": range(len(mat)), "v": [list(r) for r in mat]})
-    ).repartition(4)
-    cen = kmeans_fit(vecs, k=5, iters=3)
-    want = sorted(
-        (r.vec_id, r.cluster, r.kept)
-        for r in D.semdedup(vecs, cen, tau=0.9).collect()
-    )
-    got = sorted(
-        (r.vec_id, r.cluster, r.kept)
-        for r in D.semdedup_blocks(vecs, cen, tau=0.9, row_block=4).collect()
-    )
-    assert got == want
-    assert any(not k for _, _, k in got)
 
 
 def test_substring_dup_spans(spark):

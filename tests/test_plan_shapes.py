@@ -239,10 +239,10 @@ def test_tpch_q7_broadcast_nation_roles_and_pushdown(spark):
 
 
 def test_semdedup_single_pair_exchange_family(spark):
-    """SemDeDup: centroid assignment is map-only (asserted separately
-    in test_dedup), so the whole query's exchanges belong to the
-    within-cluster self-join + dup-id dedup + kept join only — a
-    bounded family that does NOT grow with the centroid count."""
+    """SemDeDup: centroid assignment is a map-only mapInPandas pass,
+    so the query's exchanges are the one shuffle on the cluster id plus
+    the input's own — a bounded family that does NOT grow with the
+    centroid count."""
     from cordon_spark import entry_queries as Q
 
     df = Q.QUERIES["semdedup"](spark, SF_DIR)

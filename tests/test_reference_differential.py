@@ -182,7 +182,7 @@ def test_thresholder_differential(spark, ref):
                 }
             )
         )
-        kept, _, _ = select_significant(df, AnalysisConfig(**kw))
+        kept, _, _, _ = select_significant(df, AnalysisConfig(**kw))
         got = {r.window_id for r in kept.collect()}
         assert got == ref_kept, kw
 

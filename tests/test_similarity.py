@@ -251,7 +251,9 @@ def test_pq_fit_encode_decode_roundtrip(spark):
     margin (the codebooks actually learned the subspace structure)."""
     df, mat = _vec_df(spark, n=120, dim=16)
     books = S.pq_fit(df, m=4, n_codes=8, iters=3)
-    assert books.shape == (4, 8, 4)
+    assert books.shape == (4, 8, 5)  # rows are [*codeword, half_cc]
+    cw, half_cc = books[..., :-1], books[..., -1]
+    assert np.allclose(half_cc, 0.5 * np.sum(cw**2, axis=2), rtol=0, atol=1e-15)
     enc1 = {r.vec_id: list(r.codes) for r in S.pq_encode(df, books).collect()}
     enc2 = {
         r.vec_id: list(r.codes)
@@ -272,7 +274,7 @@ def test_pq_fit_encode_decode_roundtrip(spark):
             np.sum(
                 (
                     np.concatenate(
-                        [books[j, rng.randint(8)] for j in range(4)]
+                        [cw[j, rng.randint(8)] for j in range(4)]
                     )
                     - mat[i]
                 )
@@ -286,7 +288,7 @@ def test_pq_fit_encode_decode_roundtrip(spark):
     for i in range(0, 120, 17):
         for j in range(4):
             sub = mat[i, j * 4 : (j + 1) * 4]
-            scores = books[j] @ sub - 0.5 * np.sum(books[j] ** 2, axis=1)
+            scores = cw[j] @ sub - half_cc[j]
             assert enc1[i][j] == int(np.argmax(scores))
 
 
@@ -331,18 +333,25 @@ def test_pq_ann_recall_vs_brute(spark):
 
 def test_baked_pq_codebooks_match_fresh_fit(spark):
     """Same drift guard as the IVF bake: a fresh deterministic pq_fit
-    on sf0.01 must reproduce cordon_spark/pq_codebooks_sf001.py (and
-    its baked half_cc constants) bit-for-bit."""
+    on sf0.01 must reproduce the codewords of
+    cordon_spark/pq_codebooks_sf001.py bit-for-bit, and the half_cc
+    constants Spark scores with must be the baked column the DuckDB
+    oracle reads (not a host-recomputed dot product)."""
     from cordon_spark.entry_queries import _normalized_vectors, _pq_books
     from cordon_spark.pq_codebooks_sf001 import PQ_CODEBOOKS_SF001
 
     vecs = _normalized_vectors(spark, "/root/testdata/sf0.01")
     books = S.pq_fit(vecs, m=8, n_codes=16, iters=3)
-    assert np.array_equal(books, _pq_books())
-    for j in range(8):
-        for c in range(16):
-            cc = 0.5 * float(np.dot(books[j, c], books[j, c]))
-            assert cc == PQ_CODEBOOKS_SF001[j][c][-1]
+    baked = np.asarray(PQ_CODEBOOKS_SF001, dtype=np.float64)
+    assert np.array_equal(books[..., :-1], baked[..., :-1])
+    # scored against the zero vector, each Spark score literal is
+    # exactly -half_cc
+    zero = S.F.array(*[S.F.lit(0.0)] * 64)
+    row = spark.range(1).select(
+        *[S._pq_lit_scores(_pq_books(), j, zero).alias(f"s{j}") for j in range(8)]
+    ).first()
+    spark_half_cc = -np.array([row[f"s{j}"] for j in range(8)])
+    assert np.array_equal(spark_half_cc, baked[..., -1])
 
 
 def test_ivfpq_index_full_probe_equals_pq_ann(spark, tmp_path):
