@@ -1,11 +1,12 @@
-.PHONY: help install install-dev test coverage bench verify clean
+.PHONY: help install install-dev test coverage bench bench-trace verify clean
 
 help:
 	@echo "cordon-spark development Makefile"
 	@echo "  make install       Editable install (console scripts)"
 	@echo "  make install-dev   Install with dev extras"
 	@echo "  make test          Run the test suite"
-	@echo "  make bench         Run the headline benchmark (one JSON line)"
+	@echo "  make bench         One untraced headline_centroid perfbench run (JSON result on the last line)"
+	@echo "  make bench-trace   The same run traced: per-layer and plans.pipeline.* metrics"
 	@echo "  make verify        Driver-contract correctness gate (all oracle queries vs DuckDB)"
 	@echo "  make clean         Remove caches and build artifacts"
 
@@ -22,7 +23,10 @@ coverage:
 	python -m pytest tests/ -q --cov=cordon_spark --cov-report=term-missing
 
 bench:
-	python bench.py
+	python3 perfbench/run.py --workload headline_centroid --seed 1 --seconds 1 --trace 0
+
+bench-trace:
+	python3 perfbench/run.py --workload headline_centroid --seed 1 --seconds 1 --trace 1
 
 verify:
 	python scripts/check_entry.py

@@ -213,21 +213,9 @@ def centroid_scores_loo(
     queries = np.asarray(queries, dtype=np.float64)
     if global_count <= 1:
         return np.zeros(nq, dtype=np.float64)
-    sig_index: dict = {}
-    idx = np.empty(nq, dtype=np.int64)
-    sums: list = []
-    cnts: list = []
     zero = np.zeros(queries.shape[1], dtype=np.float64)
-    for i, sig in enumerate(signatures):
-        j = sig_index.get(sig)
-        if j is None:
-            j = len(sums)
-            sig_index[sig] = j
-            sums.append(sum_map.get(sig, zero))
-            cnts.append(count_map.get(sig, 0))
-        idx[i] = j
-    sum_arr = np.asarray(np.stack(sums), dtype=np.float64)[idx]
-    cnt_arr = np.asarray(cnts, dtype=np.int64)[idx]
+    sum_arr = _per_row(signatures, sum_map, zero, np.float64)
+    cnt_arr = _per_row(signatures, count_map, 0, np.int64)
     loo = sum_arr - queries
     use_global = cnt_arr <= 1
     if use_global.any():
@@ -249,19 +237,23 @@ def centroid_scores(
     if nq == 0:
         return np.zeros(0, dtype=np.float64)
     queries = np.asarray(queries, dtype=np.float64)
-    sig_index: dict = {}
-    idx = np.empty(nq, dtype=np.int64)
-    mats: list = []
-    for i, sig in enumerate(signatures):
-        j = sig_index.get(sig)
-        if j is None:
-            j = len(mats)
-            sig_index[sig] = j
-            mats.append(centroid_map.get(sig, default))
-        idx[i] = j
-    cen = np.asarray(np.stack(mats), dtype=np.float64)
-    dots = np.einsum("ij,ij->i", queries, cen[idx])
+    cen = _per_row(signatures, centroid_map, default, np.float64)
+    dots = np.einsum("ij,ij->i", queries, cen)
     return np.clip(1.0 - dots, 0.0, 2.0)
+
+
+def _per_row(signatures, table: dict, default, dtype) -> np.ndarray:
+    """table[sig] (default when absent) for every row: one dict probe per
+    DISTINCT signature, then one fancy-index gather. A missing signature
+    (None/NaN) gets its own code and misses the table, like any unseen
+    one."""
+    import pandas as pd
+
+    codes, uniques = pd.factorize(
+        np.asarray(signatures, dtype=object), use_na_sentinel=False
+    )
+    vals = np.asarray([table.get(sig, default) for sig in uniques], dtype=dtype)
+    return vals[codes]
 
 
 def exact_percentile(values: np.ndarray, pct: float) -> float:

@@ -27,9 +27,11 @@ Centroid sketch, 100 TB path
 ----------------------------
 Exact k-NN is O(n^2) in windows and needs the full matrix per executor;
 at 10^12 turns both break. north_star substitutes per-template centroid
-sketches in broadcast state: score = cosine distance to the centroid of
-the window's template signature. That is one groupBy(signature) over a
-tiny key space + one broadcast dict — O(n * templates).
+sketches in broadcast state: score = leave-one-out cosine distance to
+the centroid of the window's template signature. That is one map-side
+partial sum per partition over a tiny key space, one broadcast dict and
+one mapInPandas scoring pass running kernel.centroid_scores_loo — O(n),
+no join, no shuffle of vectors.
 """
 
 from __future__ import annotations
@@ -118,94 +120,93 @@ def score_windows_knn(
 
 _TREE_FANIN = 64
 
+_PARTIAL_SCHEMA = T.StructType(
+    [
+        T.StructField("sigs", T.ArrayType(T.StringType())),
+        T.StructField("cnts", T.ArrayType(T.LongType())),
+        T.StructField("flat", T.ArrayType(T.DoubleType())),
+    ]
+)
+
+
+def _window_vectors(pdf: pd.DataFrame, dim: int) -> np.ndarray:
+    if "embedding" in pdf.columns:
+        return np.array(pdf["embedding"].tolist(), dtype=np.float64)
+    from cordon_spark import kernel
+
+    return kernel.embed_texts(pdf["content"].fillna("").tolist(), dim)
+
+
+def _reduce(parts: list) -> tuple:
+    """Merge (sigs, cnts, sum-matrix) partials into one per signature —
+    a factorize + np.add.at, no per-row Python."""
+    sigs = [sig for part in parts for sig in part[0]]
+    codes, uniques = pd.factorize(np.asarray(sigs, dtype=object), sort=False)
+    mat = np.vstack([part[2] for part in parts])
+    sums = np.zeros((len(uniques), mat.shape[1]), dtype=np.float64)
+    np.add.at(sums, codes, mat)
+    cnts = np.bincount(
+        codes,
+        weights=np.concatenate([np.asarray(part[1], dtype=np.float64) for part in parts]),
+        minlength=len(uniques),
+    )
+    return list(uniques), cnts.astype(np.int64).tolist(), sums
+
+
+def _unpack(pdf: pd.DataFrame) -> list:
+    """Rows of the partial schema -> (sigs, cnts, sum-matrix) partials."""
+    return [
+        (list(sigs), cnts, np.asarray(flat, dtype=np.float64).reshape(len(sigs), -1))
+        for sigs, cnts, flat in zip(pdf["sigs"], pdf["cnts"], pdf["flat"])
+        if len(sigs)
+    ]
+
+
+def _pack(parts: list):
+    """One partial-schema row holding the merge of `parts` (none if empty)."""
+    if parts:
+        sigs, cnts, sums = _reduce(parts)
+        yield pd.DataFrame({"sigs": [sigs], "cnts": [cnts], "flat": [sums.ravel()]})
+
 
 def _merge_partial_rows(batches):
-    """Combine rows of the (sigs, cnts, flat) partial schema into one row
-    per partition — the executor-side level of the tree reduce."""
-    sums: dict = {}
-    counts: dict = {}
-    for pdf in batches:
-        for _, row in pdf.iterrows():
-            sigs = list(row["sigs"])
-            if not sigs:
-                continue
-            flat = np.asarray(row["flat"], dtype=np.float64).reshape(len(sigs), -1)
-            for i, sig in enumerate(sigs):
-                if sig in sums:
-                    sums[sig] = sums[sig] + flat[i]
-                    counts[sig] += int(row["cnts"][i])
-                else:
-                    sums[sig] = flat[i]
-                    counts[sig] = int(row["cnts"][i])
-    if not sums:
-        return
-    mat = np.stack(list(sums.values()))
-    yield pd.DataFrame(
-        {
-            "sigs": [list(sums.keys())],
-            "cnts": [list(counts.values())],
-            "flat": [mat.ravel()],
-        }
-    )
+    """Combine rows of the partial schema into one row per partition —
+    the executor-side level of the tree reduce."""
+    yield from _pack([part for pdf in batches for part in _unpack(pdf)])
 
 
 def template_centroids(
-    windows: DataFrame, signature_col: str = "signature"
+    windows: DataFrame, signature_col: str = "signature", embedding_dim: int = 64
 ) -> tuple[dict, dict]:
     """(sum_map, count_map) of per-signature embedding SUMS via
     MAP-SIDE PARTIAL AGGREGATION (sums rather than normalized centroids
     so the scorer can do leave-one-out subtraction): each
-    partition reduces its windows to (signature, count, sum-vector) rows
-    inside one mapInPandas pass — numpy sums, no exploded shuffle — and
-    the tiny partials (n_partitions x n_signatures rows) merge on the
-    driver. At 10^12 turns this is the only aggregation shape that
-    works: the shuffle payload is O(signatures x dim) per partition,
-    independent of row count."""
-    # ONE output row per partition: (sigs, cnts, flat sum-matrix). The
-    # earlier per-(partition, signature)-row spelling boxed sigs x 64
-    # python floats per partition (measured: 299MB shuffle + 200s of
-    # pure boxing CPU at 2M windows); flat numpy arrays make the
-    # partial O(1) rows and the merge a vectorized np.add.at.
-    schema = T.StructType(
-        [
-            T.StructField("sigs", T.ArrayType(T.StringType())),
-            T.StructField("cnts", T.ArrayType(T.LongType())),
-            T.StructField("flat", T.ArrayType(T.DoubleType())),
-        ]
-    )
+    partition reduces its windows to ONE (sigs, cnts, flat sum-matrix)
+    row inside one mapInPandas pass — numpy sums, no exploded shuffle —
+    and the tiny partials merge on the driver. At 10^12 turns this is
+    the only aggregation shape that works: the shuffle payload is
+    O(signatures x dim) per partition, independent of row count.
+
+    Vectors come from the `embedding` column when `windows` has one,
+    else from the hash kernel over `content` (`embedding_dim` wide)."""
+    vec_col = "embedding" if "embedding" in windows.columns else "content"
 
     def partials(batches):
-        sums: dict = {}
-        counts: dict = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            codes, uniques = pd.factorize(pdf[signature_col], sort=False)
-            mat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            acc = np.zeros((len(uniques), mat.shape[1]), dtype=np.float64)
-            np.add.at(acc, codes, mat)
-            cnt = np.bincount(codes, minlength=len(uniques))
-            for i, sig in enumerate(uniques):
-                if sig in sums:
-                    sums[sig] = sums[sig] + acc[i]
-                    counts[sig] += int(cnt[i])
-                else:
-                    sums[sig] = acc[i]
-                    counts[sig] = int(cnt[i])
-        if not sums:
-            return
-        mat = np.stack(list(sums.values()))
-        yield pd.DataFrame(
-            {
-                "sigs": [list(sums.keys())],
-                "cnts": [list(counts.values())],
-                "flat": [mat.ravel()],
-            }
+        # each Arrow batch reduces to its own sums before the next is read,
+        # so a partition never holds more than one batch of vectors
+        yield from _pack(
+            [
+                _reduce(
+                    [(pdf["signature"], np.ones(len(pdf)), _window_vectors(pdf, embedding_dim))]
+                )
+                for pdf in batches
+                if len(pdf)
+            ]
         )
 
     partial_df = windows.select(
-        F.col(signature_col).alias("signature"), "embedding"
-    ).mapInPandas(partials, schema)
+        F.col(signature_col).alias("signature"), vec_col
+    ).mapInPandas(partials, _PARTIAL_SCHEMA)
     # treeAggregate-style two-level reduce: above _TREE_FANIN input
     # partitions, the one-row-per-partition partials are themselves
     # combined executor-side (repartition to ~sqrt(P) then merge rows of
@@ -218,31 +219,13 @@ def template_centroids(
     if n_parts > _TREE_FANIN:
         fanin = max(2, int(n_parts**0.5))
         partial_df = partial_df.repartition(fanin).mapInPandas(
-            _merge_partial_rows, schema
+            _merge_partial_rows, _PARTIAL_SCHEMA
         )
-    partial_pdf = partial_df.toPandas()
-    # final driver-side merge: O(reduced rows), vectorized.
-    all_sigs: list = []
-    all_cnts: list = []
-    mats: list = []
-    for _, row in partial_pdf.iterrows():
-        sigs = list(row["sigs"])
-        if not sigs:
-            continue
-        flat = np.asarray(row["flat"], dtype=np.float64)
-        mats.append(flat.reshape(len(sigs), -1))
-        all_sigs.extend(sigs)
-        all_cnts.extend(row["cnts"])
-    if not mats:
+    parts = _unpack(partial_df.toPandas())
+    if not parts:
         return {}, {}
-    stacked = np.vstack(mats)
-    codes, uniques = pd.factorize(pd.Series(all_sigs), sort=False)
-    sums = np.zeros((len(uniques), stacked.shape[1]), dtype=np.float64)
-    np.add.at(sums, codes, stacked)
-    cnts = np.bincount(codes, weights=np.asarray(all_cnts, dtype=np.float64))
-    sum_map = {sig: sums[i] for i, sig in enumerate(uniques)}
-    count_map = {sig: int(cnts[i]) for i, sig in enumerate(uniques)}
-    return sum_map, count_map
+    sigs, cnts, sums = _reduce(parts)
+    return dict(zip(sigs, sums)), dict(zip(sigs, cnts))
 
 
 def score_windows_centroid(
@@ -256,45 +239,38 @@ def score_windows_centroid(
     the global LOO centroid) — see kernel.centroid_scores_loo for why
     self-exclusion is load-bearing. O(n); no O(n^2) anywhere.
 
-    The score itself is computed ENTIRELY JVM-SIDE: the per-signature
-    sums join in via a broadcast-hash join and the cosine arithmetic is
-    zip_with/aggregate inside whole-stage codegen. The previous
-    mapInPandas spelling paid a full Arrow round-trip of every window
-    embedding a second time (measured ~37s CPU per 2M windows per
-    action); this one costs a broadcast of O(signatures x dim) floats
-    and no Python at all."""
-    sum_map, count_map = template_centroids(windows, signature_col)
-    if not sum_map:
-        return windows.withColumn("score", F.lit(0.0))
-    global_sum = np.sum(np.stack(list(sum_map.values())), axis=0)
+    Two mapInPandas passes over `windows`: template_centroids reduces
+    per-signature sums, which reach the executors as ONE broadcast of
+    O(signatures x dim) floats; the second pass scores each Arrow batch
+    with kernel.centroid_scores_loo. Vectors come from the `embedding`
+    column when there is one; otherwise both passes re-embed `content`
+    with the hash kernel (measured ~158k windows/s/core), which is
+    cheaper than carrying 64 doubles per window across the Arrow
+    boundary and through a cache. Any other backend must embed first:
+    without an `embedding` column it raises ValueError."""
+    if "embedding" not in windows.columns and cfg.backend != "hash":
+        raise ValueError(
+            f"centroid scoring re-embeds window content with the hash kernel, "
+            f"but cfg.backend={cfg.backend!r}: embed the windows first and "
+            f"pass them with an `embedding` column"
+        )
+    dim = cfg.embedding_dim
+    sum_map, count_map = template_centroids(windows, signature_col, dim)
     global_count = int(sum(count_map.values()))
     if global_count <= 1:
         return windows.withColumn("score", F.lit(0.0))
+    global_sum = np.sum(np.stack(list(sum_map.values())), axis=0)
+    bc = spark.sparkContext.broadcast((sum_map, count_map, global_sum, global_count))
+    schema = T.StructType(windows.schema.fields + [_SCORE_FIELD])
 
-    cen_rows = [
-        (sig, int(count_map[sig]), [float(v) for v in vec])
-        for sig, vec in sum_map.items()
-    ]
-    cen = spark.createDataFrame(
-        cen_rows, f"{signature_col} string, _cnt long, _sums array<double>"
-    )
-    joined = windows.join(F.broadcast(cen), on=signature_col, how="left")
-    g_arr = F.array(*[F.lit(float(v)) for v in global_sum])
-    sums = F.when(
-        F.col("_cnt").isNull() | (F.col("_cnt") <= 1), g_arr
-    ).otherwise(F.col("_sums"))
-    x = F.col("embedding")
-    loo = F.zip_with(sums, x, lambda a, b: a - b)
-    nrm = F.sqrt(F.aggregate(loo, F.lit(0.0), lambda acc, v: acc + v * v))
-    dot = F.aggregate(
-        F.zip_with(x, loo, lambda a, b: a * b), F.lit(0.0), lambda acc, v: acc + v
-    )
-    score = F.greatest(
-        F.lit(0.0),
-        F.least(
-            F.lit(2.0),
-            F.lit(1.0) - F.when(nrm > 0.0, dot / nrm).otherwise(F.lit(0.0)),
-        ),
-    )
-    out_cols = [F.col(f.name) for f in windows.schema.fields]
-    return joined.select(*out_cols, score.alias("score"))
+    def score_partition(batches):
+        from cordon_spark import kernel
+
+        state = bc.value
+        for pdf in batches:
+            vecs = _window_vectors(pdf, dim)
+            yield pdf.assign(
+                score=kernel.centroid_scores_loo(vecs, pdf[signature_col], *state)
+            )
+
+    return windows.mapInPandas(score_partition, schema)

@@ -133,13 +133,21 @@ def analyze_transcripts(
         if cfg.scorer == "centroid" and not use_templates:
             # no parse stage -> one global centroid
             windows = windows.withColumn("signature", F.lit("?"))
-        embed = create_embedder(cfg)
-        # persist: the embedding UDF output feeds two passes (broadcast
-        # state build + scoring) and several downstream actions — without
-        # this the whole window+embed plan re-executes per action.
-        # content is projected away once embedded (column pruning keeps
-        # the cache at ids + bounds + vector).
-        embedded = embed(windows, "content").drop("content").persist()
+        if cfg.scorer == "centroid" and cfg.backend == "hash":
+            # persist the window rows (ids, bounds, signature, content):
+            # both centroid passes (partial sums + scoring) re-embed the
+            # content with the hash kernel inside their mapInPandas, so
+            # no vector is ever cached or shipped back to the JVM; the
+            # cache keeps the window plan from re-running per pass.
+            windows = windows.persist()
+            caches.append(windows)
+            return score_windows_centroid(spark, windows, cfg).drop("content")
+        # persist: the embedding UDF output feeds the scorer's passes and
+        # several downstream actions — without this the whole
+        # window+embed plan re-executes per action. content is projected
+        # away once embedded (column pruning keeps the cache at ids +
+        # bounds + vector).
+        embedded = create_embedder(cfg)(windows, "content").drop("content").persist()
         caches.append(embedded)
         if cfg.scorer == "centroid":
             scored_df = score_windows_centroid(spark, embedded, cfg)

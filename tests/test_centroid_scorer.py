@@ -3,6 +3,7 @@ anomalies still surface, broadcast state is tiny, scores are
 partition-invariant (within float tolerance of the partial-sum order)."""
 
 import numpy as np
+import pytest
 
 from cordon_spark.config import AnalysisConfig
 from cordon_spark.datagen import TEMPLATES, generate_transcripts
@@ -137,3 +138,103 @@ def test_centroid_without_templates_uses_global(spark, tiny_df):
     assert res.scored_windows.count() > 0
     assert (res.scored_windows.selectExpr("min(score)").first()[0] or 0.0) >= 0.0
     res.unpersist()
+
+
+def _numpy_reference(wpdf, dim):
+    """kernel.centroid_scores_loo over numpy-side embed_texts(content),
+    with the per-signature sums built in numpy."""
+    import pandas as pd
+
+    from cordon_spark import kernel
+
+    vecs = kernel.embed_texts(wpdf["content"].fillna("").tolist(), dim)
+    codes, sigs = pd.factorize(wpdf["signature"])
+    sums = np.zeros((len(sigs), dim))
+    np.add.at(sums, codes, vecs)
+    return kernel.centroid_scores_loo(
+        vecs,
+        list(wpdf["signature"]),
+        dict(zip(sigs, sums)),
+        dict(zip(sigs, np.bincount(codes).tolist())),
+        sums.sum(axis=0),
+        len(vecs),
+    )
+
+
+def _e4(x):
+    return np.floor(np.asarray(x) * 1e4 + 0.5)
+
+
+@pytest.fixture(scope="module")
+def parity_windows(spark):
+    """Template-parsed windows of the structured corpus, their numpy
+    reference scores keyed by (conv_id, window_id)."""
+    from cordon_spark.operators.parse import extract_templates
+    from cordon_spark.operators.windowing import segment_windows
+
+    pdf, _ = _structured_corpus()
+    cfg = AnalysisConfig(scorer="centroid")
+    turns = extract_templates(spark.createDataFrame(pdf), TEMPLATES)
+    windows = segment_windows(turns, cfg, template_col="template_id").persist()
+    wpdf = windows.toPandas().sort_values(["conv_id", "window_id"], ignore_index=True)
+    assert wpdf["signature"].value_counts().max() > 1  # real LOO centroids
+    wpdf["ref"] = _numpy_reference(wpdf, cfg.embedding_dim)
+    yield windows, wpdf.set_index(["conv_id", "window_id"])["ref"]
+    windows.unpersist()
+
+
+def _assert_matches_reference(scored, ref):
+    got = (
+        scored.select("conv_id", "window_id", "score")
+        .toPandas()
+        .set_index(["conv_id", "window_id"])["score"]
+        .reindex(ref.index)
+    )
+    assert got.notna().all() and len(got) == len(ref)
+    assert np.max(np.abs(got.to_numpy() - ref.to_numpy())) <= 1e-12
+    assert np.array_equal(_e4(got), _e4(ref))
+
+
+@pytest.mark.parametrize("n_parts", [2, 16])
+@pytest.mark.parametrize("form", ["content", "embedding"])
+def test_centroid_scorer_matches_numpy_kernel(spark, parity_windows, form, n_parts):
+    """Both input forms score like kernel.centroid_scores_loo on numpy
+    vectors: content-only windows (the scorer re-embeds with the hash
+    kernel) and windows carrying an `embedding` column."""
+    from cordon_spark.functions.embeddings import create_embedder
+    from cordon_spark.operators.scoring import score_windows_centroid
+
+    windows, ref = parity_windows
+    cfg = AnalysisConfig(scorer="centroid")
+    if form == "embedding":
+        windows = create_embedder(cfg)(windows, "content").drop("content")
+    scored = score_windows_centroid(spark, windows.repartition(n_parts), cfg)
+    _assert_matches_reference(scored, ref)
+
+
+@pytest.mark.parametrize("n_parts", [2, 16])
+def test_centroid_pipeline_scores_match_numpy_kernel(spark, parity_windows, n_parts):
+    _, ref = parity_windows
+    pdf, _ = _structured_corpus()
+    df = spark.createDataFrame(pdf).repartition(n_parts)
+    res = analyze_transcripts(
+        spark, df, AnalysisConfig(scorer="centroid"), templates=TEMPLATES
+    )
+    assert "content" not in res.scored_windows.columns
+    _assert_matches_reference(res.scored_windows, ref)
+    res.unpersist()
+
+
+def test_centroid_scorer_edges(spark):
+    from cordon_spark.operators.scoring import score_windows_centroid
+
+    cfg = AnalysisConfig(scorer="centroid")
+    schema = "conv_id string, window_id long, signature string, content string"
+    empty = score_windows_centroid(spark, spark.createDataFrame([], schema), cfg)
+    assert "score" in empty.columns and empty.count() == 0
+    one = spark.createDataFrame([("c", 0, "a", "disk full on node 7")], schema)
+    assert [r.score for r in score_windows_centroid(spark, one, cfg).collect()] == [0.0]
+    with pytest.raises(ValueError, match="embedding"):
+        score_windows_centroid(
+            spark, one, AnalysisConfig(scorer="centroid", backend="sentence-transformers")
+        )

@@ -127,3 +127,68 @@ def test_score_distribution_empty():
 def test_rstrip_matches_python():
     for s in ["abc  ", "abc\t\n", "  abc", "", "x \t \n\r\f\v"]:
         assert kernel.rstrip_text(s) == s.rstrip()
+
+
+def _rowwise(q, v):
+    """einsum("ij,ij->i") of one row pair, so the per-row references
+    below sum in the same order as the batched kernel."""
+    return np.einsum("ij,ij->i", q[None, :], v[None, :])[0]
+
+
+def _loo_per_row(queries, sigs, sum_map, count_map, global_sum, global_count):
+    out = np.zeros(len(queries))
+    if global_count <= 1:
+        return out
+    for i, (x, sig) in enumerate(zip(queries, sigs)):
+        base = sum_map[sig] if count_map.get(sig, 0) > 1 else global_sum
+        loo = base - x
+        nrm = np.sqrt(_rowwise(loo, loo))
+        dot = _rowwise(x, loo) / (nrm if nrm != 0.0 else 1.0)
+        out[i] = min(max(1.0 - dot, 0.0), 2.0)
+    return out
+
+
+def _signature_case(seed):
+    """Queries over seen, singleton and unseen signatures, plus the sum
+    state the batch built from the seen rows."""
+    rng = np.random.RandomState(seed)
+    queries = kernel.l2_normalize(rng.randn(300, 16))
+    pool = [f"s{i}" for i in range(6)] + ["single", "unseen_a", "unseen_b"]
+    sigs = list(rng.choice(pool, size=len(queries)))
+    sigs[:3] = ["single", "unseen_a", "s0"]
+    seen = [s for s in pool if not s.startswith("unseen")]
+    sum_map, count_map = {}, {}
+    for x, sig in zip(queries, sigs):
+        if sig in seen and not (sig == "single" and sig in count_map):
+            sum_map[sig] = sum_map.get(sig, 0.0) + x
+            count_map[sig] = count_map.get(sig, 0) + 1
+    return queries, sigs, sum_map, count_map
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_centroid_scores_loo_matches_per_row_loop(seed):
+    queries, sigs, sum_map, count_map = _signature_case(seed)
+    assert count_map["single"] == 1 and "unseen_a" not in count_map
+    global_sum = np.sum(np.stack(list(sum_map.values())), axis=0)
+    for global_count in (sum(count_map.values()), 1, 0):
+        got = kernel.centroid_scores_loo(
+            queries, sigs, sum_map, count_map, global_sum, global_count
+        )
+        want = _loo_per_row(queries, sigs, sum_map, count_map, global_sum, global_count)
+        assert np.array_equal(got, want), global_count
+    assert kernel.centroid_scores_loo(
+        queries[:0], [], sum_map, count_map, global_sum, 10
+    ).shape == (0,)
+
+
+@pytest.mark.parametrize("seed", [0, 1])
+def test_centroid_scores_matches_per_row_loop(seed):
+    queries, sigs, sum_map, _ = _signature_case(seed)
+    cmap = {sig: kernel.l2_normalize(v[None, :])[0] for sig, v in sum_map.items()}
+    default = kernel.l2_normalize(np.ones((1, queries.shape[1])))[0]
+    got = kernel.centroid_scores(queries, sigs, cmap, default)
+    want = [
+        min(max(1.0 - _rowwise(x, cmap.get(sig, default)), 0.0), 2.0)
+        for x, sig in zip(queries, sigs)
+    ]
+    assert np.array_equal(got, np.asarray(want))

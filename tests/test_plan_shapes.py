@@ -395,3 +395,26 @@ def test_tpch_q13_filter_before_outer_join(spark):
 
     c = _counts(Q.QUERIES["tpch_customer_distribution"](spark, SF_DIR))
     assert "PushedFilters: [IsNotNull(o_orderpriority), Not(EqualTo(o_orderpriority" in c["plan"], c["plan"]
+
+
+def test_centroid_scored_plan_is_one_map_in_pandas(spark):
+    """Hash-backend centroid scoring runs kernel.centroid_scores_loo in
+    one mapInPandas over the cached window rows: no broadcast join of a
+    centroid table, no zip_with/aggregate fold, no embed UDF
+    (ArrowEvalPython) — the only Python nodes are MapInPandas."""
+    import re
+
+    from cordon_spark.config import AnalysisConfig
+    from cordon_spark.datagen import TEMPLATES, generate_transcripts
+    from cordon_spark.plans.pipeline import analyze_transcripts
+
+    pdf, _ = generate_transcripts(n_convs=4, mean_turns=40, seed=5, with_edge_cases=False)
+    res = analyze_transcripts(
+        spark, spark.createDataFrame(pdf), AnalysisConfig(scorer="centroid"), templates=TEMPLATES
+    )
+    p = _plan(res.scored_windows)
+    res.unpersist()
+    for node in ("BroadcastHashJoin", "zip_with(", "aggregate(", "ArrowEvalPython"):
+        assert node not in p, f"{node} in centroid plan:\n{p}"
+    python_nodes = set(re.findall(r"\b[A-Z]\w*(?:Python|Pandas|Arrow)\w*\b", p))
+    assert python_nodes == {"MapInPandas"}, p
