@@ -7,7 +7,8 @@ help:
 	@echo "  make test          Run the test suite"
 	@echo "  make bench         One untraced headline_centroid perfbench run (JSON result on the last line)"
 	@echo "  make bench-trace   The same run traced: per-layer and plans.pipeline.* metrics"
-	@echo "  make verify        Driver-contract correctness gate (all oracle queries vs DuckDB)"
+	@echo "  make verify        Driver-contract correctness gate (all oracle queries vs DuckDB);"
+	@echo "                     optional SF=<sf dir> QUERIES=name,name"
 	@echo "  make clean         Remove caches and build artifacts"
 
 install:
@@ -29,7 +30,7 @@ bench-trace:
 	python3 perfbench/run.py --workload headline_centroid --seed 1 --seconds 1 --trace 1
 
 verify:
-	python scripts/check_entry.py
+	python scripts/check_entry.py "$(SF)" "$(QUERIES)"
 
 clean:
 	rm -rf .pytest_cache .build cordon_spark.egg-info

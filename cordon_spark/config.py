@@ -43,12 +43,11 @@ class AnalysisConfig:
     n_gpu_layers: int = 0
     n_threads: int | None = None
     # reference's scoring batch knob (None = auto); when set it overrides
-    # scoring_chunk_size in the exact-kNN kernel
+    # kernel.KNN_CHUNK_SIZE in the exact-kNN kernel
     scoring_batch_size: int | None = None
 
-    # scoring execution (reference scorer.py:89-127 auto batch sizing)
+    # scoring execution
     scorer: str = "knn"  # knn (exact, test-scale) | centroid (sketch, 100TB-scale)
-    scoring_chunk_size: int = 8192
     # exact kNN collects the full (n_windows x dim) matrix to the driver
     # and broadcasts it; above this window count it refuses with a
     # pointer at scorer="centroid" so defaults can't OOM the driver at
@@ -100,8 +99,6 @@ class AnalysisConfig:
             raise ValueError(f"batch_size must be >= 1, got {self.batch_size}")
         if self.embedding_dim < 1:
             raise ValueError(f"embedding_dim must be >= 1, got {self.embedding_dim}")
-        if self.scoring_chunk_size < 1:
-            raise ValueError("scoring_chunk_size must be >= 1")
         if self.knn_max_windows < 1:
             raise ValueError("knn_max_windows must be >= 1")
         if self.scorer not in ("knn", "centroid"):

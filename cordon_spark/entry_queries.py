@@ -1124,7 +1124,7 @@ def q_ann_lsh(spark, sf_dir):
     ship_package(spark)
     vecs = _normalized_vectors(spark, sf_dir)
     queries = vecs.filter(F.col("vec_id") < ANN_NQ)
-    out = S.lsh_ann(queries, vecs, k=ANN_K, n_planes=8, dim=64)
+    out = S.lsh_ann(queries, vecs, k=ANN_K, n_planes=8)
     return out.select(
         "qid", F.col("rank").cast("long").alias("rank"), "nid", r4(F.col("dist"), "dist")
     )

@@ -26,6 +26,11 @@ import re
 
 import numpy as np
 
+# Candidate-chunk width of the exact-kNN kernel (the reference's
+# auto-sized CPU batch, scorer.py:89-127); AnalysisConfig's
+# scoring_batch_size overrides it in the Spark scorer.
+KNN_CHUNK_SIZE = 8192
+
 # Exactly the codepoints Python str.rstrip() strips (str.isspace() set),
 # because the reference strips with str.rstrip() (ingestion/reader.py:25).
 # Shared with the Spark (Java regex) and DuckDB (rtrim char list) mirrors
@@ -149,7 +154,7 @@ def knn_scores(
     queries: np.ndarray,
     candidates: np.ndarray,
     k_neighbors: int,
-    chunk_size: int = 8192,
+    chunk_size: int = KNN_CHUNK_SIZE,
 ) -> np.ndarray:
     """Mean cosine distance from each query to its k nearest candidates.
 

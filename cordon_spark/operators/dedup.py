@@ -283,25 +283,24 @@ def embedding_lsh_pairs(
 
     Build side emits each vector's own bucket; probe side emits the
     bucket plus `n_probes - 1` bit-flip probes (least-confident planes
-    first, similarity.probe_buckets_col), so pairs split by one plane
+    first, similarity.probes_from_dots_col), so pairs split by one plane
     are still candidates. Everything is linear in corpus size: bucket
     keys are one JVM projection, candidates shuffle on the bucket key,
     and verification touches only candidate pairs. Recall vs the exact
     all-pairs operator is asserted in tests."""
     from cordon_spark.operators.similarity import (
         _dot,
-        _hyperplanes,
+        _lsh_planes,
         bucket_from_dots_col,
         probes_from_dots_col,
         with_lsh_dots,
     )
 
-    dim_row = vectors.select(F.size(vec_col).alias("d")).first()
-    if dim_row is None:
+    planes = _lsh_planes(vectors, vec_col, n_planes)
+    if planes is None:
         return vectors.sparkSession.createDataFrame(
             [], "vec_a long, vec_b long, cosine double"
         )
-    planes = _hyperplanes(n_planes, int(dim_row["d"]))
     # dots materialized once per row (Generate barrier) — the bucket and
     # every probe key then read a cheap attribute instead of re-running
     # all plane dot products per expression (similarity.with_lsh_dots)

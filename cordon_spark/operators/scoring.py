@@ -41,6 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from cordon_spark.config import AnalysisConfig
+from cordon_spark.kernel import KNN_CHUNK_SIZE
 
 _SCORE_FIELD = T.StructField("score", T.DoubleType(), False)
 
@@ -100,7 +101,7 @@ def score_windows_knn(
     # scoring_batch_size is the reference's explicit knob; when None the
     # Spark-side default chunk applies (reference auto-detects by GPU)
     k = cfg.k_neighbors
-    chunk = cfg.scoring_batch_size or cfg.scoring_chunk_size
+    chunk = cfg.scoring_batch_size or KNN_CHUNK_SIZE
     schema = T.StructType(windows.schema.fields + [_SCORE_FIELD])
 
     def score_partition(batches):

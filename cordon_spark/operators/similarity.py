@@ -1,23 +1,43 @@
 """Similarity search over embedding columns (array<float/double>).
 
-brute_force_topk — exact top-k cosine neighbors; the correctness
-baseline. JVM-side dot products (zip_with + aggregate) + per-query
-window top-k. O(|Q| * |C|): fine when the query set is small or as the
-verification oracle.
+Every search returns (qid, rank, nid, dist): cosine distance clamped to
+[0, 2], the k smallest per query, ties broken by neighbor id.
 
-lsh_ann — the scale path: random-hyperplane LSH. Deterministic planes
-derived from md5 (seeded, no RNG state to ship), bucket = sign-bit key;
-neighbors searched only within the query's bucket (+ optional probes).
-Linear build, sublinear query; recall measured against brute force in
-tests. At 100 TB: buckets are the shuffle key, each bucket fits an
-executor, and the (small) query set is broadcast.
+brute_force_topk — exact top-k; the correctness baseline. JVM-side dot
+products (zip_with + aggregate) against a broadcast query side.
+O(|Q| * |C|): fine when the query set is small or as the oracle.
+
+lsh_ann — random-hyperplane LSH. Deterministic md5 planes sized to the
+input's vector width; candidates are bucketed by sign-bit key and each
+query probes its own bucket plus bit-flips of its least-confident
+planes.
+
+ivf_ann — IVF: a k-means coarse quantizer splits the corpus into
+inverted lists and each query searches its n_probe nearest lists.
+ivf_build_index / ivf_query_index persist the lists as parquet
+partitioned by cluster, optionally product-quantized.
+
+pq_fit / pq_encode / pq_ann — product quantization: per-subspace
+codebooks, candidates stored as codes, ranked by cosine against the
+renormalized decoded vector.
+
+Each step has one implementation that the searches share:
+  - _lloyd_fit: the deterministic Lloyd loop behind kmeans_fit (one
+    cosine subspace) and pq_fit (m L2 subspaces), with per-partition
+    partials and a tree reduce summed in source-partition order;
+  - _assign_clusters / _probe_clusters: nearest-centroid assignment of
+    candidates and top-n_probe centroid selection of queries;
+  - _probe_topk / _top_k: equi-join against the broadcast probe side,
+    then the per-query row_number ranker over _cosine_dist.
 """
 
 from __future__ import annotations
 
 import hashlib
+from contextlib import contextmanager
 
 import numpy as np
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window as W, functions as F
 
 
@@ -40,6 +60,52 @@ def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
 
 
+def _lit_vec(values):
+    """array<double> literal of a numpy row."""
+    return F.array(*[F.lit(float(x)) for x in values])
+
+
+def _cosine_dist():
+    """Cosine distance of the (qv, nv) pair, clamped to [0, 2]."""
+    return F.greatest(
+        F.lit(0.0), F.least(F.lit(2.0), 1.0 - _dot(F.col("qv"), F.col("nv")))
+    ).alias("dist")
+
+
+def _top_k(pairs: DataFrame, k: int) -> DataFrame:
+    """(qid, rank, nid, dist): the k smallest dist per qid over (qid,
+    nid, dist) pairs, deterministic tie-break by neighbor id. Every
+    search ranks through here."""
+    w = W.partitionBy("qid").orderBy(F.col("dist"), F.col("nid"))
+    return (
+        pairs.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("qid", "rank", "nid", "dist")
+    )
+
+
+def _probe_topk(
+    cands: DataFrame, probes: DataFrame, key: str, k: int, exclude_self: bool = True
+) -> DataFrame:
+    """Top-k over (nid, nv) candidates that share `key` with the
+    broadcast (qid, qv) probe side. A neighbor reachable through
+    several probes (LSH buckets, IVF lists) counts once."""
+    pairs = cands.join(F.broadcast(probes), on=key)
+    if exclude_self:
+        pairs = pairs.filter(F.col("qid") != F.col("nid"))
+    return _top_k(pairs.select("qid", "nid", _cosine_dist()).distinct(), k)
+
+
+def _empty_topk(queries: DataFrame, id_col: str) -> DataFrame:
+    """The empty result of a search over an empty corpus. qid/nid carry
+    id_col's actual type, so string ids union and join cleanly with
+    shard results."""
+    id_type = queries.schema[id_col].dataType.simpleString()
+    return queries.sparkSession.createDataFrame(
+        [], f"qid {id_type}, rank int, nid {id_type}, dist double"
+    )
+
+
 def brute_force_topk(
     queries: DataFrame,
     candidates: DataFrame,
@@ -57,102 +123,88 @@ def brute_force_topk(
         F.col(id_col).alias("nid"), F.col(vec_col).alias("nv")
     ).alias("c")
     cond = F.lit(True) if not exclude_self else (F.col("qid") != F.col("nid"))
-    dist = F.greatest(F.lit(0.0), F.least(F.lit(2.0), 1.0 - _dot(F.col("qv"), F.col("nv"))))
-    pairs = c.join(F.broadcast(q), cond).select("qid", "nid", dist.alias("dist"))
-    w = W.partitionBy("qid").orderBy(F.col("dist"), F.col("nid"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", "nid", "dist")
-    )
+    return _top_k(c.join(F.broadcast(q), cond).select("qid", "nid", _cosine_dist()), k)
 
 
-def _merge_kmeans_partials(batches):
-    """Executor-side level of the k-means tree reduce: combine rows of
-    the (pid, cid, cnt, flat) partial schema into one row per partition.
+# ------------------------------------------------------------------ #
+# Deterministic Lloyd fit: k-means (IVF quantizer) and PQ codebooks
+# ------------------------------------------------------------------ #
+_PARTIAL_SCHEMA = "pid long, sub long, cnt array<long>, flat array<double>"
 
-    Rows are buffered and summed in SOURCE-PARTITION-ID ORDER, not
-    shuffle-arrival order: float addition is not associative, and the
-    fetch order of the repartition(fanin) exchange is nondeterministic —
-    summing sorted by pid keeps the fit bit-reproducible for a fixed
-    input partitioning even when the tree path is engaged (the
-    bit-determinism the baked ivf_ann oracle depends on). The merged
-    row carries min(pid) so the driver-level merge can sort the same
-    way."""
+
+def _partial_frame(pid: int, sums: np.ndarray, cnts: np.ndarray):
+    """One partial row per subspace: (pid, sub, cnt, flat)."""
     import pandas as pd
 
-    rows = []
-    for pdf in batches:
-        for _, row in pdf.iterrows():
-            if not len(row["cid"]):
-                continue
-            k = len(row["cid"])
-            rows.append(
-                (
-                    int(row["pid"]),
-                    np.asarray(row["flat"], dtype=np.float64).reshape(k, -1),
-                    np.asarray(row["cnt"], dtype=np.int64),
-                )
-            )
-    if not rows:
-        return
-    rows.sort(key=lambda r: r[0])
-    sums = rows[0][1].copy()
-    cnts = rows[0][2].copy()
-    for _, flat, cnt in rows[1:]:
-        sums += flat
-        cnts += cnt
-    yield pd.DataFrame(
+    return pd.DataFrame(
         {
-            "pid": [rows[0][0]],
-            "cid": [list(range(sums.shape[0]))],
-            "cnt": [cnts.tolist()],
-            "flat": [sums.ravel().tolist()],
+            "pid": [pid] * len(sums),
+            "sub": list(range(len(sums))),
+            "cnt": [c.tolist() for c in cnts],
+            "flat": [s.ravel().tolist() for s in sums],
         }
     )
 
 
-def kmeans_fit(
+def _sum_partials(pdf, shape: tuple) -> tuple[np.ndarray, np.ndarray]:
+    """(sums, cnts) of partial rows for (m, k, dsub) codebooks, summed
+    from zeros sorted by (sub, pid). Float addition is not associative
+    and shuffle arrival order is not deterministic; summing each
+    subspace in source-partition-id order keeps the fit bit-reproducible
+    for a fixed input partitioning at every merge level."""
+    sums = np.zeros(shape, dtype=np.float64)
+    cnts = np.zeros(shape[:2], dtype=np.int64)
+    rows = pdf.sort_values(["sub", "pid"])[["sub", "cnt", "flat"]]
+    for sub, cnt, flat in rows.itertuples(index=False):
+        sums[sub] += np.asarray(flat, dtype=np.float64).reshape(shape[1:])
+        cnts[sub] += np.asarray(cnt, dtype=np.int64)
+    return sums, cnts
+
+
+def _lloyd_fit(
     vectors: DataFrame,
-    k: int = 16,
-    iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-    persist: bool | None = None,
-) -> np.ndarray:
-    """Deterministic Lloyd k-means for the IVF coarse quantizer.
+    k: int,
+    iters: int,
+    id_col: str,
+    vec_col: str,
+    persist: bool | None,
+    m: int,
+    cosine: bool,
+) -> np.ndarray | None:
+    """Fused deterministic Lloyd fit of (m, k, dsub) codebooks: the
+    vector splits into `m` contiguous subspaces of width dsub and every
+    iteration is ONE distributed pass that updates all m at once.
+    Returns None on an empty corpus.
 
-    Init: the k vectors with the smallest md5(id) (seeded, engine- and
-    partitioning-independent). Each iteration is ONE distributed pass:
-    mapInPandas computes per-partition (cluster, count, sum) partials
-    against the broadcast centroids (numpy argmax over k dots), and the
-    tiny k x dim partials merge on the driver — the same
-    map-side-partial shape as scoring.template_centroids, with the same
-    two-level tree reduce above _TREE_FANIN partitions so the driver
-    sees O(sqrt(P)) rows at any executor count. Every partial carries
-    its source partition id and both merge levels sum in pid order, so
-    the fit is bit-reproducible for a fixed input partitioning at ANY
-    parallelism — including when the tree path is engaged (shuffle
-    arrival order never reaches a float add). Changing the input
-    PARTITIONING (e.g. different file splits) still moves the last ulp;
-    the baked-oracle generator pins the partitioning for that reason.
-    Empty clusters keep their previous centroid.
+    Init: the k rows with the smallest md5(id) (seeded, engine- and
+    partitioning-independent; the same rows seed every subspace), or
+    fewer when the corpus is smaller than k. Assignment per subspace:
+    `cosine` takes the max dot and projects each updated codeword back
+    to the unit sphere; otherwise it is true L2, the argmax of
+    dot - 0.5||c||^2 (pq_encode's rule), with codewords left as plain
+    means. Empty codewords keep their previous value.
 
-    The input is PERSISTED for the duration of the fit (unless the
-    caller already cached it): Lloyd iterations are the textbook cache
-    case — without it every iteration re-runs the upstream scan +
-    normalize (iters+1 full corpus passes at 100 TB)."""
+    Each partition folds its rows into one running (sum, count)
+    accumulator per subspace (np.add.at in row order across Arrow
+    batches) and emits it tagged with its partition id. Above
+    _TREE_FANIN partitions the partials combine executor-side first
+    (the scoring.template_centroids tree reduce) so the driver sees
+    O(sqrt(P)) rows. Both levels sum in (sub, pid) order
+    (_sum_partials), so the fit is bit-reproducible for a fixed input
+    partitioning at any parallelism, tree path included. Changing the
+    input PARTITIONING still moves the last ulp; the baked-oracle
+    generators pin it for that reason.
+
+    The input is persisted for the fit unless `persist` is False or it
+    is already cached (persist=None): without it every iteration re-runs
+    the upstream scan."""
+    import pandas as pd
+
     from cordon_spark.operators.scoring import _TREE_FANIN
 
     spark = vectors.sparkSession
-    # persist=None -> auto: cache unless the input is already cached.
-    # Callers whose input is a plan OVER a cached parent (e.g. ivf_ann's
-    # projection) pass persist=False — is_cached on the projection is
-    # False but the scan still hits the parent's InMemoryTableScan.
     owns_cache = (not vectors.is_cached) if persist is None else persist
     if owns_cache:
-        from pyspark import StorageLevel
-
         vectors = vectors.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         # seed selection is fully distributed: JVM md5 rank + limit(k)
@@ -165,86 +217,164 @@ def kmeans_fit(
             .toPandas()
             .sort_values(id_col)
         )
-        if len(init_pdf) == 0:  # empty corpus -> no clusters (caller guards)
-            return np.zeros((0, 0), dtype=np.float64)
-        centroids = np.array(init_pdf[vec_col].tolist(), dtype=np.float64)
-        k = centroids.shape[0]  # corpus smaller than k -> fewer clusters
-
-        from pyspark.sql import types as T
-
-        schema = T.StructType(
-            [
-                T.StructField("pid", T.LongType()),
-                T.StructField("cid", T.ArrayType(T.LongType())),
-                T.StructField("cnt", T.ArrayType(T.LongType())),
-                T.StructField("flat", T.ArrayType(T.DoubleType())),
-            ]
-        )
+        if len(init_pdf) == 0:
+            return None
+        seed = np.array(init_pdf[vec_col].tolist(), dtype=np.float64)
+        dim = seed.shape[1]
+        if dim % m != 0:
+            raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
+        dsub = dim // m
+        books = np.stack([seed[:, j * dsub : (j + 1) * dsub] for j in range(m)])
+        shape = books.shape
 
         for _ in range(iters):
-            bc = spark.sparkContext.broadcast(centroids)
+            bc = spark.sparkContext.broadcast(books)
 
             def partials(batches):
-                import pandas as pd
                 from pyspark import TaskContext
 
-                cen = bc.value
-                sums = np.zeros_like(cen)
-                cnts = np.zeros(cen.shape[0], dtype=np.int64)
+                cb = bc.value
+                sums = np.zeros_like(cb)
+                cnts = np.zeros(cb.shape[:2], dtype=np.int64)
                 seen = False
                 for pdf in batches:
                     if len(pdf) == 0:
                         continue
                     seen = True
                     mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-                    assign = np.argmax(mat @ cen.T, axis=1)
-                    np.add.at(sums, assign, mat)
-                    cnts += np.bincount(assign, minlength=cen.shape[0])
-                if not seen:
-                    return
-                yield pd.DataFrame(
-                    {
-                        "pid": [TaskContext.get().partitionId()],
-                        "cid": [list(range(cen.shape[0]))],
-                        "cnt": [cnts.tolist()],
-                        "flat": [sums.ravel().tolist()],
-                    }
-                )
+                    for j, c in enumerate(cb):
+                        sl = mat[:, j * dsub : (j + 1) * dsub]
+                        if cosine:
+                            scores = sl @ c.T
+                        else:
+                            scores = sl @ c.T - 0.5 * np.sum(c * c, axis=1)
+                        assign = np.argmax(scores, axis=1)
+                        np.add.at(sums[j], assign, sl)
+                        cnts[j] += np.bincount(assign, minlength=len(c))
+                if seen:
+                    yield _partial_frame(TaskContext.get().partitionId(), sums, cnts)
 
-            partial_df = vectors.select(vec_col).mapInPandas(partials, schema)
-            # tree reduce: above _TREE_FANIN partitions, combine the
-            # one-row-per-partition partials executor-side first so the
-            # driver merge is O(sqrt(P)) rows, not O(P).
+            def merge(batches):
+                frames = [pdf for pdf in batches if len(pdf)]
+                if frames:
+                    part = pd.concat(frames)
+                    yield _partial_frame(int(part["pid"].min()), *_sum_partials(part, shape))
+
+            partial_df = vectors.select(vec_col).mapInPandas(partials, _PARTIAL_SCHEMA)
             n_parts = partial_df.rdd.getNumPartitions()
             if n_parts > _TREE_FANIN:
-                fanin = max(2, int(n_parts**0.5))
-                partial_df = partial_df.repartition(fanin).mapInPandas(
-                    _merge_kmeans_partials, schema
-                )
-            # driver merge in pid order: toPandas row order follows the
-            # (deterministic) partition order already, but sorting makes
-            # the bit-reproducibility contract explicit rather than
-            # incidental — see _merge_kmeans_partials.
-            part = partial_df.toPandas().sort_values("pid")
-            sums = np.zeros_like(centroids)
-            cnts = np.zeros(k, dtype=np.int64)
-            for _, row in part.iterrows():
-                if not len(row["cid"]):
-                    continue
-                sums += np.asarray(row["flat"], dtype=np.float64).reshape(k, -1)
-                cnts += np.asarray(row["cnt"], dtype=np.int64)
-            nz = cnts > 0
-            centroids = centroids.copy()
-            centroids[nz] = sums[nz] / cnts[nz, None]
-            # cosine IVF: keep centroids on the unit sphere
-            norms = np.linalg.norm(centroids, axis=1, keepdims=True)
-            norms[norms == 0.0] = 1.0
-            centroids = centroids / norms
+                partial_df = partial_df.repartition(
+                    max(2, int(n_parts**0.5))
+                ).mapInPandas(merge, _PARTIAL_SCHEMA)
+            sums, cnts = _sum_partials(partial_df.toPandas(), shape)
+            books = books.copy()
+            for j in range(m):
+                nz = cnts[j] > 0
+                books[j][nz] = sums[j][nz] / cnts[j][nz, None]
+                if cosine:
+                    norms = np.linalg.norm(books[j], axis=1, keepdims=True)
+                    norms[norms == 0.0] = 1.0
+                    books[j] = books[j] / norms
             bc.destroy()
-        return centroids
+        return books
     finally:
         if owns_cache:
             vectors.unpersist(blocking=False)
+
+
+def kmeans_fit(
+    vectors: DataFrame,
+    k: int = 16,
+    iters: int = 5,
+    id_col: str = "vec_id",
+    vec_col: str = "v",
+    persist: bool | None = None,
+) -> np.ndarray:
+    """Deterministic Lloyd k-means for the IVF coarse quantizer: one
+    cosine subspace of _lloyd_fit, so centroids stay on the unit
+    sphere. Returns (k, dim) centroids, fewer rows when the corpus is
+    smaller than k, and a (0, 0) array for an empty corpus.
+
+    `persist=None` caches the input for the fit unless it is already
+    cached. Callers whose input is a plan OVER a cached parent (e.g.
+    ivf_ann's projection) pass persist=False: is_cached on the
+    projection is False but its scan still hits the parent's
+    InMemoryTableScan."""
+    books = _lloyd_fit(vectors, k, iters, id_col, vec_col, persist, m=1, cosine=True)
+    if books is None:  # empty corpus -> no clusters (caller guards)
+        return np.zeros((0, 0), dtype=np.float64)
+    return books[0]
+
+
+# ------------------------------------------------------------------ #
+# IVF: k-means inverted lists
+# ------------------------------------------------------------------ #
+def _centroid_dots(vec_col: str, centroids: np.ndarray):
+    """array<double> of dot(vec, c) for every centroid literal,
+    materialized once per row behind a Generate barrier (explode of a
+    1-element array) so the argmax / probe sort read an attribute."""
+    dots = F.array(*[_dot(F.col(vec_col), _lit_vec(c)) for c in centroids])
+    return F.explode(F.array(dots))
+
+
+def _assign_clusters(cands: DataFrame, centroids: np.ndarray) -> DataFrame:
+    """(nid, nv) candidates + `cluster`: the nearest centroid by max
+    dot, first max (lowest id) on ties."""
+    return (
+        cands.withColumn("_d", _centroid_dots("nv", centroids))
+        .withColumn("cluster", F.expr("array_position(_d, array_max(_d)) - 1"))
+        .drop("_d")
+    )
+
+
+def _probe_clusters(
+    queries: DataFrame, centroids: np.ndarray, n_probe: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """(qid, qv, cluster) with one row for each of the query's n_probe
+    nearest centroids: a struct sort on (-dot, c), sliced and
+    exploded."""
+    n_probe = max(1, min(n_probe, centroids.shape[0]))
+    by_dot = F.array_sort(
+        F.array(
+            *[
+                F.struct((-F.col("_d")[c]).alias("nd"), F.lit(c).cast("long").alias("c"))
+                for c in range(centroids.shape[0])
+            ]
+        )
+    )
+    return (
+        queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"))
+        .withColumn("_d", _centroid_dots("qv", centroids))
+        .withColumn(
+            "cluster", F.explode(F.transform(F.slice(by_dot, 1, n_probe), lambda s: s["c"]))
+        )
+        .drop("_d")
+    )
+
+
+@contextmanager
+def _fitted_ivf(
+    candidates: DataFrame, n_clusters: int, iters: int, id_col: str, vec_col: str
+):
+    """Yield (cands, centroids, owns_cache): the (nid, nv) candidates
+    and their k-means centroids. The candidates are persisted ONCE for
+    every k-means pass AND the caller's inverted-list assignment (one
+    InMemoryTableScan feeding all passes; unpersisted scans would cost
+    iters+2 full corpus reads), and released on exit. The INPUT's cache
+    state decides: a projection is never cached itself, but a plan over
+    a cached parent already reads its InMemoryTableScan."""
+    cands = candidates.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("nv"))
+    owns_cache = not candidates.is_cached
+    if owns_cache:
+        cands = cands.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        centroids = kmeans_fit(
+            cands, k=n_clusters, iters=iters, id_col="nid", vec_col="nv", persist=False
+        )
+        yield cands, centroids, owns_cache
+    finally:
+        if owns_cache:
+            cands.unpersist(blocking=False)
 
 
 def ivf_ann(
@@ -264,103 +394,31 @@ def ivf_ann(
     cluster id; the (small) probe set is broadcast. Recall vs
     brute_force_topk asserted in tests, monotone in n_probe.
 
-    The candidate vectors are persisted ONCE and reused by every
-    k-means iteration AND the final inverted-list assignment (one
-    InMemoryTableScan feeding all passes — unpersisted scans would cost
-    iters+2 full corpus reads at 100 TB); the tiny |Q| x k result is
-    materialized eagerly so the cache can be released before returning."""
-    from pyspark import StorageLevel
-
-    cands = candidates.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("nv"))
-    # check the INPUT's cache state: the fresh projection is never
-    # cached itself, but a plan over a cached parent reads the
-    # InMemoryTableScan — persisting again would double the big cache
-    owns_cache = not candidates.is_cached
-    if owns_cache:
-        cands = cands.persist(StorageLevel.MEMORY_AND_DISK)
-    centroids = kmeans_fit(
-        cands, k=n_clusters, iters=iters, id_col="nid", vec_col="nv", persist=False
-    )
-    if centroids.shape[0] == 0:  # empty candidate corpus -> empty result
-        # schema mirrors the non-empty path: qid/nid carry id_col's
-        # actual type (string ids union/join cleanly with shard results)
-        from pyspark.sql import types as T
-
-        id_type = queries.schema[id_col].dataType
-        empty_schema = T.StructType(
-            [
-                T.StructField("qid", id_type),
-                T.StructField("rank", T.IntegerType()),
-                T.StructField("nid", id_type),
-                T.StructField("dist", T.DoubleType()),
-            ]
+    When it persisted the candidates, the tiny |Q| x k result is
+    materialized eagerly so the cache can be released before
+    returning."""
+    with _fitted_ivf(candidates, n_clusters, iters, id_col, vec_col) as (
+        cands,
+        centroids,
+        owns_cache,
+    ):
+        if centroids.shape[0] == 0:  # empty candidate corpus -> empty result
+            return _empty_topk(queries, id_col)
+        out = _probe_topk(
+            _assign_clusters(cands, centroids),
+            _probe_clusters(queries, centroids, n_probe, id_col, vec_col),
+            "cluster",
+            k,
         )
         if owns_cache:
-            cands.unpersist(blocking=False)
-        return queries.sparkSession.createDataFrame([], empty_schema)
-    n_probe = max(1, min(n_probe, centroids.shape[0]))
-
-    cen_arrs = [F.array(*[F.lit(float(x)) for x in centroids[c]]) for c in range(centroids.shape[0])]
-    dots_expr = F.array(*[_dot(F.col("nv"), a) for a in cen_arrs])
-    cb = (
-        cands  # cached: the assignment pass reads the InMemoryTableScan
-        .withColumn("_d", F.explode(F.array(dots_expr)))  # Generate barrier
-        .withColumn("cluster", F.expr("array_position(_d, array_max(_d)) - 1"))
-        .drop("_d")
-    )
-    qdots_expr = F.array(*[_dot(F.col("qv"), a) for a in cen_arrs])
-    # top-n_probe clusters per query: sort (dot desc) via struct sort on
-    # (-dot, c), slice, explode
-    qb = (
-        queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"))
-        .withColumn("_d", F.explode(F.array(qdots_expr)))
-        .withColumn(
-            "cluster",
-            F.explode(
-                F.transform(
-                    F.slice(
-                        F.array_sort(
-                            F.array(
-                                *[
-                                    F.struct(
-                                        (-F.col("_d")[c]).alias("nd"),
-                                        F.lit(c).cast("long").alias("c"),
-                                    )
-                                    for c in range(centroids.shape[0])
-                                ]
-                            )
-                        ),
-                        1,
-                        n_probe,
-                    ),
-                    lambda s: s["c"],
-                )
-            ),
-        )
-        .drop("_d")
-    )
-    dist = F.greatest(F.lit(0.0), F.least(F.lit(2.0), 1.0 - _dot(F.col("qv"), F.col("nv"))))
-    pairs = (
-        cb.join(F.broadcast(qb), on="cluster")
-        .filter(F.col("qid") != F.col("nid"))
-        .select("qid", "nid", dist.alias("dist"))
-        .distinct()
-    )
-    w = W.partitionBy("qid").orderBy(F.col("dist"), F.col("nid"))
-    out = (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", "nid", "dist")
-    )
-    if owns_cache:
-        # materialize the tiny |Q| x k result while the candidate cache
-        # is hot, then release the big cache deterministically.
-        out = out.persist(StorageLevel.MEMORY_AND_DISK)
-        out.count()
-        cands.unpersist(blocking=False)
-    return out
+            out = out.persist(StorageLevel.MEMORY_AND_DISK)
+            out.count()
+        return out
 
 
+# ------------------------------------------------------------------ #
+# LSH: md5 sign-plane buckets
+# ------------------------------------------------------------------ #
 def _hyperplanes(n_planes: int, dim: int, seed: str = "lsh") -> np.ndarray:
     """Deterministic pseudo-random hyperplanes from md5((seed,p,d)) —
     reproducible across engines/sessions with no RNG state."""
@@ -372,23 +430,13 @@ def _hyperplanes(n_planes: int, dim: int, seed: str = "lsh") -> np.ndarray:
     return planes
 
 
-def _plane_dots_col(vec_col: str, planes: np.ndarray):
-    """array<double> of dot(vec, plane_p) for every plane — one JVM-side
-    projection, reused by the bucket key and the probe ordering."""
-    return F.array(
-        *[
-            _dot(F.col(vec_col), F.array(*[F.lit(float(x)) for x in planes[p]]))
-            for p in range(planes.shape[0])
-        ]
-    )
-
-
-def lsh_bucket_col(vec_col: str, planes: np.ndarray):
-    """Sign-bit bucket key as a JVM-side expression: sum of bit values
-    where dot(vec, plane_p) > 0. NOTE: referencing this expression more
-    than once in a plan re-evaluates every plane dot (CollapseProject
-    inlines it); for multi-use, materialize dots via with_lsh_dots."""
-    return _bucket_from_dots(_plane_dots_col(vec_col, planes), planes.shape[0])
+def _lsh_planes(df: DataFrame, vec_col: str, n_planes: int) -> np.ndarray | None:
+    """The md5 hyperplanes at `df`'s vector width, read from the first
+    row's size(vec_col); None for an empty input. Planes of another
+    width would make zip_with pad with nulls, every sign bit read 0 and
+    the search collapse into one bucket."""
+    row = df.select(F.size(vec_col).alias("d")).first()
+    return None if row is None else _hyperplanes(n_planes, int(row["d"]))
 
 
 def with_lsh_dots(df: DataFrame, vec_col: str, planes: np.ndarray, out: str = "_dots"):
@@ -398,21 +446,29 @@ def with_lsh_dots(df: DataFrame, vec_col: str, planes: np.ndarray, out: str = "_
     re-evaluate all plane dots per probe/bit expression (~8-64x) —
     while Generate is a barrier, so downstream bucket/probe expressions
     see a cheap attribute."""
-    return df.withColumn(out, F.explode(F.array(_plane_dots_col(vec_col, planes))))
+    dots = F.array(*[_dot(F.col(vec_col), _lit_vec(p)) for p in planes])
+    return df.withColumn(out, F.explode(F.array(dots)))
 
 
 def bucket_from_dots_col(dots_col: str, n_planes: int):
-    return _bucket_from_dots(F.col(dots_col), n_planes)
+    """Sign-bit bucket key from a MATERIALIZED dots column: the sum of
+    bit values where dot(vec, plane_p) > 0."""
+    dots = F.col(dots_col)
+    key = F.lit(0).cast("long")
+    for p in range(n_planes):
+        key = key + F.when(dots[p] > 0.0, F.lit(1 << p)).otherwise(F.lit(0)).cast(
+            "long"
+        )
+    return key
 
 
-def probes_from_dots_col(dots_col, n_planes: int, n_probes: int):
-    """array<long> of probe bucket keys from a MATERIALIZED dots column
-    (name or Column): own bucket first, then bit-flips of the
-    least-confident planes (smallest |dot|) — multi-probe LSH
-    (Lv et al., VLDB'07)."""
+def probes_from_dots_col(dots_col: str, n_planes: int, n_probes: int):
+    """array<long> of probe bucket keys from a MATERIALIZED dots column:
+    own bucket first, then bit-flips of the least-confident planes
+    (smallest |dot|) — multi-probe LSH (Lv et al., VLDB'07)."""
     n_probes = max(1, min(n_probes, n_planes + 1))
-    dots = F.col(dots_col) if isinstance(dots_col, str) else dots_col
-    base = _bucket_from_dots(dots, n_planes)
+    dots = F.col(dots_col)
+    base = bucket_from_dots_col(dots_col, n_planes)
     if n_probes == 1:
         return F.array(base)
     order = F.array_sort(
@@ -431,33 +487,11 @@ def probes_from_dots_col(dots_col, n_planes: int, n_probes: int):
     return F.concat(F.array(base), flips)
 
 
-def _bucket_from_dots(dots, n_planes: int):
-    key = F.lit(0).cast("long")
-    for p in range(n_planes):
-        key = key + F.when(dots[p] > 0.0, F.lit(1 << p)).otherwise(F.lit(0)).cast(
-            "long"
-        )
-    return key
-
-
-def probe_buckets_col(vec_col: str, planes: np.ndarray, n_probes: int):
-    """array<long> of `n_probes` bucket keys for multi-probe LSH (own
-    bucket first, then bit-flips of the least-confident planes). NOTE:
-    single-use expression form — multi-use plans must go through
-    with_lsh_dots + probes_from_dots_col or the dots re-evaluate.
-    Delegates to probes_from_dots_col so the probe construction exists
-    exactly once (the SQL oracle mirrors this one definition)."""
-    return probes_from_dots_col(
-        _plane_dots_col(vec_col, planes), planes.shape[0], n_probes
-    )
-
-
 def lsh_ann(
     queries: DataFrame,
     candidates: DataFrame,
     k: int = 5,
     n_planes: int = 8,
-    dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "v",
     n_probes: int = 3,
@@ -467,42 +501,28 @@ def lsh_ann(
     buckets (multi-probe, least-confident planes first). Equi-join on
     the bucket key — shuffle-free with a broadcast query side; recall
     vs brute_force_topk is asserted in tests (multi-probe bounds the
-    single-bucket worst case at scale). Plane dots materialize once per
-    row (with_lsh_dots barrier) before fanning into bucket/probe keys."""
-    planes = _hyperplanes(n_planes, dim)
-    qb = (
-        with_lsh_dots(
-            queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")),
-            "qv",
-            planes,
-        )
-        .select(
-            "qid",
-            "qv",
-            F.explode(probes_from_dots_col("_dots", n_planes, n_probes)).alias("bucket"),
-        )
+    single-bucket worst case at scale). The planes match the
+    candidates' vector width (_lsh_planes); plane dots materialize once
+    per row (with_lsh_dots barrier) before fanning into bucket/probe
+    keys."""
+    planes = _lsh_planes(candidates, vec_col, n_planes)
+    if planes is None:
+        return _empty_topk(queries, id_col)
+    qb = with_lsh_dots(
+        queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")),
+        "qv",
+        planes,
+    ).select(
+        "qid",
+        "qv",
+        F.explode(probes_from_dots_col("_dots", n_planes, n_probes)).alias("bucket"),
     )
-    cb = (
-        with_lsh_dots(
-            candidates.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("nv")),
-            "nv",
-            planes,
-        )
-        .select("nid", "nv", bucket_from_dots_col("_dots", n_planes).alias("bucket"))
-    )
-    dist = F.greatest(F.lit(0.0), F.least(F.lit(2.0), 1.0 - _dot(F.col("qv"), F.col("nv"))))
-    pairs = (
-        cb.join(F.broadcast(qb), on="bucket")
-        .filter(F.col("qid") != F.col("nid"))
-        .select("qid", "nid", dist.alias("dist"))
-        .distinct()  # a neighbor can surface via several probe buckets
-    )
-    w = W.partitionBy("qid").orderBy(F.col("dist"), F.col("nid"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", "nid", "dist")
-    )
+    cb = with_lsh_dots(
+        candidates.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("nv")),
+        "nv",
+        planes,
+    ).select("nid", "nv", bucket_from_dots_col("_dots", n_planes).alias("bucket"))
+    return _probe_topk(cb, qb, "bucket", k)
 
 
 def quantize_embeddings(
@@ -613,29 +633,14 @@ def ivf_build_index(
     codebooks exactly (asserted in tests)."""
     import json
 
-    from pyspark import StorageLevel
-
-    cands = candidates.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("nv"))
-    owns_cache = not candidates.is_cached
-    if owns_cache:
-        cands = cands.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        centroids = kmeans_fit(
-            cands, k=n_clusters, iters=iters, id_col="nid", vec_col="nv",
-            persist=False,
-        )
+    with _fitted_ivf(candidates, n_clusters, iters, id_col, vec_col) as (
+        cands,
+        centroids,
+        _,
+    ):
         if centroids.shape[0] == 0:
             raise ValueError("cannot build an IVF index over an empty corpus")
-        cen_arrs = [
-            F.array(*[F.lit(float(x)) for x in centroids[c]])
-            for c in range(centroids.shape[0])
-        ]
-        dots_expr = F.array(*[_dot(F.col("nv"), a) for a in cen_arrs])
-        assigned = (
-            cands.withColumn("_d", F.explode(F.array(dots_expr)))
-            .withColumn("cluster", F.expr("array_position(_d, array_max(_d)) - 1"))
-            .drop("_d")
-        )
+        assigned = _assign_clusters(cands, centroids)
         codebooks = None
         if pq_m is not None:
             codebooks = pq_fit(
@@ -651,9 +656,6 @@ def ivf_build_index(
             f"{path}/lists"
         )
         n_vectors = cands.count()
-    finally:
-        if owns_cache:
-            cands.unpersist(blocking=False)
     meta = {
         "centroids": centroids.tolist(),
         "n_clusters": int(centroids.shape[0]),
@@ -704,48 +706,14 @@ def ivf_query_index(
 
     meta = json.loads(_fs_read_text(spark, f"{path}/meta.json"))
     centroids = np.asarray(meta["centroids"], dtype=np.float64)
-    n_probe = max(1, min(n_probe, centroids.shape[0]))
-    cen_arrs = [
-        F.array(*[F.lit(float(x)) for x in centroids[c]])
-        for c in range(centroids.shape[0])
-    ]
-    qdots_expr = F.array(*[_dot(F.col("qv"), a) for a in cen_arrs])
-    qb = (
-        queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"))
-        .withColumn("_d", F.explode(F.array(qdots_expr)))
-        .withColumn(
-            "cluster",
-            F.explode(
-                F.transform(
-                    F.slice(
-                        F.array_sort(
-                            F.array(
-                                *[
-                                    F.struct(
-                                        (-F.col("_d")[c]).alias("nd"),
-                                        F.lit(c).cast("long").alias("c"),
-                                    )
-                                    for c in range(centroids.shape[0])
-                                ]
-                            )
-                        ),
-                        1,
-                        n_probe,
-                    ),
-                    lambda s: s["c"],
-                )
-            ),
-        )
-        .drop("_d")
-    )
+    qb = _probe_clusters(queries, centroids, n_probe, id_col, vec_col)
     probed = sorted(
         r["cluster"] for r in qb.select("cluster").distinct().collect()
     )
     lists = spark.read.parquet(f"{path}/lists").filter(
         F.col("cluster").isin(probed)
     )
-    is_pq = "pq_codebooks" in meta
-    if is_pq:
+    if "pq_codebooks" in meta:
         # PQ-compressed lists: (nid, codes) — decode from the literal
         # codebook tables (zero extra I/O) and renormalize, then rank
         # with the identical distance as the raw path. The decoded
@@ -764,20 +732,8 @@ def ivf_query_index(
             ),
             "nv",
         )
-    dist = F.greatest(
-        F.lit(0.0), F.least(F.lit(2.0), 1.0 - _dot(F.col("qv"), F.col("nv")))
-    )
-    pairs = lists.join(F.broadcast(qb), on="cluster")
-    if exclude_self:
-        pairs = pairs.filter(F.col("qid") != F.col("nid"))
-    pairs = pairs.select("qid", "nid", dist.alias("dist")).distinct()
     k_rank = k if refine_with is None else (shortlist or 4 * k)
-    w = W.partitionBy("qid").orderBy(F.col("dist"), F.col("nid"))
-    ranked = (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_rank)
-        .select("qid", "rank", "nid", "dist")
-    )
+    ranked = _probe_topk(lists, qb, "cluster", k_rank, exclude_self)
     if refine_with is None:
         return ranked
     # exact re-rank: shortlist + query vectors broadcast INTO the raw
@@ -789,13 +745,8 @@ def ivf_query_index(
     raw = refine_with.select(
         F.col(id_col).alias("nid"), F.col(vec_col).alias("nv")
     )
-    exact_pairs = raw.join(F.broadcast(short), on="nid").select(
-        "qid", "nid", dist.alias("dist")
-    )
-    return (
-        exact_pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", "nid", "dist")
+    return _top_k(
+        raw.join(F.broadcast(short), on="nid").select("qid", "nid", _cosine_dist()), k
     )
 
 
@@ -811,135 +762,29 @@ def pq_fit(
     id_col: str = "vec_id",
     vec_col: str = "v",
 ) -> np.ndarray:
-    """Fit PQ codebooks: split the vector into `m` contiguous
-    subspaces and run a FUSED deterministic L2 Lloyd fit — every
-    iteration is ONE distributed pass that updates all m subspace
-    codebooks at once (per-row work is independent across subspaces),
-    not m sequential fits of iters passes each. That fusion is the
-    difference between iters+1 and m*(iters+1) corpus passes — the
-    sequential spelling measured scaling efficiency 0.36 at 1M vectors
-    because m*iters driver round-trips serialize (BENCH.md). Returns
-    codebooks of shape (m, n_codes, dim/m + 1): each row is
-    [*codeword, half_cc] (pq_with_half_cc).
+    """Fit PQ codebooks: `m` contiguous L2 subspaces of _lloyd_fit,
+    fused so every iteration is ONE distributed pass that updates all m
+    codebooks at once — iters+1 corpus passes, not the m*(iters+1) of
+    m sequential fits (that spelling measured scaling efficiency 0.36
+    at 1M vectors because m*iters driver round-trips serialize,
+    BENCH.md). Returns codebooks of shape (m, n_codes, dim/m + 1): each
+    row is [*codeword, half_cc] (pq_with_half_cc).
 
-    Determinism discipline matches kmeans_fit: init = the n_codes rows
-    with smallest md5(id) (engine/partitioning-independent; the SAME
-    rows seed every subspace — md5 ignores the slice), partials merge
-    driver-side sorted by (sub, pid) so no shuffle-arrival order ever
-    reaches a float add. Assignment is TRUE L2 (argmax of
+    Same determinism as kmeans_fit: md5(id) init (the same rows seed
+    every subspace) and partials summed in (sub, pid) order, tree
+    reduce included. Assignment is TRUE L2 (argmax of
     dot - 0.5||c||^2 — identical ranking rule to pq_encode, so fit
     and encode can never disagree near boundaries); codewords are
     plain means (no unit-sphere projection — subspace slices are not
     unit vectors, reconstruction error is the objective).
 
-    The driver merge sees P*m tiny rows per iteration; at very large
-    P, batch the partials through the same repartition-fanin trick as
-    kmeans_fit (P*m rows of k*dsub doubles is ~MBs even at thousands
-    of partitions, so the direct merge holds far past this sandbox).
     At 100 TB, fit on a SAMPLE — codebooks are statistics, not
     indexes: `vectors.sample(...)` feeds this unchanged and the
     encode step covers the full corpus."""
-    from pyspark import StorageLevel
-    from pyspark.sql import types as T
-
-    spark = vectors.sparkSession
-    dim = len(vectors.select(vec_col).first()[0])
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
-    dsub = dim // m
-    owns_cache = not vectors.is_cached
-    if owns_cache:
-        vectors = vectors.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        init_pdf = (
-            vectors.select(id_col, vec_col)
-            .withColumn("_h", F.md5(F.col(id_col).cast("string")))
-            .orderBy("_h")
-            .limit(n_codes)
-            .select(id_col, vec_col)
-            .toPandas()
-            .sort_values(id_col)
-        )
-        if len(init_pdf) == 0:
-            raise ValueError("cannot fit PQ codebooks on an empty corpus")
-        seed = np.array(init_pdf[vec_col].tolist(), dtype=np.float64)
-        k = seed.shape[0]  # corpus smaller than n_codes -> fewer codes
-        books = np.stack(
-            [seed[:, j * dsub : (j + 1) * dsub].copy() for j in range(m)]
-        )
-
-        schema = T.StructType(
-            [
-                T.StructField("pid", T.LongType()),
-                T.StructField("sub", T.LongType()),
-                T.StructField("cnt", T.ArrayType(T.LongType())),
-                T.StructField("flat", T.ArrayType(T.DoubleType())),
-            ]
-        )
-
-        for _ in range(iters):
-            bc = spark.sparkContext.broadcast(books)
-
-            def partials(batches):
-                import pandas as pd
-                from pyspark import TaskContext
-
-                cb = bc.value
-                mm, kk = cb.shape[0], cb.shape[1]
-                sums = np.zeros_like(cb)
-                cnts = np.zeros((mm, kk), dtype=np.int64)
-                seen = False
-                for pdf in batches:
-                    if len(pdf) == 0:
-                        continue
-                    seen = True
-                    mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-                    for j in range(mm):
-                        sl = mat[:, j * dsub : (j + 1) * dsub]
-                        scores = sl @ cb[j].T - 0.5 * np.sum(
-                            cb[j] * cb[j], axis=1
-                        )
-                        assign = np.argmax(scores, axis=1)
-                        np.add.at(sums[j], assign, sl)
-                        cnts[j] += np.bincount(assign, minlength=kk)
-                if not seen:
-                    return
-                pid = TaskContext.get().partitionId()
-                yield pd.DataFrame(
-                    {
-                        "pid": [pid] * cb.shape[0],
-                        "sub": list(range(cb.shape[0])),
-                        "cnt": [cnts[j].tolist() for j in range(cb.shape[0])],
-                        "flat": [
-                            sums[j].ravel().tolist()
-                            for j in range(cb.shape[0])
-                        ],
-                    }
-                )
-
-            part = (
-                vectors.select(vec_col)
-                .mapInPandas(partials, schema)
-                .toPandas()
-                .sort_values(["sub", "pid"])
-            )
-            sums = np.zeros_like(books)
-            cnts = np.zeros((m, k), dtype=np.int64)
-            for _, row in part.iterrows():
-                j = int(row["sub"])
-                sums[j] += np.asarray(
-                    row["flat"], dtype=np.float64
-                ).reshape(k, dsub)
-                cnts[j] += np.asarray(row["cnt"], dtype=np.int64)
-            books = books.copy()
-            for j in range(m):
-                nz = cnts[j] > 0
-                books[j][nz] = sums[j][nz] / cnts[j][nz, None]
-            bc.destroy()
-        return pq_with_half_cc(books)
-    finally:
-        if owns_cache:
-            vectors.unpersist(blocking=False)
+    books = _lloyd_fit(vectors, n_codes, iters, id_col, vec_col, None, m=m, cosine=False)
+    if books is None:
+        raise ValueError("cannot fit PQ codebooks on an empty corpus")
+    return pq_with_half_cc(books)
 
 
 def pq_with_half_cc(codewords: np.ndarray) -> np.ndarray:
@@ -960,11 +805,9 @@ def _pq_lit_scores(codebooks: np.ndarray, sub: int, vec_col):
     query-side norm), half_cc read from the codebook's carried column."""
     dsub = codebooks.shape[2] - 1
     vsub = F.slice(vec_col, sub * dsub + 1, dsub)
-    scores = []
-    for row in codebooks[sub]:
-        lit = F.array(*[F.lit(float(x)) for x in row[:-1]])
-        scores.append(_dot(vsub, lit) - F.lit(float(row[-1])))
-    return F.array(*scores)
+    return F.array(
+        *[_dot(vsub, _lit_vec(row[:-1])) - F.lit(float(row[-1])) for row in codebooks[sub]]
+    )
 
 
 def pq_encode_col(vec_col, codebooks: np.ndarray):
@@ -972,13 +815,10 @@ def pq_encode_col(vec_col, codebooks: np.ndarray):
     `vec_col` — per subspace, the L2-nearest codeword (argmax of the
     baked score literals; first-max tie-break = lowest code, same
     convention as the IVF assignment)."""
-    m = codebooks.shape[0]
     cols = []
-    for j in range(m):
+    for j in range(codebooks.shape[0]):
         s = _pq_lit_scores(codebooks, j, vec_col)
-        cols.append(
-            (F.array_position(s, F.array_max(s)) - 1).cast("int")
-        )
+        cols.append((F.array_position(s, F.array_max(s)) - 1).cast("int"))
     return F.array(*cols)
 
 
@@ -1004,19 +844,15 @@ def pq_decode_col(codes_col, codebooks: np.ndarray):
     per-subspace codeword lookups against the baked literal tables.
     dot(q, decode(codes)) == the ADC table-sum — one spelling, shared
     with the oracle, instead of two float orders to reconcile."""
-    m, n_codes = codebooks.shape[:2]
-    parts = []
-    for j in range(m):
-        table = F.array(
-            *[
-                F.array(*[F.lit(float(x)) for x in codebooks[j, c, :-1]])
-                for c in range(n_codes)
-            ]
-        )
-        parts.append(
-            F.element_at(table, F.element_at(codes_col, j + 1) + 1)
-        )
-    return F.concat(*parts)
+    return F.concat(
+        *[
+            F.element_at(
+                F.array(*[_lit_vec(row[:-1]) for row in book]),
+                F.element_at(codes_col, j + 1) + 1,
+            )
+            for j, book in enumerate(codebooks)
+        ]
+    )
 
 
 def pq_ann(

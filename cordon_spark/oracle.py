@@ -70,7 +70,7 @@ def oracle_scores(
     if embeddings is None:
         embeddings = kernel.embed_texts(win["content"].tolist(), cfg.embedding_dim)
     scores = kernel.knn_scores(
-        embeddings, embeddings, cfg.k_neighbors, cfg.scoring_chunk_size
+        embeddings, embeddings, cfg.k_neighbors, kernel.KNN_CHUNK_SIZE
     )
     win = win.copy()
     win["score"] = scores

@@ -4,7 +4,13 @@ Runs each __spark_entry__.queries() entry on Spark and its
 oracle_sql() on DuckDB over the same sf dir, comparing row count,
 column names, and an order-insensitive value hash (rows sorted, columns
 sorted by name, floats rendered via repr of float64). Prints one line
-per query + a summary; exit 1 on any mismatch.
+per query + a summary over the queries that ran; exit 1 on any mismatch
+or on a requested query name that does not exist.
+
+    python scripts/check_entry.py [sf_dir] [name,name,...] [--dump]
+
+An empty sf_dir or name list means the default (`make verify SF=...
+QUERIES=...` passes both through, empty when unset).
 """
 
 from __future__ import annotations
@@ -102,11 +108,18 @@ def dump_rows(name: str, engine: str, rows: list[tuple], cols: list[str]) -> Pat
 def main() -> int:
     argv = [a for a in sys.argv[1:] if a != "--dump"]
     dump = "--dump" in sys.argv[1:]
-    sf_dir = argv[0] if len(argv) > 0 else "/root/testdata/sf0.01"
-    only = argv[1].split(",") if len(argv) > 1 else None
+    sf_dir = argv[0] if len(argv) > 0 and argv[0] else "/root/testdata/sf0.01"
+    only = [n for n in argv[1].split(",") if n] if len(argv) > 1 else []
 
     import __spark_entry__ as E
     from cordon_spark.session import get_spark
+
+    queries = E.queries()
+    unknown = [n for n in only if n not in queries]
+    if unknown:
+        print(f"unknown queries: {unknown}")
+        return 1
+    selected = {n: fn for n, fn in queries.items() if not only or n in only}
 
     import os
 
@@ -119,12 +132,9 @@ def main() -> int:
         if Path(p).exists():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
-    queries = E.queries()
     oracles = E.oracle_sql()
     failures = []
-    for name, fn in queries.items():
-        if only and name not in only:
-            continue
+    for name, fn in selected.items():
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir)
@@ -175,7 +185,7 @@ def main() -> int:
         else:
             print(f"ok    {name:28s} n={len(srows):6d} {time.time()-t0:5.1f}s")
 
-    print(f"\n{len(queries) - len(failures)}/{len(queries)} ok; failures: {failures}")
+    print(f"\n{len(selected) - len(failures)}/{len(selected)} ok; failures: {failures}")
     return 1 if failures else 0
 
 

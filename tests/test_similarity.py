@@ -2,6 +2,7 @@
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from cordon_spark import kernel
 from cordon_spark.operators import similarity as S
@@ -37,12 +38,39 @@ def test_lsh_recall_vs_brute_force(spark):
     }
     approx = {
         (r.qid, r.nid)
-        for r in S.lsh_ann(queries, df, k=5, n_planes=4, dim=16).collect()
+        for r in S.lsh_ann(queries, df, k=5, n_planes=4).collect()
     }
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.15  # 4 planes / 16 buckets: sanity floor, not a tuning claim
     # every approx neighbor must share the query's bucket -> subset check
     assert approx  # produces results at all
+
+
+def test_lsh_planes_follow_vector_width(spark):
+    """lsh_ann sizes its planes from the input (no dim argument): on
+    16-d vectors the sign-bit keys spread over many buckets instead of
+    collapsing into one (64-d planes against 16-d vectors null every
+    plane dot), and recall clears the same floor as above."""
+    from pyspark.sql import functions as F
+
+    df, _ = _vec_df(spark, n=200, dim=16, seed=1)
+    planes = S._lsh_planes(df, "v", 4)
+    assert planes.shape == (4, 16)
+    buckets = (
+        S.with_lsh_dots(df, "v", planes)
+        .select(S.bucket_from_dots_col("_dots", 4).alias("b"))
+        .agg(F.countDistinct("b"))
+        .first()[0]
+    )
+    assert buckets > 1
+    queries = df.filter("vec_id < 20")
+    exact = {
+        (r.qid, r.nid) for r in S.brute_force_topk(queries, df, k=5).collect()
+    }
+    approx = {
+        (r.qid, r.nid) for r in S.lsh_ann(queries, df, k=5, n_planes=4).collect()
+    }
+    assert len(exact & approx) / len(exact) >= 0.15
 
 
 def test_lsh_multiprobe_recall_floor(spark):
@@ -59,7 +87,7 @@ def test_lsh_multiprobe_recall_floor(spark):
         approx = {
             (r.qid, r.nid)
             for r in S.lsh_ann(
-                queries, df, k=5, n_planes=4, dim=16, n_probes=n_probes
+                queries, df, k=5, n_planes=4, n_probes=n_probes
             ).collect()
         }
         return len(exact & approx) / len(exact)
@@ -107,16 +135,13 @@ def test_kmeans_fit_deterministic_and_partition_invariant(spark):
 
 def test_probe_buckets_structure(spark):
     """probe list: own bucket first, then distinct hamming-1 flips."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
     df = spark.createDataFrame(
         pd.DataFrame({"vec_id": [0], "v": [[1.0, 0.2, -0.3, 0.05]]})
     )
     planes = S._hyperplanes(4, 4)
-    out = df.select(
-        S.lsh_bucket_col("v", planes).alias("base"),
-        S.probe_buckets_col("v", planes, 5).alias("probes"),
+    out = S.with_lsh_dots(df, "v", planes).select(
+        S.bucket_from_dots_col("_dots", 4).alias("base"),
+        S.probes_from_dots_col("_dots", 4, 5).alias("probes"),
     ).first()
     probes = list(out.probes)
     assert probes[0] == out.base
@@ -199,16 +224,23 @@ def test_quantized_ann_recall(spark):
     assert zr.q_scale == 0.0 and list(zr.qv) == [0, 0]
 
 
-def test_kmeans_fit_tree_reduce_bit_reproducible(spark):
-    """With >_TREE_FANIN partitions the two-level tree reduce engages;
-    partials carry their source partition id and merge in pid order, so
-    repeated fits are BIT-identical (not just allclose) even though the
-    shuffle arrival order varies run to run."""
+@pytest.mark.parametrize(
+    "fit",
+    [
+        lambda df: S.kmeans_fit(df, k=6, iters=3),
+        lambda df: S.pq_fit(df, m=4, n_codes=6, iters=3),
+    ],
+    ids=["kmeans_fit", "pq_fit"],
+)
+def test_kmeans_fit_tree_reduce_bit_reproducible(spark, fit):
+    """With >_TREE_FANIN partitions the two-level tree reduce engages
+    for both fits of the shared Lloyd loop; partials carry their source
+    partition id and merge in (sub, pid) order, so repeated fits are
+    BIT-identical (not just allclose) even though the shuffle arrival
+    order varies run to run."""
     df, _ = _vec_df(spark, n=400, dim=8, seed=11)
     wide = df.repartition(80)  # > _TREE_FANIN=64 -> tree path
-    c1 = S.kmeans_fit(wide, k=6, iters=3)
-    c2 = S.kmeans_fit(wide, k=6, iters=3)
-    assert np.array_equal(c1, c2)
+    assert np.array_equal(fit(wide), fit(wide))
 
 
 def test_ivf_index_build_query_matches_inline(spark, tmp_path):
