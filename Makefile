@@ -5,8 +5,10 @@ help:
 	@echo "  make install       Editable install (console scripts)"
 	@echo "  make install-dev   Install with dev extras"
 	@echo "  make test          Run the test suite"
-	@echo "  make bench         One untraced headline_centroid perfbench run (JSON result on the last line)"
-	@echo "  make bench-trace   The same run traced: per-layer and plans.pipeline.* metrics"
+	@echo "  make bench         One untraced perfbench run (JSON result on the last line);"
+	@echo "                     optional WORKLOAD=<name> (default headline_centroid) SEED=<n> (default 1)"
+	@echo "  make bench-trace   The same run traced: per-layer and plans.pipeline.* metrics,"
+	@echo "                     e.g. make bench-trace WORKLOAD=knn_band_snapshots"
 	@echo "  make verify        Driver-contract correctness gate (all oracle queries vs DuckDB);"
 	@echo "                     optional SF=<sf dir> QUERIES=name,name"
 	@echo "  make clean         Remove caches and build artifacts"
@@ -23,11 +25,14 @@ test:
 coverage:
 	python -m pytest tests/ -q --cov=cordon_spark --cov-report=term-missing
 
+WORKLOAD ?= headline_centroid
+SEED ?= 1
+
 bench:
-	python3 perfbench/run.py --workload headline_centroid --seed 1 --seconds 1 --trace 0
+	python3 perfbench/run.py --workload $(WORKLOAD) --seed $(SEED) --seconds 1 --trace 0
 
 bench-trace:
-	python3 perfbench/run.py --workload headline_centroid --seed 1 --seconds 1 --trace 1
+	python3 perfbench/run.py --workload $(WORKLOAD) --seed $(SEED) --seconds 1 --trace 1
 
 verify:
 	python scripts/check_entry.py "$(SF)" "$(QUERIES)"

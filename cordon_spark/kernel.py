@@ -14,9 +14,14 @@ Numeric contract:
   - score = mean of the k smallest distances after dropping the single
     smallest slot (self, distance 0)          (scorer.py:216-217,316-317)
   - candidate chunk boundaries are absolute offsets into the full
-    matrix, so scores are independent of how queries are partitioned
+    matrix, and queries run in zero-padded blocks of a fixed
+    KNN_QUERY_BLOCK rows, so every similarity comes out of one dgemm
+    shape and scores are bit-identical however queries are partitioned
     (the reference's batch-size-invariance property,
-    tests/test_analysis.py:76-100).
+    tests/test_analysis.py:76-100). BLAS results depend on the
+    operand shape (a 1-row block takes a gemv path, a ragged block a
+    different edge kernel), so an unpadded block can move a score by
+    an ulp — enough to flip a window sitting on a percentile cut.
 """
 
 from __future__ import annotations
@@ -30,6 +35,9 @@ import numpy as np
 # auto-sized CPU batch, scorer.py:89-127); AnalysisConfig's
 # scoring_batch_size overrides it in the Spark scorer.
 KNN_CHUNK_SIZE = 8192
+# Query rows per dgemm in the exact-kNN kernel; the last block of a
+# batch is zero-padded to it (see the numeric contract above).
+KNN_QUERY_BLOCK = 64
 
 # Exactly the codepoints Python str.rstrip() strips (str.isspace() set),
 # because the reference strips with str.rstrip() (ingestion/reader.py:25).
@@ -162,10 +170,13 @@ def knn_scores(
     dropping the guaranteed-smallest slot: self distance 0, or a
     tied exact-duplicate at 0 — same value either way, scorer.py:216).
 
-    Blocked exactly like the reference CPU path (scorer.py:264-305):
+    Blocked like the reference CPU path (scorer.py:264-305):
     similarities in candidate chunks, running top-k via concatenate +
-    partial sort, distances clamped to [0, 2]. Edge cases: 0 rows -> [],
-    single candidate -> score 0.0 (scorer.py:340-346).
+    partial sort, distances clamped to [0, 2]. Queries go through in
+    zero-padded KNN_QUERY_BLOCK-row blocks and candidate chunks start
+    at absolute offsets, so a query's score does not depend on which
+    other queries share its call. Edge cases: 0 rows -> [], single
+    candidate -> score 0.0 (scorer.py:340-346).
     """
     nq = queries.shape[0]
     if nq == 0:
@@ -175,23 +186,29 @@ def knn_scores(
         return np.zeros(nq, dtype=np.float64)
     # min(k+1, n) including the self slot (scorer.py:76-87)
     nn = min(k_neighbors + 1, n)
-    queries = np.asarray(queries, dtype=np.float64)
     candidates = np.asarray(candidates, dtype=np.float64)
-    top = np.full((nq, nn), np.inf, dtype=np.float64)
-    for cs in range(0, n, chunk_size):
-        ce = min(cs + chunk_size, n)
-        sims = queries @ candidates[cs:ce].T
-        dists = np.clip(1.0 - sims, 0.0, 2.0)
-        combined = np.concatenate([top, dists], axis=1)
-        if combined.shape[1] > nn:
-            part = np.argpartition(combined, nn - 1, axis=1)[:, :nn]
-            vals = np.take_along_axis(combined, part, axis=1)
-        else:
-            vals = combined
-        vals.sort(axis=1)
-        top = vals
-    # drop slot 0 (self), mean the rest (scorer.py:216-217)
-    return top[:, 1:].mean(axis=1)
+    padded = np.zeros(
+        (-(-nq // KNN_QUERY_BLOCK) * KNN_QUERY_BLOCK, candidates.shape[1]),
+        dtype=np.float64,
+    )
+    padded[:nq] = queries
+    out = np.empty(padded.shape[0], dtype=np.float64)
+    for qs in range(0, padded.shape[0], KNN_QUERY_BLOCK):
+        block = padded[qs : qs + KNN_QUERY_BLOCK]
+        top = np.full((KNN_QUERY_BLOCK, nn), np.inf, dtype=np.float64)
+        for cs in range(0, n, chunk_size):
+            ce = min(cs + chunk_size, n)
+            sims = block @ candidates[cs:ce].T
+            dists = np.clip(1.0 - sims, 0.0, 2.0)
+            combined = np.concatenate([top, dists], axis=1)
+            if combined.shape[1] > nn:
+                part = np.argpartition(combined, nn - 1, axis=1)[:, :nn]
+                combined = np.take_along_axis(combined, part, axis=1)
+            combined.sort(axis=1)
+            top = combined
+        # drop slot 0 (self), mean the rest (scorer.py:216-217)
+        out[qs : qs + KNN_QUERY_BLOCK] = top[:, 1:].mean(axis=1)
+    return out[:nq]
 
 
 def centroid_scores_loo(

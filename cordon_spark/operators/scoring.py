@@ -12,12 +12,11 @@ distributed form is:
   2. BROADCAST it to all executors,
   3. mapInPandas: each partition scores ITS OWN rows against the
      broadcast matrix with the shared numpy kernel — embarrassingly
-     parallel, zero shuffle, and partition-invariant up to ~1 ulp of
-     BLAS rounding (dgemm results are shape-dependent, so a score
-     exactly on a threshold boundary can in principle flip between
-     partitionings; cross-engine checks therefore compare after
-     floor(x*1e4+0.5) rounding — the reference's batch-size-invariance
-     property, tests/test_analysis.py:76-100, has the same caveat).
+     parallel, zero shuffle, and bit-identical under any partitioning:
+     the kernel runs queries in fixed-shape zero-padded blocks against
+     absolute-offset candidate chunks, so a score never depends on
+     which rows share its Arrow batch (the reference's
+     batch-size-invariance property, tests/test_analysis.py:76-100).
 
 The relational spelling (crossJoin + Window row_number <= k + avg) is
 kept in the DuckDB oracle SQL only — it is the O(n^2)-shuffle plan you
@@ -87,13 +86,9 @@ def score_windows_knn(
     # Spread the scoring across the cluster: the input is often a
     # single small parquet file = ONE scan task, which serializes the
     # whole O(n^2) matmul through one python worker (measured 34s for
-    # 20k rows at sf1.0; 32-way it is ~2s). Candidate chunk boundaries
-    # are absolute offsets into the broadcast matrix, so the CANDIDATE
-    # blocking is partitioning-independent; the query-side dgemm block
-    # shape still varies with partitioning, which can move a score by
-    # ~1 ulp (the module-header caveat — same class of freedom every
-    # partitioning of this mapInPandas always had; cross-engine checks
-    # compare after e4 rounding). Scale-adaptive: width comes from the
+    # 20k rows at sf1.0; 32-way it is ~2s). The kernel's fixed query
+    # blocks and absolute candidate chunks keep the scores bit-identical
+    # to the unpartitioned oracle. Scale-adaptive: width comes from the
     # scheduler, not a constant (guide §2).
     n_slots = spark.sparkContext.defaultParallelism
     if n_slots > 1 and len(matrix) >= 2 * n_slots:

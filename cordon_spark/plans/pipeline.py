@@ -6,7 +6,9 @@ merge -> route -> sinks with:
   * driver-side stage wall-clock timings + snapshot row counts
     (StageMetrics; a lazy plan's work is charged to the stage whose
     action runs it),
-  * per-partition lineage records (north_rule),
+  * per-partition lineage records (north_rule), read from the parquet
+    footers of the part files each snapshot write produced — the
+    write is the only job that runs a checkpointed stage's plan,
   * optional snapshot checkpointing per stage through a Catalog, with
     idempotent RESUME: a stage keyed (run_id, stage) whose snapshot is
     already committed is read back instead of recomputed (the analog of
@@ -64,7 +66,8 @@ class PipelineResult:
 def _checkpoint(
     spark, catalog, run_id, stage, df_builder, metrics: M.StageMetrics, resume: bool
 ):
-    """Build-or-load a stage through the snapshot catalog."""
+    """Build-or-load a stage through the snapshot catalog; a built
+    stage's plan runs once, in the snapshot write."""
     if catalog is None:
         df = df_builder()
         return df, False
@@ -72,20 +75,8 @@ def _checkpoint(
     if resume and catalog.has_snapshot(stage, snapshot_id):
         metrics.add(stage, "resumed", 1.0)
         return catalog.read(spark, stage, snapshot_id), True
-    df = df_builder()
-    lineage_rows = M.partition_lineage(df, stage).collect()
-    catalog.write_snapshot(
-        df,
-        stage,
-        snapshot_id,
-        lineage={
-            "partitions": [
-                {"partition_id": r["partition_id"], "rows": r["rows"]}
-                for r in lineage_rows
-            ]
-        },
-    )
-    metrics.add(stage, "rows", float(sum(r["rows"] for r in lineage_rows)))
+    manifest = catalog.write_snapshot(df_builder(), stage, snapshot_id)
+    metrics.add(stage, "rows", float(manifest["rows"]))
     return catalog.read(spark, stage, snapshot_id), False
 
 

@@ -23,11 +23,34 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import time
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, types as T
+
+# Spark names every file a write task produces
+# `part-<partition id>-<job uuid>-c<file no>[.<codec>].parquet`.
+_PART_FILE = re.compile(r"part-(\d+)-")
+
+
+def _footer_partitions(data_dir: Path) -> list[dict]:
+    """[{partition_id, rows}] of a written parquet directory, sorted by
+    partition id, read from the part files' footers only. The files of
+    one write task (`c000`, `c001`, … under maxRecordsPerFile) sum into
+    one partition; zero-row files are skipped — Spark writes no file
+    for an empty partition, except one schema-carrying empty file when
+    every partition is empty."""
+    import pyarrow.parquet as pq
+
+    rows: dict[int, int] = {}
+    for f in data_dir.glob("part-*.parquet"):
+        n = pq.read_metadata(f).num_rows
+        if n:
+            pid = int(_PART_FILE.match(f.name).group(1))
+            rows[pid] = rows.get(pid, 0) + n
+    return [{"partition_id": pid, "rows": rows[pid]} for pid in sorted(rows)]
 
 
 class SnapshotCatalog:
@@ -58,17 +81,23 @@ class SnapshotCatalog:
         mode: str = "overwrite",
     ) -> dict:
         """Write df as a new immutable snapshot and atomically commit it
-        as current. Returns the manifest."""
+        as current. Returns the manifest.
+
+        The write is the only job that runs df's plan. `rows` and
+        `lineage["partitions"]` ([{partition_id, rows}], the write
+        tasks' partition ids and row counts, empty partitions omitted)
+        come from the footers of the files it wrote; the caller's
+        lineage keys are recorded next to them."""
         data_dir = self._data_dir(table, snapshot_id)
         df.write.mode(mode).parquet(str(data_dir))
-        rows = SparkSession.getActiveSession().read.parquet(str(data_dir)).count()
+        partitions = _footer_partitions(data_dir)
         manifest = {
             "table": table,
             "snapshot_id": snapshot_id,
-            "rows": rows,
+            "rows": sum(p["rows"] for p in partitions),
             "schema": df.schema.jsonValue(),
             "committed_at": time.time(),
-            "lineage": lineage or {},
+            "lineage": {**(lineage or {}), "partitions": partitions},
         }
         mpath = self._manifest_path(table, snapshot_id)
         mpath.parent.mkdir(parents=True, exist_ok=True)
@@ -96,10 +125,14 @@ class SnapshotCatalog:
     def read(
         self, spark: SparkSession, table: str, snapshot_id: str | None = None
     ) -> DataFrame:
+        """The snapshot's rows, planned with the manifest's schema: no
+        schema-inference job runs (Spark reads a file source's columns
+        as nullable either way)."""
         sid = snapshot_id or self.current_snapshot(table)
         if sid is None:
             raise FileNotFoundError(f"no committed snapshot for table {table}")
-        return spark.read.parquet(str(self._data_dir(table, sid)))
+        schema = T.StructType.fromJson(self.manifest(table, sid)["schema"])
+        return spark.read.schema(schema).parquet(str(self._data_dir(table, sid)))
 
     def snapshots(self, table: str) -> list[str]:
         mdir = self._table_dir(table) / "manifests"
@@ -143,7 +176,7 @@ class SnapshotCatalog:
         )
         n_files = max(1, -(-total_bytes // target_file_bytes))  # ceil
         new_sid = new_snapshot_id or f"{sid}-compacted"
-        df = spark.read.parquet(str(src_dir)).coalesce(int(n_files))
+        df = self.read(spark, table, sid).coalesce(int(n_files))
         manifest = self.write_snapshot(
             df,
             table,
@@ -190,7 +223,7 @@ class SnapshotCatalog:
             n_files = max(
                 1, len([p for p in src_dir.rglob("*.parquet")]) // 4
             )
-        df = spark.read.parquet(str(src_dir))
+        df = self.read(spark, table, sid)
         zdf, info = zorder_value(df, cols, bits_per_col)
         clustered = (
             zdf.repartitionByRange(int(n_files), "_zval")

@@ -6,6 +6,7 @@ import pandas as pd
 import pytest
 
 from cordon_spark.config import AnalysisConfig
+from cordon_spark.operators.metrics import partition_lineage
 from cordon_spark.plans.pipeline import analyze_transcripts
 from cordon_spark.sources.catalog import SnapshotCatalog
 
@@ -18,6 +19,23 @@ def test_write_read_roundtrip(spark, tmp_path):
     assert cat.current_snapshot("t1") == "s1"
     got = cat.read(spark, "t1").orderBy("id").collect()
     assert [(r.id, r.v) for r in got] == [(1, "a"), (2, "b")]
+
+
+def test_footer_lineage_sums_files_of_a_partition(spark, tmp_path):
+    """A write task that rolls over to `c001`, `c002`, … files still
+    records one partition whose rows are the sum of its files."""
+    cat = SnapshotCatalog(tmp_path / "wh")
+    df = spark.range(0, 1000, numPartitions=4)
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "100")
+    try:
+        m = cat.write_snapshot(df, "t", "s1")
+    finally:
+        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    assert len(list(cat._data_dir("t", "s1").glob("part-*.parquet"))) == 12
+    assert m["rows"] == 1000
+    assert m["lineage"]["partitions"] == [
+        {"partition_id": pid, "rows": 250} for pid in range(4)
+    ]
 
 
 def test_snapshot_isolation_and_time_travel(spark, tmp_path):
@@ -73,14 +91,122 @@ def test_pipeline_resume_idempotent(spark, tiny_transcripts, tmp_path):
     assert res3.metrics["scored_windows"].get("resumed") == 1.0  # upstream reused
 
 
+PIPELINE_TABLES = (
+    "scored_windows",
+    "blocks",
+    "routed_turns",
+    "anomalous_turns",
+    "routine_turns",
+)
+
+
+class _PlanLineageCatalog(SnapshotCatalog):
+    """Records, before each write, the lineage the plan itself gives
+    (`partition_lineage`, a `groupBy(spark_partition_id())` count over
+    the very DataFrame about to be written)."""
+
+    def __init__(self, root):
+        super().__init__(root)
+        self.plan_lineage = {}
+
+    def write_snapshot(self, df, table, snapshot_id, lineage=None, mode="overwrite"):
+        self.plan_lineage[table] = sorted(
+            (r.partition_id, r.rows) for r in partition_lineage(df, table).collect()
+        )
+        return super().write_snapshot(df, table, snapshot_id, lineage, mode)
+
+
 def test_lineage_recorded(spark, tiny_transcripts, tmp_path):
+    """The footer-read lineage of every table the pipeline writes equals
+    what `partition_lineage` gives for the DataFrame that was written."""
+    pdf, _ = tiny_transcripts
+    df = spark.createDataFrame(pdf)
+    cat = _PlanLineageCatalog(tmp_path / "wh")
+    analyze_transcripts(spark, df, AnalysisConfig(), catalog=cat, run_id="r9")
+    assert set(cat.plan_lineage) == set(PIPELINE_TABLES)
+    for table in PIPELINE_TABLES:
+        man = cat.manifest(table, f"r9-{table}")
+        parts = [(p["partition_id"], p["rows"]) for p in man["lineage"]["partitions"]]
+        assert parts == cat.plan_lineage[table], table
+        assert man["rows"] == sum(n for _, n in parts)
+    assert cat.plan_lineage["scored_windows"]  # non-trivial fixture
+
+
+# (rows, [(partition_id, rows)]) per checkpointed stage, as
+# `partition_lineage` gives them for the fixture under the suite's
+# local[4] session with 4 shuffle partitions.
+PINNED_LINEAGE = {
+    "tiny": {
+        "scored_windows": (780, [(0, 196), (1, 195), (2, 194), (3, 195)]),
+        "blocks": (71, [(0, 71)]),
+        "routed_turns": (3113, [(0, 778), (1, 778), (2, 778), (3, 779)]),
+    },
+    "empty": {
+        "scored_windows": (0, []),
+        "blocks": (0, []),
+        "routed_turns": (0, []),
+    },
+}
+
+
+@pytest.mark.parametrize("case", sorted(PINNED_LINEAGE))
+def test_checkpoint_manifests_pinned(spark, tiny_transcripts, tmp_path, case):
+    pdf, _ = tiny_transcripts
+    df = spark.createDataFrame(pdf)
+    if case == "empty":
+        df = df.limit(0)
+    cat = SnapshotCatalog(tmp_path / "wh")
+    res = analyze_transcripts(spark, df, AnalysisConfig(), catalog=cat, run_id="p")
+    for stage, (rows, parts) in PINNED_LINEAGE[case].items():
+        man = cat.manifest(stage, f"p-{stage}")
+        assert man["rows"] == rows, stage
+        got = [(p["partition_id"], p["rows"]) for p in man["lineage"]["partitions"]]
+        assert got == parts, stage
+        assert res.metrics[stage]["rows"] == rows
+
+
+def test_checkpoint_runs_plan_once(spark, tmp_path):
+    """A checkpointed stage's plan runs in the snapshot write only: a
+    Python UDF in it sees each row once, and reading the committed
+    snapshot back does not run it again."""
+    from pyspark.sql import functions as F
+
+    from cordon_spark.operators.metrics import StageMetrics
+    from cordon_spark.plans.pipeline import _checkpoint
+
+    seen = spark.sparkContext.accumulator(0)
+
+    @F.udf("boolean")
+    def keep(_id):
+        seen.add(1)
+        return True
+
+    def build():
+        return spark.range(0, 1000, numPartitions=4).filter(keep("id"))
+
+    cat = SnapshotCatalog(tmp_path / "wh")
+    metrics = StageMetrics()
+    df, resumed = _checkpoint(spark, cat, "r", "stage", build, metrics, resume=False)
+    assert not resumed
+    assert metrics.to_dict()["stage"]["rows"] == 1000
+    assert seen.value == 1000
+    assert df.count() == 1000
+    assert seen.value == 1000
+
+
+def test_read_plans_from_manifest_schema(spark, tiny_transcripts, tmp_path):
+    """`read` takes the schema the manifest recorded instead of inferring
+    it; for every table the pipeline writes that is the schema, and
+    those are the rows, a plain parquet read of the snapshot gives."""
     pdf, _ = tiny_transcripts
     df = spark.createDataFrame(pdf)
     cat = SnapshotCatalog(tmp_path / "wh")
-    analyze_transcripts(spark, df, AnalysisConfig(), catalog=cat, run_id="r9")
-    man = cat.manifest("scored_windows", "r9-scored_windows")
-    parts = man["lineage"]["partitions"]
-    assert parts and sum(p["rows"] for p in parts) == man["rows"]
+    analyze_transcripts(spark, df, AnalysisConfig(), catalog=cat, run_id="s")
+    for table in PIPELINE_TABLES:
+        got = cat.read(spark, table)
+        plain = spark.read.parquet(str(cat._data_dir(table, f"s-{table}")))
+        assert got.schema == plain.schema, table
+        assert sorted(got.collect()) == sorted(plain.collect()), table
 
 
 def test_mid_write_kill_recovers(spark, tiny_transcripts, tmp_path):

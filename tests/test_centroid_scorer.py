@@ -132,6 +132,34 @@ def test_knn_scorer_guard_refuses_above_limit(spark):
     assert ok.count() == 8
 
 
+def test_knn_scores_partition_invariant(spark):
+    """Exact kNN scores are bit-identical on 1 input partition and on
+    defaultParallelism partitions, and equal the kernel run over the
+    whole matrix at once (the oracle's call)."""
+    import pandas as pd
+
+    from cordon_spark import kernel
+    from cordon_spark.operators.scoring import score_windows_knn
+
+    rng = np.random.RandomState(26)
+    emb = kernel.l2_normalize(rng.randn(1203, 64))
+    pdf = pd.DataFrame(
+        {"conv_id": "c", "window_id": np.arange(len(emb)), "embedding": list(emb)}
+    )
+    windows = spark.createDataFrame(pdf)
+    cfg = AnalysisConfig(k_neighbors=5)
+    want = kernel.knn_scores(emb, emb, cfg.k_neighbors)
+
+    def scores(df):
+        out = score_windows_knn(spark, df, cfg).select("window_id", "score").toPandas()
+        return out.sort_values("window_id")["score"].to_numpy()
+
+    one = scores(windows.coalesce(1))
+    wide = scores(windows.repartition(spark.sparkContext.defaultParallelism))
+    assert np.array_equal(one, wide)
+    assert np.array_equal(one, want)
+
+
 def test_centroid_without_templates_uses_global(spark, tiny_df):
     cfg = AnalysisConfig(scorer="centroid")
     res = analyze_transcripts(spark, tiny_df, cfg)  # no templates

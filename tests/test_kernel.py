@@ -55,7 +55,7 @@ def test_query_partition_invariance():
     parts = np.concatenate(
         [kernel.knn_scores(emb[i : i + 7], emb, 5) for i in range(0, 50, 7)]
     )
-    assert np.allclose(full, parts, atol=1e-12)
+    assert np.array_equal(full, parts)
 
 
 def test_k_capped_at_n():
