@@ -56,7 +56,6 @@ class AnalysisConfig:
 
     # Spark execution knobs
     shuffle_partitions: int | None = None
-    salt_buckets: int = 0  # >0: salt pre-window repartition for long-conv skew
     # router strategy seam: broadcast range join while the merged-block
     # set fits a broadcast; above this many blocks the router switches
     # to the equi-join on (conv_id, window_id) vs significant windows

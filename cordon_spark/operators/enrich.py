@@ -29,40 +29,3 @@ def enrich_roles(turns: DataFrame, role_taxonomy: DataFrame) -> DataFrame:
     out = turns.join(F.broadcast(role_taxonomy), on="role", how="left")
     return out.withColumn("role_group", F.coalesce("role_group", F.lit("unknown")))
 
-
-def salted_join(
-    facts: DataFrame,
-    dim: DataFrame,
-    on: str,
-    buckets: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-defused equi-join for when the small side is too big to
-    broadcast AND the fact side has hot keys: salt the fact rows into
-    `buckets` sub-keys (uniform split of each hot key's rows across
-    `buckets` tasks) and EXPLODE the dim side x buckets so every salted
-    fact partition finds its match. The classic fix when AQE's
-    skew-join split cannot help — e.g. a subsequent aggregation keyed
-    on the join key would re-concentrate the hot key anyway, or the
-    skew is in the JOIN output (one dim row matching 10^8 fact rows).
-
-    Cost model: dim is replicated `buckets` times through the shuffle
-    (choose buckets ~ hot-key row count / healthy-task size, NOT large)
-    while the fact side pays only an 8-byte salt column. Join output
-    equals the unsalted join exactly (asserted in tests); `how` may be
-    'inner' or 'left' (fact-preserving).
-
-    The salt is a deterministic hash of a fact-side ROW identity
-    (monotonically_increasing_id is NOT used — it is
-    partitioning-dependent), so the plan is reproducible: salt =
-    xxhash64(whole row) % buckets, which distributes a hot key's rows
-    uniformly without needing any key statistics."""
-    if how not in ("inner", "left"):
-        raise ValueError(f"salted_join supports inner/left, got {how!r}")
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in facts.columns]), F.lit(buckets))
-    f = facts.withColumn("_salt", salt.cast("int"))
-    d = dim.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(buckets)]))
-    )
-    out = f.join(d, on=[on, "_salt"], how=how)
-    return out.drop("_salt")

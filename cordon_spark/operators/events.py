@@ -218,8 +218,7 @@ def asof_join(
     last(ignorenulls) — the classic distributed as-of that shuffles
     each side ONCE on the key and never builds the (left x right)
     range-join blowup. At 100 TB both sides stream through a single
-    sort-within-partition; skewed keys take the same salting hook as
-    any keyed op."""
+    sort-within-partition."""
     lcols = left.columns
     l = left.withColumn("_src", F.lit(1))
     r = right.select(

@@ -1,39 +1,9 @@
 """Multimodal column plumbing: image/audio/video as opaque binary
-columns with typed metadata.
-
-The Spark-side machinery (schemas, Arrow batch shape, mapInPandas
-signatures, partitioning) is real and tested; the actual media DECODE is
-stubbed behind a clearly-marked seam because no image/audio libraries
-exist in this container — `decode_fn=None` raises NotImplementedError,
-and tests inject a deterministic fake decoder."""
+columns with typed metadata computed JVM-side, without decoding."""
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
-
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),  # image | audio | video
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("meta", T.MapType(T.StringType(), T.StringType()), True),
-    ]
-)
-
-FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("n_bytes", T.LongType(), False),
-        T.StructField("content_md5", T.StringType(), False),
-        T.StructField("features", T.ArrayType(T.DoubleType()), True),
-    ]
-)
+from pyspark.sql import DataFrame, functions as F
 
 
 def binary_metadata(df: DataFrame, payload_col: str = "payload") -> DataFrame:
@@ -42,166 +12,3 @@ def binary_metadata(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     return df.withColumn("n_bytes", F.octet_length(payload_col).cast("long")).withColumn(
         "content_md5", F.md5(F.col(payload_col))
     )
-
-
-def _default_decode(kind: str, payload: bytes):  # the stub seam
-    raise NotImplementedError(
-        "media decode requires image/audio libraries not present in this "
-        "container; inject decode_fn (tests use a deterministic fake)"
-    )
-
-
-def extract_features(
-    media: DataFrame,
-    decode_fn: Callable[[str, bytes], np.ndarray] | None = None,
-    feature_dim: int = 8,
-) -> DataFrame:
-    """Decode + feature-extract via mapInPandas (Arrow batches, decoder
-    state loaded once per worker). decode_fn(kind, payload) -> 1-D
-    np.ndarray; None -> the NotImplementedError stub."""
-    decode = decode_fn or _default_decode
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in batches:
-            feats, nbytes, digests = [], [], []
-            for payload, kind in zip(pdf["payload"], pdf["kind"]):
-                raw = bytes(payload) if payload is not None else b""
-                nbytes.append(len(raw))
-                digests.append(hashlib.md5(raw).hexdigest())
-                vec = decode(kind, raw)
-                feats.append(
-                    None if vec is None else np.asarray(vec, dtype=np.float64)[:feature_dim]
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": pd.Series(nbytes, dtype="int64"),
-                    "content_md5": digests,
-                    "features": feats,
-                }
-            )
-
-    return media.mapInPandas(run, FEATURE_SCHEMA)
-
-
-def resize_nearest(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
-    """Nearest-neighbor resize of an (H, W[, C]) array — REAL math (pure
-    numpy index sampling, no image libs); only the codec around it is
-    stubbed. Index mapping: src = floor(dst * in/out), the standard
-    nearest-neighbor convention."""
-    in_h, in_w = img.shape[0], img.shape[1]
-    rows = np.minimum((np.arange(out_h) * in_h // out_h), in_h - 1)
-    cols = np.minimum((np.arange(out_w) * in_w // out_w), in_w - 1)
-    return img[rows[:, None], cols[None, :]]
-
-
-def sample_frame_indices(n_frames: int, n_samples: int) -> np.ndarray:
-    """Deterministic uniform frame sampling: n_samples indices evenly
-    spread over [0, n_frames) (first frame always included); zero-frame
-    media (corrupt/empty payload) yields no indices."""
-    if n_frames <= 0:
-        return np.zeros(0, dtype=np.int64)
-    n_samples = max(1, min(n_samples, n_frames))
-    return (np.arange(n_samples) * n_frames // n_samples).astype(np.int64)
-
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("height", T.IntegerType(), False),
-        T.StructField("width", T.IntegerType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-    ]
-)
-
-
-def resize_media(
-    media: DataFrame,
-    out_h: int,
-    out_w: int,
-    decode_fn: Callable[[str, bytes], np.ndarray] | None = None,
-    encode_fn: Callable[[np.ndarray], bytes] | None = None,
-) -> DataFrame:
-    """decode -> nearest-neighbor resize (real numpy) -> re-encode, as
-    mapInPandas over Arrow batches. decode_fn/encode_fn are the stubbed
-    codec seams (no media libs in this container; encode defaults to raw
-    ndarray bytes so the pipeline stays runnable and deterministic)."""
-    decode = decode_fn or _default_decode
-    encode = encode_fn or (lambda arr: np.ascontiguousarray(arr).tobytes())
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for payload, kind in zip(pdf["payload"], pdf["kind"]):
-                img = decode(kind, bytes(payload) if payload is not None else b"")
-                payloads.append(encode(resize_nearest(np.asarray(img), out_h, out_w)))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "height": pd.Series([out_h] * len(pdf), dtype="int32"),
-                    "width": pd.Series([out_w] * len(pdf), dtype="int32"),
-                    "payload": payloads,
-                }
-            )
-
-    return media.mapInPandas(run, RESIZED_SCHEMA)
-
-
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("frame_idx", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-    ]
-)
-
-
-def sample_frames(
-    media: DataFrame,
-    n_samples: int,
-    decode_fn: Callable[[str, bytes], list] | None = None,
-    encode_fn: Callable[[np.ndarray], bytes] | None = None,
-) -> DataFrame:
-    """Video frame sampling: decode a video payload to its frame list
-    (stubbed codec seam), keep `n_samples` uniformly-spread frames
-    (deterministic indices, real math), emit ONE ROW PER KEPT FRAME —
-    the mapInPandas fan-out shape (output rows != input rows) a real
-    frame-extraction pipeline needs."""
-    decode = decode_fn or _default_decode
-    encode = encode_fn or (lambda arr: np.ascontiguousarray(arr).tobytes())
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, payloads = [], [], []
-            for media_id, payload, kind in zip(
-                pdf["media_id"], pdf["payload"], pdf["kind"]
-            ):
-                frames = decode(kind, bytes(payload) if payload is not None else b"")
-                for fi in sample_frame_indices(len(frames), n_samples):
-                    ids.append(media_id)
-                    idxs.append(int(fi))
-                    payloads.append(encode(np.asarray(frames[fi])))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int64"),
-                    "payload": payloads,
-                }
-            )
-
-    return media.mapInPandas(run, FRAME_SCHEMA)
-
-
-def fake_decoder(kind: str, payload: bytes) -> np.ndarray:
-    """Deterministic stand-in decoder for tests: hashes the payload into
-    a fixed-dim feature vector (the Spark plumbing around it is what's
-    under test)."""
-    import hashlib
-
-    h = hashlib.md5(payload).digest()
-    return np.frombuffer(h[:8], dtype=np.uint8).astype(np.float64)

@@ -17,9 +17,7 @@ text (reader.py:25) while the raw text is kept alongside for routing
 At 100 TB: input is partitioned by conv_id buckets; the groupBy
 shuffles on (conv_id, window_id) with map-side partial aggregation
 (min/max/count combine; collect_list partials are bounded by
-window_size). Optional salting hook: cfg.salt_buckets adds an explicit
-repartition on (conv_id, window_id) before the agg so AQE can split
-hot files.
+window_size).
 """
 
 from __future__ import annotations
@@ -72,8 +70,6 @@ def segment_windows(
     df = df.withColumn(
         "window_id", (F.col("turn_idx") / F.lit(cfg.window_size)).cast("long")
     )
-    if cfg.salt_buckets > 0:
-        df = df.repartition(cfg.salt_buckets, "conv_id", "window_id")
     ordered = F.array_sort(F.collect_list(F.struct("turn_idx", "text_stripped")))
     aggs = [
         F.min("turn_idx").alias("start_idx"),

@@ -1,17 +1,13 @@
-"""Snapshot catalog: Iceberg-semantics table IO with a parquet fallback.
+"""Snapshot catalog: Iceberg-semantics table IO over parquet.
 
 The north rule requires Iceberg tables with snapshot-checkpoint resume.
-This sandbox has no iceberg-spark-runtime jar (SURVEY.md §7.3), so table
-IO is abstracted behind `Catalog`:
-
-  * `IcebergCatalog` — thin veneer over `spark.read/write.format
-    ("iceberg")` used when the runtime jar + catalog conf are present.
-  * `SnapshotCatalog` — parquet + atomic JSON manifest emulation of the
-    snapshot model: every write lands in an immutable
-    `data/snapshot=<id>/` directory, a manifest records row count,
-    schema and lineage, and `_current.json` is flipped with os.replace
-    (atomic on POSIX) — giving Iceberg-like snapshot isolation,
-    time travel by snapshot id, and idempotent resume.
+There is no iceberg-spark-runtime jar to run against (SURVEY.md §7.3),
+so `SnapshotCatalog` emulates the snapshot model with parquet + atomic
+JSON manifests: every write lands in an immutable
+`data/snapshot=<id>/` directory, a manifest records row count, schema
+and lineage, and `_current.json` is flipped with os.replace (atomic on
+POSIX) — giving Iceberg-like snapshot isolation, time travel by
+snapshot id, and idempotent resume.
 
 Resume contract (mirrors the reference benchmark's --resume,
 benchmark/evaluate.py:898-965): a pipeline stage keyed by
@@ -78,7 +74,6 @@ class SnapshotCatalog:
         table: str,
         snapshot_id: str,
         lineage: dict | None = None,
-        mode: str = "overwrite",
     ) -> dict:
         """Write df as a new immutable snapshot and atomically commit it
         as current. Returns the manifest.
@@ -87,9 +82,11 @@ class SnapshotCatalog:
         `lineage["partitions"]` ([{partition_id, rows}], the write
         tasks' partition ids and row counts, empty partitions omitted)
         come from the footers of the files it wrote; the caller's
-        lineage keys are recorded next to them."""
+        lineage keys are recorded next to them. Writing an existing
+        snapshot id replaces its data, so a half-written stage reruns
+        cleanly."""
         data_dir = self._data_dir(table, snapshot_id)
-        df.write.mode(mode).parquet(str(data_dir))
+        df.write.mode("overwrite").parquet(str(data_dir))
         partitions = _footer_partitions(data_dir)
         manifest = {
             "table": table,
@@ -250,18 +247,3 @@ class SnapshotCatalog:
             )
         return manifest
 
-
-def make_catalog(root: str | Path, spark: SparkSession | None = None):
-    """Factory: Iceberg when a runtime catalog is configured, else the
-    parquet snapshot emulation (always available in this sandbox)."""
-    if spark is not None:
-        has_iceberg = any(
-            "iceberg" in str(v).lower()
-            for k, v in spark.sparkContext.getConf().getAll()
-            if k.startswith("spark.sql.catalog")
-        )
-        if has_iceberg:  # pragma: no cover - no jar in sandbox
-            from cordon_spark.sources.iceberg import IcebergCatalog
-
-            return IcebergCatalog(root)
-    return SnapshotCatalog(root)

@@ -23,7 +23,8 @@ Implementation is Spark-first and skew-resistant:
 2. Bucket assignment is a JVM-side fold over the literal cutpoint
    array (`F.aggregate` — whole-stage codegen, no Python in the hot
    path), bit interleave is shift/or arithmetic.
-3. `repartitionByRange` on the z-value (one shuffle, sampled range
+3. `SnapshotCatalog.cluster` writes the clustered snapshot:
+   `repartitionByRange` on the z-value (one shuffle, sampled range
    boundaries => near-equal file sizes) + `sortWithinPartitions` so
    row groups inside each file are tight too.
 
@@ -102,28 +103,6 @@ def zorder_value(
             z = z.bitwiseOR(F.shiftleft(bit, i * k + j))
     out = df.withColumn("_zval", z)
     return out, {"cols": cols, "bits_per_col": bits_per_col, "cuts": cuts}
-
-
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    n_files: int,
-    bits_per_col: int = 8,
-    mode: str = "overwrite",
-) -> dict:
-    """Write df z-order-clustered on `cols` into ~n_files files: one
-    range shuffle on the z-value, in-partition sort, `_zval` dropped
-    from the stored schema."""
-    zdf, info = zorder_value(df, cols, bits_per_col)
-    (
-        zdf.repartitionByRange(max(1, n_files), "_zval")
-        .sortWithinPartitions("_zval")
-        .drop("_zval")
-        .write.mode(mode)
-        .parquet(path)
-    )
-    return info
 
 
 def file_locality(df_with_file: DataFrame, cols: list[str]) -> DataFrame:

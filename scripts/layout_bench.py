@@ -2,10 +2,11 @@
 per-file envelope shrink and the file-pruning rate the clustered
 layout buys on the 100k-row events table.
 
-Compares three layouts of the SAME data at the same file count:
+Compares three snapshots of the SAME data at the same file count:
   time     repartitionByRange(ts) — the natural ingest order
   user     repartitionByRange(user_id) — fixes user filters, breaks time
-  zorder   zorder_write on (user_id, ts) — both dimensions prunable
+  zorder   SnapshotCatalog.cluster of `time` on (user_id, ts) — both
+           dimensions prunable
 
 For each layout: mean per-file [min,max] envelope as a fraction of the
 global range for BOTH columns (file_locality), plus the fraction of
@@ -35,24 +36,36 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from cordon_spark.session import get_spark
-    from cordon_spark.sources.layout import file_locality, zorder_write
+    from cordon_spark.sources.catalog import SnapshotCatalog
+    from cordon_spark.sources.layout import file_locality
 
     spark = get_spark("layout_bench", master="local[8]", shuffle_partitions=32)
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    tmp = Path(tempfile.mkdtemp(prefix="layout_bench_"))
+    cat = SnapshotCatalog(tempfile.mkdtemp(prefix="layout_bench_"))
 
     t0 = time.perf_counter()
-    ev.repartitionByRange(n_files, "ts").sortWithinPartitions("ts").write.parquet(
-        str(tmp / "time")
+    cat.write_snapshot(
+        ev.repartitionByRange(n_files, "ts").sortWithinPartitions("ts"),
+        "events",
+        "time",
     )
     t_time = time.perf_counter() - t0
     t0 = time.perf_counter()
-    ev.repartitionByRange(n_files, "user_id").sortWithinPartitions(
-        "user_id"
-    ).write.parquet(str(tmp / "user"))
+    cat.write_snapshot(
+        ev.repartitionByRange(n_files, "user_id").sortWithinPartitions("user_id"),
+        "events",
+        "user",
+    )
     t_user = time.perf_counter() - t0
     t0 = time.perf_counter()
-    zorder_write(ev, str(tmp / "zorder"), ["user_id", "ts"], n_files=n_files)
+    cat.cluster(
+        spark,
+        "events",
+        ["user_id", "ts"],
+        snapshot_id="time",
+        n_files=n_files,
+        new_snapshot_id="zorder",
+    )
     t_z = time.perf_counter() - t0
 
     # probe sets: 20 users spread over the id range, 20 time windows
@@ -69,9 +82,7 @@ def main() -> None:
 
     out = {"sf_dir": sf_dir, "n_files": n_files, "layouts": {}}
     for name, secs in (("time", t_time), ("user", t_user), ("zorder", t_z)):
-        df = spark.read.parquet(str(tmp / name)).withColumn(
-            "_file", F.input_file_name()
-        )
+        df = cat.read(spark, "events", name).withColumn("_file", F.input_file_name())
         loc = file_locality(df, ["user_id", "ts"]).collect()
         n = len(loc)
         mean_u = sum(r["frac_user_id"] for r in loc) / n

@@ -109,11 +109,11 @@ class _PlanLineageCatalog(SnapshotCatalog):
         super().__init__(root)
         self.plan_lineage = {}
 
-    def write_snapshot(self, df, table, snapshot_id, lineage=None, mode="overwrite"):
+    def write_snapshot(self, df, table, snapshot_id, lineage=None):
         self.plan_lineage[table] = sorted(
             (r.partition_id, r.rows) for r in partition_lineage(df, table).collect()
         )
-        return super().write_snapshot(df, table, snapshot_id, lineage, mode)
+        return super().write_snapshot(df, table, snapshot_id, lineage)
 
 
 def test_lineage_recorded(spark, tiny_transcripts, tmp_path):

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cordon_spark.sources.catalog import SnapshotCatalog
-from cordon_spark.sources.layout import file_locality, zorder_value, zorder_write
+from cordon_spark.sources.layout import file_locality, zorder_value
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -84,29 +84,31 @@ def test_zorder_skew_resistant_buckets(spark):
     assert sum(sizes[b] for b in tail_buckets) == 100
 
 
-def test_zorder_write_improves_both_column_envelopes(spark, tmp_path):
+def test_cluster_improves_both_column_envelopes(spark, tmp_path):
     """The measured claim: events written in natural (time) order have
     full-range user_id envelopes in every file (a user_id filter scans
-    all of them); z-ordered by (user_id, ts) BOTH columns' mean
+    all of them); clustered by (user_id, ts) BOTH columns' mean
     per-file envelope shrinks far below 1, so either predicate can
     skip most files."""
+    cat = SnapshotCatalog(tmp_path / "wh")
     ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    plain, zpath = str(tmp_path / "plain"), str(tmp_path / "zord")
     # natural layout: time-ordered, 16 files
-    ev.orderBy("ts").repartitionByRange(16, "ts").write.parquet(plain)
+    cat.write_snapshot(ev.orderBy("ts").repartitionByRange(16, "ts"), "events", "time")
     # 16 z-files => the top 4 z-bits split ~2 bits per dimension
-    zorder_write(ev, zpath, ["user_id", "ts"], n_files=16)
+    zsid = cat.cluster(spark, "events", ["user_id", "ts"], n_files=16)["snapshot_id"]
 
-    def mean_fracs(path):
-        df = spark.read.parquet(path).withColumn("_file", F.input_file_name())
-        loc = file_locality(df, ["user_id", "ts"])
+    def with_file(sid):
+        return cat.read(spark, "events", sid).withColumn("_file", F.input_file_name())
+
+    def mean_fracs(sid):
+        loc = file_locality(with_file(sid), ["user_id", "ts"])
         row = loc.agg(
             F.avg("frac_user_id").alias("u"), F.avg("frac_ts").alias("t")
         ).collect()[0]
         return float(row["u"]), float(row["t"])
 
-    u_plain, _t_plain = mean_fracs(plain)
-    u_z, t_z = mean_fracs(zpath)
+    u_plain, _t_plain = mean_fracs("time")
+    u_z, t_z = mean_fracs(zsid)
     assert u_plain > 0.8  # time-ordered files see every user
     assert u_z < 0.6 * u_plain  # user envelope shrinks sharply...
     assert t_z < 0.6  # ...while time stays prunable too (vs 1.0 if
@@ -114,8 +116,7 @@ def test_zorder_write_improves_both_column_envelopes(spark, tmp_path):
 
     # pruning proxy: for a point user filter, most z-ordered files'
     # [min,max] envelope excludes the user entirely
-    df = spark.read.parquet(zpath).withColumn("_file", F.input_file_name())
-    loc = file_locality(df, ["user_id"]).collect()
+    loc = file_locality(with_file(zsid), ["user_id"]).collect()
     target = 3.0
     prunable = [
         r for r in loc if not (r["min_user_id"] <= target <= r["max_user_id"])

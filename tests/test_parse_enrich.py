@@ -4,8 +4,6 @@ enrichment joins."""
 import pandas as pd
 import re
 
-from pyspark.sql import functions as F
-
 from cordon_spark.datagen import TEMPLATES, tool_registry_pdf, role_taxonomy_pdf
 from cordon_spark.operators.enrich import enrich_roles, enrich_tools
 from cordon_spark.operators.parse import compile_templates, extract_templates
@@ -103,73 +101,3 @@ def test_pipeline_routes_enriched_turns(spark):
     finally:
         plain.unpersist()
         enriched.unpersist()
-
-
-def test_salted_join_equals_plain_join(spark):
-    """salted_join output == the unsalted join as a multiset, for
-    inner AND fact-preserving left, on a corpus with one hot key that
-    owns 90% of the fact rows and a dim key with no fact match."""
-    from pyspark.sql import functions as F
-
-    from cordon_spark.operators.enrich import salted_join
-
-    hot = spark.range(0, 900).select(F.lit(7).alias("k"), F.col("id").alias("v"))
-    tail = spark.range(0, 100).select(
-        (F.col("id") % 10).alias("k"), (F.col("id") + 10_000).alias("v")
-    )
-    facts = hot.union(tail)
-    dim = spark.createDataFrame(
-        [(k, f"d{k}") for k in range(12)], "k long, label string"
-    )  # keys 10,11 match nothing; fact key 7 is hot
-    for how in ("inner", "left"):
-        plain = facts.join(dim, on="k", how=how)
-        salted = salted_join(facts, dim, on="k", buckets=8, how=how)
-        assert sorted(map(tuple, plain.collect())) == sorted(
-            map(tuple, salted.collect())
-        ), how
-
-
-def test_salted_join_spreads_hot_key_across_partitions(spark):
-    """The point of the salt: the hot key's rows must land in MANY
-    shuffle partitions (the plain join concentrates them in one)."""
-    from pyspark.sql import functions as F
-
-    from cordon_spark.operators.enrich import salted_join
-
-    # 90% of rows on key 7, the rest spread — k must stay non-constant
-    # or Catalyst constant-folds it out of the join keys entirely
-    facts = spark.range(0, 2000).select(
-        F.when(F.col("id") < 1800, F.lit(7)).otherwise(F.col("id") % 5).alias("k"),
-        F.col("id").alias("v"),
-    )
-    dim = spark.createDataFrame(
-        [(k, f"d{k}") for k in (7, 0, 1, 2, 3, 4)], "k long, label string"
-    )
-
-    salted = salted_join(facts, dim.hint("shuffle_hash"), on="k", buckets=4)
-    plan = salted._jdf.queryExecution().executedPlan().toString()
-    # the exchange must key on (k, _salt) — the hot key hashes to 4
-    # distinct shuffle keys instead of 1 (AQE may still coalesce the
-    # tiny TEST partitions afterwards; the key space is the mechanism)
-    assert "hashpartitioning(k" in plan and "_salt" in plan, plan
-    # and the salt actually splits the hot key's rows
-    n_salts = (
-        facts.withColumn(
-            "_salt",
-            F.pmod(F.xxhash64(*[F.col(c) for c in facts.columns]), F.lit(4)),
-        )
-        .select("_salt")
-        .distinct()
-        .count()
-    )
-    assert n_salts == 4
-
-
-def test_salted_join_rejects_unsupported_how(spark):
-    import pytest as _pytest
-
-    from cordon_spark.operators.enrich import salted_join
-
-    df = spark.range(1).select(F.col("id").alias("k"))
-    with _pytest.raises(ValueError):
-        salted_join(df, df, on="k", how="right")

@@ -146,16 +146,6 @@ def test_planted_anomalies_found(spark):
     assert found == total  # every planted burst overlapped by a block
 
 
-def test_salted_repartition_same_result(spark, tiny_transcripts, tiny_df):
-    # cfg.salt_buckets forces an explicit pre-window repartition (the
-    # long-conversation skew hook); results must be identical
-    pdf, _ = tiny_transcripts
-    base = analyze_transcripts(spark, tiny_df, AnalysisConfig())
-    salted = analyze_transcripts(spark, tiny_df, AnalysisConfig(salt_buckets=7))
-    assert _block_set(base.blocks.toPandas()) == _block_set(salted.blocks.toPandas())
-    assert base.counts == salted.counts
-
-
 def test_windowed_router_equals_broadcast_router(spark, tiny_transcripts, tiny_df):
     """The equi-join scale router must route every turn identically to
     the broadcast range-join router (blocks are exactly the union of

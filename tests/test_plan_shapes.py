@@ -65,6 +65,12 @@ def test_windowed_segmentation_single_shuffle(spark):
 
     c = _counts(Q.QUERIES["window_segment"](spark, SF_DIR))
     assert c["shuffles"] == 1, c["plan"]
+    # the one keyed exchange is the groupBy's own requirement, not an
+    # explicit repartition, and the map-side combine (the partial
+    # aggregation) runs below it
+    keyed = [ln for ln in c["plan"].splitlines() if "Exchange hashpartitioning" in ln]
+    assert len(keyed) == 1 and "REPARTITION_BY_NUM" not in keyed[0], c["plan"]
+    assert "partial_min(turn_idx" in c["plan"].split(keyed[0], 1)[1], c["plan"]
 
 
 def test_scan_pushdown_reaches_parquet(spark):

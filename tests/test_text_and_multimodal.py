@@ -1,9 +1,7 @@
-"""Text-analysis functions and multimodal binary plumbing."""
+"""Text-analysis functions and multimodal binary metadata."""
 
-import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from cordon_spark.functions import text as TX
 from cordon_spark.operators import multimodal as MM
@@ -54,6 +52,10 @@ def test_fingerprint_stable_and_discriminative(spark, docs):
 
 
 def test_multimodal_metadata_and_features(spark):
+    """binary_metadata's features of an opaque payload: byte length and
+    md5, computed JVM-side without decoding."""
+    import hashlib
+
     pdf = pd.DataFrame(
         {
             "media_id": pd.Series([1, 2], dtype="int64"),
@@ -64,129 +66,9 @@ def test_multimodal_metadata_and_features(spark):
     )
     media = spark.createDataFrame(pdf)
     meta = {r.media_id: r for r in MM.binary_metadata(media).collect()}
-    assert meta[1].n_bytes == len(b"\x89PNG-fake-bytes")
-
-    feats = {r.media_id: r for r in MM.extract_features(media, MM.fake_decoder).collect()}
-    assert len(feats[1].features) == 8
-    # deterministic fake decode: same payload -> same features
-    again = {r.media_id: r for r in MM.extract_features(media, MM.fake_decoder).collect()}
-    assert list(feats[2].features) == list(again[2].features)
-    import hashlib
-
-    assert feats[1].content_md5 == hashlib.md5(b"\x89PNG-fake-bytes").hexdigest()
-
-
-def test_multimodal_decode_stub_raises(spark):
-    pdf = pd.DataFrame(
-        {
-            "media_id": pd.Series([1], dtype="int64"),
-            "kind": ["video"],
-            "payload": [b"x"],
-            "mime": ["video/mp4"],
-        }
-    )
-    media = spark.createDataFrame(pdf)
-    with pytest.raises(Exception, match="NotImplementedError|decode"):
-        MM.extract_features(media, None).collect()
-
-
-def test_resize_nearest_exact():
-    import numpy as np
-
-    from cordon_spark.operators import multimodal as MM
-
-    img = np.arange(16).reshape(4, 4)
-    got = MM.resize_nearest(img, 2, 2)
-    assert got.tolist() == [[0, 2], [8, 10]]  # floor(dst*in/out) sampling
-    up = MM.resize_nearest(np.array([[1, 2], [3, 4]]), 4, 4)
-    assert up.tolist() == [
-        [1, 1, 2, 2], [1, 1, 2, 2], [3, 3, 4, 4], [3, 3, 4, 4],
-    ]
-    assert MM.sample_frame_indices(10, 4).tolist() == [0, 2, 5, 7]
-    assert MM.sample_frame_indices(3, 10).tolist() == [0, 1, 2]  # capped
-
-
-def test_resize_media_pipeline(spark):
-    import numpy as np
-    import pandas as pd
-
-    from cordon_spark.operators import multimodal as MM
-
-    def img_decoder(kind, payload):
-        # fake codec: payload bytes ARE the row-major uint8 pixels, 4x4
-        return np.frombuffer(payload, dtype=np.uint8).reshape(4, 4)
-
-    pdf = pd.DataFrame(
-        {
-            "media_id": pd.Series([1, 2], dtype="int64"),
-            "kind": ["image", "image"],
-            "payload": [bytes(range(16)), bytes(range(16, 32))],
-            "mime": ["image/raw", "image/raw"],
-            "meta": [{}, {}],
-        }
-    )
-    media = spark.createDataFrame(pdf, MM.MEDIA_SCHEMA)
-    out = MM.resize_media(media, 2, 2, decode_fn=img_decoder).orderBy("media_id").collect()
-    assert [(r.media_id, r.height, r.width) for r in out] == [(1, 2, 2), (2, 2, 2)]
-    assert list(bytes(out[0].payload)) == [0, 2, 8, 10]
-    # stub seam: no decoder -> NotImplementedError surfaces from workers
-    import pytest
-    from py4j.protocol import Py4JJavaError  # noqa: F401
-
-    with pytest.raises(Exception, match="NotImplementedError|media decode"):
-        MM.resize_media(media, 2, 2).collect()
-
-
-def test_sample_frames_fanout(spark):
-    import numpy as np
-    import pandas as pd
-
-    from cordon_spark.operators import multimodal as MM
-
-    def video_decoder(kind, payload):
-        # fake codec: one frame per byte, each frame a 1x1 array
-        return [np.array([[b]], dtype=np.uint8) for b in payload]
-
-    pdf = pd.DataFrame(
-        {
-            "media_id": pd.Series([7], dtype="int64"),
-            "kind": ["video"],
-            "payload": [bytes(range(10))],
-            "mime": ["video/raw"],
-            "meta": [{}],
-        }
-    )
-    media = spark.createDataFrame(pdf, MM.MEDIA_SCHEMA)
-    out = MM.sample_frames(media, 4, decode_fn=video_decoder).orderBy("frame_idx").collect()
-    assert [(r.media_id, r.frame_idx) for r in out] == [(7, 0), (7, 2), (7, 5), (7, 7)]
-    assert [bytes(r.payload)[0] for r in out] == [0, 2, 5, 7]
-
-
-def test_sample_frames_zero_frame_media(spark):
-    """Zero-frame (corrupt/empty) media yields no rows instead of
-    crashing the task."""
-    import numpy as np
-    import pandas as pd
-
-    from cordon_spark.operators import multimodal as MM
-
-    assert MM.sample_frame_indices(0, 4).tolist() == []
-
-    def video_decoder(kind, payload):
-        return [np.array([[b]], dtype=np.uint8) for b in payload]
-
-    pdf = pd.DataFrame(
-        {
-            "media_id": pd.Series([1, 2], dtype="int64"),
-            "kind": ["video", "video"],
-            "payload": [b"", bytes(range(4))],
-            "mime": ["video/raw"] * 2,
-            "meta": [{}, {}],
-        }
-    )
-    media = spark.createDataFrame(pdf, MM.MEDIA_SCHEMA)
-    out = MM.sample_frames(media, 2, decode_fn=video_decoder).collect()
-    assert {r.media_id for r in out} == {2}  # empty video contributes nothing
+    for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
+        assert meta[media_id].n_bytes == len(payload)
+        assert meta[media_id].content_md5 == hashlib.md5(payload).hexdigest()
 
 
 def test_repetition_cols_planted(spark):
