@@ -4,8 +4,8 @@ Mirrors the reference's AnalysisConfig surface and eager validation
 (src/cordon/core/config.py:5-96): window_size=4, k_neighbors=5,
 anomaly_percentile=0.1, optional percentile band
 (anomaly_range_min/max), pluggable embedding backend, batch sizing.
-Spark-specific knobs (embedding_dim, scorer, shuffle sizing) are added
-for the distributed execution model.
+Spark-specific knobs (embedding_dim, scorer, knn_max_windows) are
+added for the distributed execution model.
 """
 
 from __future__ import annotations
@@ -53,14 +53,6 @@ class AnalysisConfig:
     # pointer at scorer="centroid" so defaults can't OOM the driver at
     # scale. 1M x 64d = ~0.5 GB broadcast — the sane ceiling.
     knn_max_windows: int = 1_000_000
-
-    # Spark execution knobs
-    shuffle_partitions: int | None = None
-    # router strategy seam: broadcast range join while the merged-block
-    # set fits a broadcast; above this many blocks the router switches
-    # to the equi-join on (conv_id, window_id) vs significant windows
-    # (identical output, no broadcast ceiling at 10^12 turns)
-    broadcast_blocks_limit: int = 5_000_000
 
     # optional remote-backend knobs (reference config.py:23-29)
     api_base: str | None = None

@@ -1,12 +1,15 @@
 """OP-8 (+graft router): blocks -> routed turn sinks + rendered blocks.
 
 Router (north_rule): every turn inside any merged anomalous block routes
-to the `anomalous` sink, everything else to `routine`. Spark spelling: a
-RANGE JOIN of the (small) blocks table onto the (huge) turns table —
-blocks are the post-threshold minority, so we BROADCAST them; the range
-predicate `turn_idx between start_idx and end_idx` plus the conv_id
-equi-key makes this a broadcast hash join with a residual filter — no
-shuffle of the big side.
+to the `anomalous` sink, everything else to `routine`. Spark spelling:
+each block explodes into one row per turn it covers (`_block_turns`),
+and turns EQUI-join those rows on (conv_id, turn_idx) — a left join to
+route, an inner join to render. Merged blocks are disjoint per
+conversation, so a turn matches at most one row and no dedup is needed.
+No broadcast hint: Spark broadcasts the block turns while they are
+small and shuffle-joins them on the two keys when they are not, so a
+single huge conversation (a whole log file is one) is never a
+turns x blocks comparison.
 
 Formatting (formatter.py:15-68): the rendered `<block ...>` string uses
 the RAW (unstripped) turn text — the reference re-reads the original
@@ -18,86 +21,34 @@ half-even)."""
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
+
+
+def _block_turns(blocks: DataFrame) -> DataFrame:
+    """blocks -> one row per turn a block covers: the block's columns
+    (conv_id, start_idx, end_idx, ...) plus that turn's turn_idx."""
+    return blocks.select(
+        "*", F.explode(F.sequence("start_idx", "end_idx")).alias("turn_idx")
+    )
 
 
 def route_turns(
     turns: DataFrame, blocks: DataFrame, text_col: str = "text"
 ) -> DataFrame:
-    """turns + blocks -> (conv_id, turn_idx, text(raw), sink)."""
-    b = blocks.select("conv_id", "start_idx", "end_idx").alias("b")
-    t = turns.alias("t")
-    # merged blocks are DISJOINT per conversation (merger invariant), so
-    # each turn matches at most one block -> plain left broadcast join,
-    # no dedup aggregation, no shuffle of the big side.
-    joined = t.join(
-        F.broadcast(b),
-        (F.col("t.conv_id") == F.col("b.conv_id"))
-        & F.col("t.turn_idx").between(F.col("b.start_idx"), F.col("b.end_idx")),
-        "left",
+    """turns + blocks -> (conv_id, turn_idx, text(raw), ..., sink). Every
+    other column of turns (enrichment dims etc.) rides through unchanged
+    — the north_star routes ENRICHED turns."""
+    inside = _block_turns(blocks).select(
+        "conv_id", "turn_idx", F.lit("anomalous").alias("sink")
     )
-    return joined.select(
-        F.col("t.conv_id").alias("conv_id"),
-        F.col("t.turn_idx").alias("turn_idx"),
-        F.col(f"t.{text_col}").alias("text"),
-        *_extra_cols(turns, text_col),
-        F.when(F.col("b.start_idx").isNotNull(), F.lit("anomalous"))
-        .otherwise(F.lit("routine"))
-        .alias("sink"),
-    )
-
-
-def _extra_cols(turns: DataFrame, text_col: str):
-    """Carry every non-contract column (enrichment dims etc.) through
-    the router unchanged — the north_star routes ENRICHED turns."""
-    contract = {"conv_id", "turn_idx", text_col}
-    return [
-        F.col(f"t.{f.name}").alias(f.name)
-        for f in turns.schema.fields
-        if f.name not in contract
-    ]
-
-
-def route_turns_windowed(
-    turns: DataFrame,
-    significant: DataFrame,
-    window_size: int,
-    text_col: str = "text",
-) -> DataFrame:
-    """Scale-path router: EQUI-join on (conv_id, window_id) against the
-    significant-window set instead of broadcasting merged blocks.
-
-    Identical output to route_turns by construction: merged blocks are
-    exactly the union of significant windows' [start_idx, end_idx]
-    spans, and windows tile turn_idx contiguously — so `turn inside some
-    block` <=> `turn's own window (turn_idx // window_size) is
-    significant`. Use this when the anomalous fraction of a 10^12-turn
-    input makes the block set too large to broadcast (p=0.02 at 10^12
-    turns is ~10^10 block rows); the equi-join is a plain shuffle hash
-    join on fine-grained keys — skew-safe, no driver/executor-memory
-    ceiling. route_turns (broadcast range join, zero shuffle of the big
-    side) stays the fast path while blocks fit a broadcast."""
-    sig = significant.select("conv_id", "window_id").distinct().alias("s")
-    t = turns.withColumn(
-        "_wid", (F.col("turn_idx") / F.lit(window_size)).cast("long")
-    ).alias("t")
-    joined = t.join(
-        sig,
-        (F.col("t.conv_id") == F.col("s.conv_id"))
-        & (F.col("t._wid") == F.col("s.window_id")),
-        "left",
-    )
-    return joined.select(
-        F.col("t.conv_id").alias("conv_id"),
-        F.col("t.turn_idx").alias("turn_idx"),
-        F.col(f"t.{text_col}").alias("text"),
-        *_extra_cols(turns, text_col),
-        F.when(F.col("s.window_id").isNotNull(), F.lit("anomalous"))
-        .otherwise(F.lit("routine"))
-        .alias("sink"),
+    extra = [c for c in turns.columns if c not in ("conv_id", "turn_idx", text_col)]
+    return turns.join(inside, ["conv_id", "turn_idx"], "left").select(
+        "conv_id",
+        "turn_idx",
+        F.col(text_col).alias("text"),
+        *extra,
+        F.coalesce("sink", F.lit("routine")).alias("sink"),
     )
 
 
@@ -131,7 +82,7 @@ def render_blocks(
 ) -> DataFrame:
     """blocks + raw turn text -> rendered reference-format block strings.
 
-    Broadcast range join pulls each block's raw lines; the per-block
+    The turn-in-block join pulls each block's raw lines; the per-block
     ordered join + Python %.4f rendering happens in one grouped pandas
     UDF over (conv_id, start_idx) groups (each group is <= a few
     window_size spans of lines).
@@ -140,20 +91,10 @@ def render_blocks(
     inputs carry turn_idx = line_no - 1, and the reference renders
     1-INDEXED line numbers (formatter.py:54) — pass index_base=1 there;
     transcript tables keep their native 0-based turn indices."""
-    b = blocks.select("conv_id", "start_idx", "end_idx", "max_score").alias("b")
-    t = turns.select("conv_id", "turn_idx", F.col(text_col).alias("_raw")).alias("t")
-    joined = t.join(
-        F.broadcast(b),
-        (F.col("t.conv_id") == F.col("b.conv_id"))
-        & F.col("t.turn_idx").between(F.col("b.start_idx"), F.col("b.end_idx")),
-        "inner",
-    ).select(
-        F.col("t.conv_id").alias("conv_id"),
-        F.col("b.start_idx").alias("start_idx"),
-        F.col("b.end_idx").alias("end_idx"),
-        F.col("b.max_score").alias("max_score"),
-        F.col("t.turn_idx").alias("turn_idx"),
-        F.col("_raw"),
+    joined = (
+        turns.select("conv_id", "turn_idx", F.col(text_col).alias("_raw"))
+        .join(_block_turns(blocks), ["conv_id", "turn_idx"])
+        .select("conv_id", "start_idx", "end_idx", "max_score", "turn_idx", "_raw")
     )
 
     def render(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -9,8 +9,9 @@ the reference's metric set as DataFrame aggregations:
   inverse-frequency-weighted recall                 (evaluate.py:354-369)
 
 Flagged turns = turns inside any merged block (the flagged-range
-extraction of evaluate.py:255-261, relationally: a broadcast range
-join). All set algebra is joins/aggregations — no driver-side sets."""
+extraction of evaluate.py:255-261, relationally: the router's
+turn-in-block equi-join on (conv_id, turn_idx)). All set algebra is
+joins/aggregations — no driver-side sets."""
 
 from __future__ import annotations
 
@@ -19,17 +20,15 @@ import random
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from cordon_spark.operators.routing import _block_turns
+
 
 def flagged_turns(turns: DataFrame, blocks: DataFrame) -> DataFrame:
-    """(conv_id, turn_idx) inside any block — broadcast range join."""
-    b = blocks.select("conv_id", "start_idx", "end_idx").alias("b")
-    t = turns.select("conv_id", "turn_idx").alias("t")
-    return t.join(
-        F.broadcast(b),
-        (F.col("t.conv_id") == F.col("b.conv_id"))
-        & F.col("t.turn_idx").between(F.col("b.start_idx"), F.col("b.end_idx")),
-        "left_semi",
-    ).select("conv_id", "turn_idx")
+    """(conv_id, turn_idx) inside any block — a left-semi join to the
+    turns each block covers."""
+    return turns.select("conv_id", "turn_idx").join(
+        _block_turns(blocks), ["conv_id", "turn_idx"], "left_semi"
+    )
 
 
 def turn_level_metrics(

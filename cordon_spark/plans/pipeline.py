@@ -3,9 +3,9 @@
 Wires the stages parse -> window -> embed -> score -> threshold ->
 merge -> route -> sinks with:
 
-  * driver-side stage wall-clock timings + snapshot row counts
-    (StageMetrics; a lazy plan's work is charged to the stage whose
-    action runs it),
+  * per-stage snapshot records in `PipelineResult.metrics`
+    ({stage: {"rows": n}} for a written snapshot, {"resumed": 1.0} for
+    one read back on RESUME),
   * per-partition lineage records (north_rule), read from the parquet
     footers of the part files each snapshot write produced — the
     write is the only job that runs a checkpointed stage's plan,
@@ -28,12 +28,10 @@ from pyspark.sql import functions as F
 
 from cordon_spark.config import AnalysisConfig
 from cordon_spark.functions.embeddings import create_embedder
-from cordon_spark.operators import metrics as M
 from cordon_spark.operators import parse as P
 from cordon_spark.operators.merge import merge_blocks
 from cordon_spark.operators.routing import (
     route_turns,
-    route_turns_windowed,
     sink_counts,
     split_sinks,
 )
@@ -64,20 +62,19 @@ class PipelineResult:
 
 
 def _checkpoint(
-    spark, catalog, run_id, stage, df_builder, metrics: M.StageMetrics, resume: bool
-):
+    spark, catalog, run_id, stage, df_builder, metrics: dict, resume: bool
+) -> DataFrame:
     """Build-or-load a stage through the snapshot catalog; a built
     stage's plan runs once, in the snapshot write."""
     if catalog is None:
-        df = df_builder()
-        return df, False
+        return df_builder()
     snapshot_id = f"{run_id}-{stage}"
     if resume and catalog.has_snapshot(stage, snapshot_id):
-        metrics.add(stage, "resumed", 1.0)
-        return catalog.read(spark, stage, snapshot_id), True
-    manifest = catalog.write_snapshot(df_builder(), stage, snapshot_id)
-    metrics.add(stage, "rows", float(manifest["rows"]))
-    return catalog.read(spark, stage, snapshot_id), False
+        metrics[stage] = {"resumed": 1.0}
+    else:
+        manifest = catalog.write_snapshot(df_builder(), stage, snapshot_id)
+        metrics[stage] = {"rows": float(manifest["rows"])}
+    return catalog.read(spark, stage, snapshot_id)
 
 
 def analyze_transcripts(
@@ -92,7 +89,7 @@ def analyze_transcripts(
     role_taxonomy: DataFrame | None = None,
 ) -> PipelineResult:
     cfg = cfg or AnalysisConfig()
-    metrics = M.StageMetrics()
+    metrics: dict[str, dict[str, float]] = {}
     caches: list[DataFrame] = []
 
     # ---- enrich (north_star: broadcast lookup dims onto the turns the
@@ -100,20 +97,16 @@ def analyze_transcripts(
     if tool_registry is not None or role_taxonomy is not None:
         from cordon_spark.operators.enrich import enrich_roles, enrich_tools
 
-        metrics.start("enrich")
         if tool_registry is not None:
             transcripts = enrich_tools(transcripts, tool_registry)
         if role_taxonomy is not None:
             transcripts = enrich_roles(transcripts, role_taxonomy)
-        metrics.stop("enrich")
 
     # ---- parse (template extraction; feeds centroid signatures) ------
     turns = transcripts
     if templates or cfg.scorer == "centroid":
         tpls = templates or []
-        metrics.start("parse")
         turns = P.extract_templates(transcripts, tpls) if tpls else transcripts
-        metrics.stop("parse")
 
     # ---- window + embed + score (one composed plan, checkpointed) ----
     def build_scored() -> DataFrame:
@@ -147,23 +140,18 @@ def analyze_transcripts(
         # downstream (threshold/merge/route/stats) needs ids+bounds+score
         return scored_df.drop("embedding")
 
-    metrics.start("score")
-    scored, _ = _checkpoint(
+    scored = _checkpoint(
         spark, catalog, run_id, "scored_windows", build_scored, metrics, resume
     )
     if catalog is None:
         scored = scored.persist()
         caches.append(scored)
-    metrics.stop("score")
 
     # ---- threshold + score distribution (one percentile pass) --------
-    metrics.start("threshold")
     significant, lower, upper, dist_stats = TH.select_significant(scored, cfg)
-    metrics.stop("threshold")
 
     # ---- merge ---------------------------------------------------------
-    metrics.start("merge")
-    blocks, _ = _checkpoint(
+    blocks = _checkpoint(
         spark,
         catalog,
         run_id,
@@ -173,31 +161,19 @@ def analyze_transcripts(
         resume,
     )
     if catalog is None:
-        # blocks is tiny but feeds three consumers (router broadcast,
-        # count, rendering) — don't re-run the merge per action
+        # blocks is small but feeds three consumers (the router's
+        # turn-in-block join, count, rendering) — don't re-run the merge
+        # per action
         blocks = blocks.persist()
         caches.append(blocks)
-    metrics.stop("merge")
 
     # ---- route + sinks --------------------------------------------------
-    metrics.start("route")
-
-    def build_routed() -> DataFrame:
-        # broadcast range join while blocks fit; above the limit switch
-        # to the equi-join router (same output; no broadcast ceiling —
-        # at 10^12 turns the post-threshold block set can be billions
-        # of rows). limit-probe early-terminates, costing ~nothing.
-        probe = blocks.limit(cfg.broadcast_blocks_limit + 1).count()
-        if probe > cfg.broadcast_blocks_limit:
-            return route_turns_windowed(transcripts, significant, cfg.window_size)
-        return route_turns(transcripts, blocks)
-
-    routed, _ = _checkpoint(
+    routed = _checkpoint(
         spark,
         catalog,
         run_id,
         "routed_turns",
-        build_routed,
+        lambda: route_turns(transcripts, blocks),
         metrics,
         resume,
     )
@@ -208,15 +184,12 @@ def analyze_transcripts(
             sid = f"{run_id}-{name}"
             if not (resume and catalog.has_snapshot(name, sid)):
                 catalog.write_snapshot(df, name, sid)
-    metrics.stop("route", anomalous=counts["anomalous"], routine=counts["routine"])
 
     # ---- stats (OP-10) ---------------------------------------------------
-    metrics.start("stats")
     stats = dict(dist_stats)
     stats["total_windows"] = stats.pop("n")
     stats["significant_windows"] = significant.count()
     stats["merged_blocks"] = blocks.count()
-    metrics.stop("stats")
 
     return PipelineResult(
         caches=caches,
@@ -227,6 +200,6 @@ def analyze_transcripts(
         threshold_lower=lower,
         threshold_upper=upper,
         stats=stats,
-        metrics=metrics.to_dict(),
+        metrics=metrics,
         counts=counts,
     )

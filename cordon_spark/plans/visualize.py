@@ -85,13 +85,11 @@ def template_coverage_data(
     """Per-template occurrence counts + detected/missed flags over the
     ANOMALY templates (reference plot_template_coverage,
     visualize.py:388-489): a template is `detected` when any of its
-    anomalous turns falls inside a merged block. One broadcast range
+    anomalous turns falls inside a merged block. One turn-in-block
     join + one hash agg; output is O(#templates)."""
     from cordon_spark.plans.evaluate import flagged_turns
 
-    flagged = flagged_turns(turns, blocks).select("conv_id", "turn_idx").withColumn(
-        "_flag", F.lit(True)
-    )
+    flagged = flagged_turns(turns, blocks).withColumn("_flag", F.lit(True))
     per_tpl = (
         turns.filter(F.col(label_col))
         .join(flagged, on=["conv_id", "turn_idx"], how="left")

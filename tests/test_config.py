@@ -64,3 +64,25 @@ def test_validation_messages_match_reference():
         AnalysisConfig(anomaly_range_min=0.6, anomaly_range_max=0.4)
     with pytest.raises(ValueError, match="request_timeout must be > 0"):
         AnalysisConfig(request_timeout=0.0)
+
+
+def test_every_field_is_read():
+    """A config field the program never reads is a knob that does
+    nothing: each one except `extra` must appear as `.<field>` in some
+    module of the package other than config.py."""
+    import dataclasses
+    import re
+    from pathlib import Path
+
+    import cordon_spark
+
+    pkg = Path(cordon_spark.__file__).parent
+    src = "\n".join(
+        p.read_text() for p in pkg.rglob("*.py") if p.name != "config.py"
+    )
+    unread = [
+        f.name
+        for f in dataclasses.fields(AnalysisConfig)
+        if f.name != "extra" and not re.search(rf"\.{f.name}\b", src)
+    ]
+    assert unread == []

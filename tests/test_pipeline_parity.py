@@ -146,34 +146,45 @@ def test_planted_anomalies_found(spark):
     assert found == total  # every planted burst overlapped by a block
 
 
-def test_windowed_router_equals_broadcast_router(spark, tiny_transcripts, tiny_df):
-    """The equi-join scale router must route every turn identically to
-    the broadcast range-join router (blocks are exactly the union of
-    significant windows' spans), including when forced in the pipeline
-    via broadcast_blocks_limit=0."""
-    from cordon_spark.operators.routing import route_turns, route_turns_windowed
+def test_one_conversation_routes_and_renders_by_turn(spark):
+    """A log file is ONE conversation: 2,000 lines, 100+ disjoint
+    blocks whose bounds ignore window edges (a one-line block, blocks on
+    the first and last line). Routed sinks equal a pandas interval
+    lookup; rendered strings equal kernel.format_block on the raw
+    lines."""
+    from cordon_spark import kernel
+    from cordon_spark.operators.routing import route_turns
 
-    cfg = AnalysisConfig()
-    res = analyze_transcripts(spark, tiny_df, cfg)
-    try:
-        a = route_turns(tiny_df, res.blocks)
-        b = route_turns_windowed(tiny_df, res.significant, cfg.window_size)
-        ra = {(r.conv_id, r.turn_idx, r.text, r.sink) for r in a.collect()}
-        rb = {(r.conv_id, r.turn_idx, r.text, r.sink) for r in b.collect()}
-        assert ra == rb
-        counts = dict(res.counts)
-    finally:
-        res.unpersist()
-
-    # pipeline with the broadcast path disabled routes identically
-    res0 = analyze_transcripts(
-        spark, tiny_df, AnalysisConfig(broadcast_blocks_limit=0)
+    n, rng = 2000, np.random.default_rng(11)
+    bounds, s = [], 0
+    while s < n - 20:
+        e = s + int(rng.integers(0, 9))
+        bounds.append((s, e))
+        s = e + 2 + int(rng.integers(0, 15))
+    bounds.append((n - 3, n - 1))
+    assert len(bounds) >= 100 and any(a == b for a, b in bounds)
+    scores = rng.random(len(bounds))
+    lines = [f"line {i}" + " " * (i % 3) for i in range(n)]
+    turns = spark.createDataFrame(
+        pd.DataFrame({"conv_id": "file", "turn_idx": range(n), "text": lines}),
+        "conv_id string, turn_idx int, text string",
     )
-    try:
-        assert res0.counts == counts
-        r0 = {
-            (r.conv_id, r.turn_idx, r.text, r.sink) for r in res0.routed.collect()
-        }
-        assert r0 == ra
-    finally:
-        res0.unpersist()
+    blocks = spark.createDataFrame(
+        [("file", a, b, float(x)) for (a, b), x in zip(bounds, scores)],
+        "conv_id string, start_idx int, end_idx int, max_score double",
+    )
+
+    inside = pd.IntervalIndex.from_tuples(bounds, closed="both").get_indexer(range(n))
+    sink = np.where(inside >= 0, "anomalous", "routine")
+    want = {(i, lines[i], sink[i]) for i in range(n)}
+    got = {(r.turn_idx, r.text, r.sink) for r in route_turns(turns, blocks).collect()}
+    assert got == want
+
+    rendered = {
+        r.start_idx: r.block_text
+        for r in render_blocks(turns, blocks, index_base=1).collect()
+    }
+    assert rendered == {
+        a: kernel.format_block(a + 1, b + 1, float(x), lines[a : b + 1])
+        for (a, b), x in zip(bounds, scores)
+    }

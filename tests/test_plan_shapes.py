@@ -424,3 +424,27 @@ def test_centroid_scored_plan_is_one_map_in_pandas(spark):
         assert node not in p, f"{node} in centroid plan:\n{p}"
     python_nodes = set(re.findall(r"\b[A-Z]\w*(?:Python|Pandas|Arrow)\w*\b", p))
     assert python_nodes == {"MapInPandas"}, p
+
+
+def test_route_and_render_join_on_conv_and_turn(spark, tiny_df):
+    """Routing and rendering are one equi-join on (conv_id, turn_idx)
+    with no residual condition: a log file is one conversation, and a
+    `between` residual on a conv_id-only join compares each of its
+    turns with every block."""
+    import re
+
+    from cordon_spark.operators.routing import render_blocks
+    from cordon_spark.plans.pipeline import analyze_transcripts
+
+    res = analyze_transcripts(spark, tiny_df)
+    try:
+        for df in (res.routed, render_blocks(tiny_df, res.blocks)):
+            p = _plan(df)
+            assert "NestedLoopJoin" not in p and "CartesianProduct" not in p, p
+            line = next(ln for ln in p.splitlines() if "Join [" in ln)
+            m = re.search(r"Join \[(.*?)\], \[(.*?)\], \w+(.*)", line)
+            for keys in m.group(1, 2):
+                assert re.findall(r"(\w+)#\d+", keys) == ["conv_id", "turn_idx"], line
+            assert "(" not in m.group(3), line  # a join condition prints parenthesised
+    finally:
+        res.unpersist()
