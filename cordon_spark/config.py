@@ -43,7 +43,9 @@ class AnalysisConfig:
     n_gpu_layers: int = 0
     n_threads: int | None = None
     # reference's scoring batch knob (None = auto); when set it overrides
-    # kernel.KNN_CHUNK_SIZE in the exact-kNN kernel
+    # kernel.KNN_CHUNK_SIZE in the exact-kNN kernel. Chunks are zero-padded
+    # to a multiple of kernel.KNN_CANDIDATE_PAD (256) rows, so a chunk
+    # narrower than 256 rows is computed at 256 rows
     scoring_batch_size: int | None = None
 
     # scoring execution

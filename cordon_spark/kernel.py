@@ -22,6 +22,14 @@ Numeric contract:
     operand shape (a 1-row block takes a gemv path, a ragged block a
     different edge kernel), so an unpadded block can move a score by
     an ulp — enough to flip a window sitting on a percentile cut.
+  - a fixed query block fixes the shape but not the BLAS thread split:
+    OpenBLAS divides a product's columns among its threads, and a
+    ragged column edge lands in a different place at 1 and at 2
+    threads, which moves last-ulp bits. The Spark driver and its
+    Python workers need not run the same BLAS thread count, so each
+    candidate chunk is zero-padded to a multiple of KNN_CANDIDATE_PAD
+    rows and the pad columns are dropped before the clip and top-k.
+    Scores are then bit-identical at 1 and 2 BLAS threads.
 """
 
 from __future__ import annotations
@@ -38,6 +46,10 @@ KNN_CHUNK_SIZE = 8192
 # Query rows per dgemm in the exact-kNN kernel; the last block of a
 # batch is zero-padded to it (see the numeric contract above).
 KNN_QUERY_BLOCK = 64
+# Candidate chunks are zero-padded to a multiple of this many rows, so
+# the BLAS thread split never meets a ragged column edge (see the
+# numeric contract above).
+KNN_CANDIDATE_PAD = 256
 
 # Exactly the codepoints Python str.rstrip() strips (str.isspace() set),
 # because the reference strips with str.rstrip() (ingestion/reader.py:25).
@@ -175,8 +187,12 @@ def knn_scores(
     partial sort, distances clamped to [0, 2]. Queries go through in
     zero-padded KNN_QUERY_BLOCK-row blocks and candidate chunks start
     at absolute offsets, so a query's score does not depend on which
-    other queries share its call. Edge cases: 0 rows -> [], single
-    candidate -> score 0.0 (scorer.py:340-346).
+    other queries share its call. The fixed query block fixes the
+    dgemm shape but not the BLAS thread split, so each candidate chunk
+    is zero-padded once per call to a multiple of KNN_CANDIDATE_PAD
+    rows, and the pad columns are sliced off before the clip and
+    top-k: scores do not depend on the BLAS thread count. Edge cases:
+    0 rows -> [], single candidate -> score 0.0 (scorer.py:340-346).
     """
     nq = queries.shape[0]
     if nq == 0:
@@ -187,28 +203,32 @@ def knn_scores(
     # min(k+1, n) including the self slot (scorer.py:76-87)
     nn = min(k_neighbors + 1, n)
     candidates = np.asarray(candidates, dtype=np.float64)
+    dim = candidates.shape[1]
     padded = np.zeros(
-        (-(-nq // KNN_QUERY_BLOCK) * KNN_QUERY_BLOCK, candidates.shape[1]),
-        dtype=np.float64,
+        (-(-nq // KNN_QUERY_BLOCK) * KNN_QUERY_BLOCK, dim), dtype=np.float64
     )
     padded[:nq] = queries
-    out = np.empty(padded.shape[0], dtype=np.float64)
-    for qs in range(0, padded.shape[0], KNN_QUERY_BLOCK):
-        block = padded[qs : qs + KNN_QUERY_BLOCK]
-        top = np.full((KNN_QUERY_BLOCK, nn), np.inf, dtype=np.float64)
-        for cs in range(0, n, chunk_size):
-            ce = min(cs + chunk_size, n)
-            sims = block @ candidates[cs:ce].T
-            dists = np.clip(1.0 - sims, 0.0, 2.0)
-            combined = np.concatenate([top, dists], axis=1)
+    # running top-k per query; the chunk loop is outermost so each chunk
+    # is padded once, and every query block meets the chunks in offset order
+    top = np.full((padded.shape[0], nn), np.inf, dtype=np.float64)
+    for cs in range(0, n, chunk_size):
+        width = min(chunk_size, n - cs)
+        chunk = np.zeros(
+            (-(-width // KNN_CANDIDATE_PAD) * KNN_CANDIDATE_PAD, dim),
+            dtype=np.float64,
+        )
+        chunk[:width] = candidates[cs : cs + width]
+        for qs in range(0, padded.shape[0], KNN_QUERY_BLOCK):
+            sims = padded[qs : qs + KNN_QUERY_BLOCK] @ chunk.T
+            dists = np.clip(1.0 - sims[:, :width], 0.0, 2.0)
+            combined = np.concatenate([top[qs : qs + KNN_QUERY_BLOCK], dists], axis=1)
             if combined.shape[1] > nn:
                 part = np.argpartition(combined, nn - 1, axis=1)[:, :nn]
                 combined = np.take_along_axis(combined, part, axis=1)
             combined.sort(axis=1)
-            top = combined
-        # drop slot 0 (self), mean the rest (scorer.py:216-217)
-        out[qs : qs + KNN_QUERY_BLOCK] = top[:, 1:].mean(axis=1)
-    return out[:nq]
+            top[qs : qs + KNN_QUERY_BLOCK] = combined
+    # drop slot 0 (self), mean the rest (scorer.py:216-217)
+    return top[:nq, 1:].mean(axis=1)
 
 
 def centroid_scores_loo(
@@ -281,9 +301,21 @@ def _per_row(signatures, table: dict, default, dtype) -> np.ndarray:
 def exact_percentile(values: np.ndarray, pct: float) -> float:
     """np.percentile with linear interpolation — the reference's threshold
     definition (thresholder.py:71-73). Spark's exact `percentile` uses the
-    same definition; `percentile_approx` does NOT and must not be used for
-    the final threshold."""
+    same definition but other arithmetic ((hi - pos) * a + (pos - lo) * b),
+    which can land an ulp away and flip a window sitting on the cut, so
+    the Spark threshold plan interpolates with `lerp` instead;
+    `percentile_approx` does NOT use the definition and must not be used
+    for the final threshold."""
     return float(np.percentile(np.asarray(values, dtype=np.float64), pct))
+
+
+def lerp(a: float, b: float, t: float) -> float:
+    """np.percentile's interpolation between the order statistics `a` <=
+    `b` at weight `t` (the fraction of the rank (n - 1) * q), operation
+    for operation as numpy's `_lerp`: a + (b - a) * t below t = 0.5,
+    b - (b - a) * (1 - t) from it."""
+    d = b - a
+    return b - d * (1.0 - t) if t >= 0.5 else a + d * t
 
 
 def percentile_thresholds(scores: np.ndarray, cfg) -> tuple[float | None, float | None]:

@@ -1,10 +1,14 @@
 """OP-6: percentile threshold filter (thresholder.py:17-81).
 
 Numeric contract: the threshold is an EXACT percentile with linear
-interpolation — numpy's definition (thresholder.py:71-73). Spark's
-exact `percentile` aggregate implements the same definition;
-`percentile_approx` does not and is only used to BRACKET the threshold
-on the scale path.
+interpolation — numpy's definition (thresholder.py:71-73), bit for bit.
+Spark's exact `percentile` aggregate implements the same definition
+with other arithmetic and can land an ulp away, which flips a window
+sitting on the cut, so it is not used: the exact order statistics are
+interpolated on the driver with kernel.lerp (or, up to
+EXACT_PERCENTILE_DIRECT_LIMIT rows, kernel.exact_percentile runs over
+the collected column). `percentile_approx` does not implement the
+definition and is only used to BRACKET the threshold on the scale path.
 
 Tie rules copied verbatim (SURVEY.md §4), held only by
 select_significant:
@@ -14,7 +18,7 @@ select_significant:
 
 One percentile plan, thresholds_and_stats: a fused job computes
 count/min/max/avg plus percentile_approx brackets; up to
-EXACT_PERCENTILE_DIRECT_LIMIT rows one exact `percentile` job follows,
+EXACT_PERCENTILE_DIRECT_LIMIT rows one job collects the score column,
 above it the exact order statistics are refined from the bracketed band
 (SURVEY.md §7.5: an exact global percentile at 10^12 rows needs a
 global sort; the band is tiny).
@@ -24,16 +28,24 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from cordon_spark import kernel
 from cordon_spark.config import AnalysisConfig
 
-# above this many rows, bracket with approx before the exact pass —
-# Spark's exact percentile merges a per-value count map on one reducer,
-# which costs seconds by 2M distinct doubles; the bracketed path is
+# above this many rows, bracket with approx before the exact pass — the
+# direct pass collects every score to the driver; the bracketed path is
 # exact (test_threshold_scale) and stays cheap at any n
 EXACT_PERCENTILE_DIRECT_LIMIT = 500_000
 
 
-def _refine_brackets(df, col, qs, n_rows, a_los, a_his):
+def _direct_percentiles(df, col, pcts):
+    """Exact percentiles over the collected column: kernel.exact_percentile
+    (np.percentile), the oracle's call. Nulls are ignored, as Spark's
+    aggregates ignore them."""
+    vals = df.select(col).toPandas()[col].dropna().to_numpy(dtype="float64")
+    return [kernel.exact_percentile(vals, p) for p in pcts]
+
+
+def _refine_brackets(df, col, pcts, n_rows, a_los, a_his):
     """Exact refinement given approx brackets: one aggregate for the
     global rank offsets + one collect of the union of (tiny) bands.
 
@@ -58,8 +70,9 @@ def _refine_brackets(df, col, qs, n_rows, a_los, a_his):
         float(r[0]) for r in df.filter(band_pred).select(col).collect()
     )
     out = []
-    for i, q in enumerate(qs):
-        rank = (n_rows - 1) * q
+    for i, p in enumerate(pcts):
+        # np.percentile's virtual index and weight, from the same q
+        rank = (n_rows - 1) * (p / 100.0)
         lo_idx, hi_idx = int(rank), min(int(rank) + 1, n_rows - 1)
         n_below = int(below_row[f"b{i}"] or 0)
         # this quantile's slice of the collected union band
@@ -67,12 +80,9 @@ def _refine_brackets(df, col, qs, n_rows, a_los, a_his):
         pos_lo, pos_hi = lo_idx - n_below, hi_idx - n_below
         if not sub or pos_lo < 0 or pos_hi >= len(sub):
             # bracket missed (shouldn't happen) — fall back to direct exact
-            out.append(
-                float(df.select(F.expr(f"percentile({col}, {q!r})")).first()[0])
-            )
+            out.extend(_direct_percentiles(df, col, [p]))
             continue
-        frac = rank - lo_idx
-        out.append(sub[pos_lo] + (sub[pos_hi] - sub[pos_lo]) * frac)
+        out.append(kernel.lerp(sub[pos_lo], sub[pos_hi], rank - lo_idx))
     return out
 
 
@@ -105,14 +115,11 @@ def thresholds_and_stats(
     if n == 0:
         return None, None, {"min": 0.0, "max": 0.0, "mean": 0.0, "median": 0.0, "p90": 0.0, "n": 0}
     if n <= EXACT_PERCENTILE_DIRECT_LIMIT:
-        exact = scored.select(
-            F.expr(f"percentile({score_col}, array({','.join(repr(q) for q in qs)}))")
-        ).first()[0]
-        vals = [float(v) for v in exact]
+        vals = _direct_percentiles(scored, score_col, pcts)
     else:
         a_los = [float(row["bounds"][i]) for i in range(len(qs))]
         a_his = [float(row["bounds"][i + len(qs)]) for i in range(len(qs))]
-        vals = _refine_brackets(scored, score_col, qs, n, a_los, a_his)
+        vals = _refine_brackets(scored, score_col, pcts, n, a_los, a_his)
     stats = {
         "min": float(row["min"]),
         "max": float(row["max"]),

@@ -63,7 +63,14 @@ def pin_blas_threads() -> None:
     oversubscribes cores catastrophically (measured: local[32] SLOWER
     than local[8] on the k-NN matmul before this pin). Must run before
     the JVM (and its python workers) launch so the env is inherited.
-    The reference pins the same for its CI (.github/workflows/ci.yml:56)."""
+    The reference pins the same for its CI (.github/workflows/ci.yml:56).
+
+    The `setdefault` pins only the Python workers Spark launches after
+    it. It does not pin a driver that has already loaded numpy (its
+    BLAS read the variables at load time), and it never overrides a
+    value the caller set. So the driver and the workers may run
+    different BLAS thread counts, and kernel results must not rely on
+    this pin (see the numeric contract in cordon_spark.kernel)."""
     for var in _BLAS_VARS:
         os.environ.setdefault(var, "1")
 

@@ -1,6 +1,11 @@
 """Kernel behavioral parity with the reference's unit assertions
 (tests/test_analysis.py, tests/test_postprocess.py semantics)."""
 
+import os
+import pathlib
+import subprocess
+import sys
+
 import numpy as np
 import pytest
 
@@ -58,6 +63,36 @@ def test_query_partition_invariance():
     assert np.array_equal(full, parts)
 
 
+_THREADED_SCORES = """
+import sys
+import numpy as np
+sys.path.insert(0, sys.argv[1])
+from cordon_spark import kernel
+rng = np.random.RandomState(26)
+emb = kernel.l2_normalize(rng.randn(int(sys.argv[3]), int(sys.argv[4])))
+np.save(sys.argv[2], kernel.knn_scores(emb, emb, 5))
+"""
+
+
+@pytest.mark.parametrize("n,dim", [(1203, 64), (500, 384)])
+def test_scores_independent_of_blas_threads(tmp_path, n, dim):
+    """The Spark driver and its Python workers may run different BLAS
+    thread counts; the kernel's scores must not depend on it."""
+    root = str(pathlib.Path(__file__).resolve().parent.parent)
+    got = {}
+    for threads in ("1", "2"):
+        env = dict(os.environ, OPENBLAS_NUM_THREADS=threads, OMP_NUM_THREADS=threads)
+        out = tmp_path / f"scores_{threads}.npy"
+        subprocess.run(
+            [sys.executable, "-c", _THREADED_SCORES, root, str(out), str(n), str(dim)],
+            env=env,
+            check=True,
+        )
+        got[threads] = np.load(out)
+    assert got["1"].shape == (n,)
+    assert np.array_equal(got["1"], got["2"])
+
+
 def test_k_capped_at_n():
     # min(k+1, n), scorer.py:76-87
     emb = kernel.l2_normalize(np.eye(3))
@@ -80,6 +115,20 @@ def test_threshold_top10_of_100_ties():
     cfg = AnalysisConfig(anomaly_percentile=0.1)
     mask = kernel.select_mask(scores, cfg)
     assert 10 <= mask.sum() <= 11
+
+
+def test_lerp_matches_np_percentile():
+    """kernel.lerp over the two order statistics at numpy's virtual
+    index is np.percentile bit for bit, on both sides of t = 0.5."""
+    rng = np.random.RandomState(4)
+    for n in (2, 7, 18, 1000, 4007):
+        vals = np.sort(rng.lognormal(size=n))
+        for pct in (0.0, 5.0, 12.5, 50.0, 63.0, 90.0, 95.0, 98.0, 99.9, 100.0):
+            rank = (n - 1) * (pct / 100.0)
+            lo = int(rank)
+            hi = min(lo + 1, n - 1)
+            got = kernel.lerp(vals[lo], vals[hi], rank - lo)
+            assert got == np.percentile(vals, pct), (n, pct)
 
 
 def test_threshold_shortcuts():

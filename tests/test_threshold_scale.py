@@ -88,3 +88,49 @@ def test_keep_all_and_keep_none(spark, p, n_kept):
     # the stats contract holds in both shortcuts
     assert stats["n"] == 50
     assert stats["median"] == pytest.approx(np.percentile(vals, 50.0), abs=1e-12)
+
+
+def _ulp_case(n, rank, a, b):
+    """n scores in random order whose order statistics at `rank` and
+    `rank + 1` are a < b; every other score is far from both."""
+    rng = np.random.RandomState(11)
+    below = a * (0.5 + 0.49 * rng.rand(rank))
+    above = b + 0.01 + rng.rand(n - rank - 2)
+    return rng.permutation(np.concatenate([below, [a, b], above]))
+
+
+@pytest.mark.parametrize(
+    "vals, cfg",
+    [
+        # band upper cut at rank 3799.05: Spark's percentile arithmetic
+        # lands an ulp above a and keeps the window scoring exactly a
+        (
+            _ulp_case(4000, 3799, 0.14581239098399132, 0.1458123909839914),
+            AnalysisConfig(anomaly_range_min=0.05, anomaly_range_max=0.5),
+        ),
+        # percentile cut at rank 3925.88: numpy interpolates down from b
+        (
+            _ulp_case(4007, 3925, 0.04446784344627708, 0.04498015350617879),
+            AnalysisConfig(anomaly_percentile=0.02),
+        ),
+    ],
+)
+def test_thresholds_equal_numpy_bit_for_bit(spark, vals, cfg, monkeypatch):
+    """Both threshold paths give np.percentile's value exactly, so a
+    window sitting on the cut is kept or dropped as the oracle does."""
+    if cfg.range_mode:
+        want = (
+            np.percentile(vals, (1.0 - cfg.anomaly_range_max) * 100.0),
+            np.percentile(vals, (1.0 - cfg.anomaly_range_min) * 100.0),
+        )
+    else:
+        want = (np.percentile(vals, (1.0 - cfg.anomaly_percentile) * 100.0), None)
+    want_kept = set(np.flatnonzero(kernel.select_mask(vals, cfg)).tolist())
+    df = _scored(spark, vals)
+    for limit in (TH.EXACT_PERCENTILE_DIRECT_LIMIT, 1):
+        monkeypatch.setattr(TH, "EXACT_PERCENTILE_DIRECT_LIMIT", limit)
+        kept, lower, upper, stats = TH.select_significant(df, cfg)
+        assert (lower, upper) == want, limit
+        assert stats["median"] == np.percentile(vals, 50.0)
+        assert stats["p90"] == np.percentile(vals, 90.0)
+        assert _kept_ids(kept) == want_kept, limit
