@@ -75,11 +75,9 @@ class SemanticLogAnalyzer:
         try:
             # 1-indexed line numbers in the tags, like the reference
             rendered = render_blocks(transcripts, res.blocks, index_base=1)
-            # same driver-collect guard as the CLI's --max-render-rows
-            # (cli.py), in ONE job: collect at most max_rows+1 rows —
-            # driver memory stays bounded either way, and the common
-            # under-limit path does not pay a second full render pass
-            # for a separate probe count.
+            # the CLI's --max-render-rows guard (cli.py), in ONE job:
+            # collect at most max_rows+1 rows — driver memory stays
+            # bounded either way, and the render join runs once.
             max_rows = int(self.config.extra.get("max_render_rows", 1_000_000))
             rows = (
                 rendered.orderBy("conv_id", "start_idx")

@@ -171,24 +171,23 @@ def main(argv: list[str] | None = None) -> int:
                     lineage={"input": path, "stage": "rendered_blocks"},
                 )
             else:
-                # Driver-side render (reference-parity stdout/--output):
-                # guarded by a LIMIT probe (early-terminates — a full
-                # count() would re-execute the whole render join once
-                # before the collect runs it again) so a fat block set
-                # fails with a pointer instead of OOMing the driver.
-                probe = rendered.limit(args.max_render_rows + 1).count()
-                if probe > args.max_render_rows:
+                # Driver-side render (reference-parity stdout/--output),
+                # guarded in ONE job: collect at most max+1 rows, so a fat
+                # block set fails with a pointer instead of OOMing the
+                # driver, and the render join runs once.
+                rows = (
+                    rendered.orderBy("conv_id", "start_idx")
+                    .limit(args.max_render_rows + 1)
+                    .collect()
+                )
+                if len(rows) > args.max_render_rows:
                     raise RuntimeError(
                         f"more than --max-render-rows={args.max_render_rows} "
                         "rendered blocks; use --output-table (with "
                         "--warehouse) for a distributed write instead of "
                         "collecting to the driver"
                     )
-                parts = [
-                    r.block_text
-                    for r in rendered.orderBy("conv_id", "start_idx").collect()
-                ]
-                out_text = "\n\n".join(parts)
+                out_text = "\n\n".join(r.block_text for r in rows)
                 if args.output:
                     with open(args.output, "w", encoding="utf-8") as fh:
                         fh.write(out_text)

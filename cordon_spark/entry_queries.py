@@ -1062,13 +1062,18 @@ def q_pipeline_text_blocks(spark, sf_dir):
 
     t = derived_transcripts(spark, sf_dir)
     res = analyze_transcripts(spark, t, AnalysisConfig())
-    return res.blocks.select(
+    out = res.blocks.select(
         "conv_id",
         "start_idx",
         "end_idx",
         F.size("original_windows").cast("long").alias("n_windows"),
         r4(F.col("max_score"), "max_score"),
     )
+    # the few block rows as a local relation: no pipeline cache outlives the query
+    try:
+        return spark.createDataFrame(out.collect(), out.schema)
+    finally:
+        res.unpersist()
 
 
 EMB_DIM = 64

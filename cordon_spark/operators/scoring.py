@@ -8,7 +8,8 @@ blocked matmul + running top-k (scorer.py:147,247 / :264-305). n_windows
 is n_turns / window_size — small relative to the input — so the idiomatic
 distributed form is:
 
-  1. collect the (id-ordered) embedding matrix once (Arrow toPandas),
+  1. collect the matrix once (Arrow toPandas of at most knn_max_windows
+     + 1 rows, which is the size guard) and sort it by id on the driver,
   2. BROADCAST it to all executors,
   3. mapInPandas: each partition scores ITS OWN rows against the
      broadcast matrix with the shared numpy kernel — embarrassingly
@@ -45,15 +46,43 @@ from cordon_spark.kernel import KNN_CHUNK_SIZE
 _SCORE_FIELD = T.StructField("score", T.DoubleType(), False)
 
 
-def _collect_matrix(windows: DataFrame, id_cols: list[str]) -> np.ndarray:
+def _vector_col(windows: DataFrame, cfg: AnalysisConfig) -> str:
+    """`embedding` if present, else `content` (hash backend only)."""
+    if "embedding" in windows.columns:
+        return "embedding"
+    if cfg.backend != "hash":
+        raise ValueError(
+            f"scoring re-embeds window content with the hash kernel, but "
+            f"cfg.backend={cfg.backend!r}: embed the windows first and pass "
+            f"them with an `embedding` column"
+        )
+    return "content"
+
+
+def _window_vectors(pdf: pd.DataFrame, dim: int) -> np.ndarray:
+    if "embedding" in pdf.columns:
+        return np.array(pdf["embedding"].tolist(), dtype=np.float64)
+    from cordon_spark import kernel
+
+    return kernel.embed_texts(pdf["content"].fillna("").tolist(), dim)
+
+
+def _collect_matrix(windows: DataFrame, id_cols: list, cfg: AnalysisConfig) -> np.ndarray:
+    """The id-ordered matrix from ONE collect that is also the guard."""
     pdf = (
-        windows.select(*id_cols, "embedding")
-        .orderBy(*id_cols)
+        windows.select(*id_cols, _vector_col(windows, cfg))
+        .limit(cfg.knn_max_windows + 1)
         .toPandas()
     )
-    if len(pdf) == 0:
-        return np.zeros((0, 1), dtype=np.float64)
-    return np.array(pdf["embedding"].tolist(), dtype=np.float64)
+    if len(pdf) > cfg.knn_max_windows:
+        raise ValueError(
+            f"exact kNN scoring collects the full embedding matrix to the "
+            f"driver; input exceeds knn_max_windows="
+            f"{cfg.knn_max_windows} windows. Use scorer='centroid' (the "
+            f"O(n) broadcast-sketch scale path) or raise knn_max_windows."
+        )
+    pdf = pdf.sort_values(id_cols, kind="mergesort", ignore_index=True)
+    return _window_vectors(pdf, cfg.embedding_dim)
 
 
 def score_windows_knn(
@@ -62,26 +91,18 @@ def score_windows_knn(
     cfg: AnalysisConfig,
     id_cols: tuple[str, ...] = ("conv_id", "window_id"),
 ) -> DataFrame:
-    """windows(+embedding) -> windows(+score). Exact k-NN vs all windows.
+    """windows -> windows(+score). Exact k-NN vs all windows.
 
-    Single-window edge: score 0.0 (scorer.py:344-346); empty input:
+    Vectors come from `embedding`, else (hash backend only) `content`
+    is embedded on the driver for the matrix and per batch for the
+    queries. Single window: score 0.0 (scorer.py:344-346); empty input:
     empty output (scorer.py:340-341) — both handled inside the kernel.
 
-    Guarded: refuses above cfg.knn_max_windows (the matrix collect is
-    driver-bound by design — it is the exact test-scale oracle); the
-    scale path is scorer="centroid".
+    Guarded: the matrix collect takes at most cfg.knn_max_windows + 1
+    rows and refuses if it got more (the exact test-scale oracle is
+    driver-bound by design); the scale path is scorer="centroid".
     """
-    # limit-probe instead of a full count: early-terminates as soon as
-    # max+1 rows exist, so the guard costs ~nothing at 10^12-turn scale
-    probe = windows.limit(cfg.knn_max_windows + 1).count()
-    if probe > cfg.knn_max_windows:
-        raise ValueError(
-            f"exact kNN scoring collects the full embedding matrix to the "
-            f"driver; input exceeds knn_max_windows="
-            f"{cfg.knn_max_windows} windows. Use scorer='centroid' (the "
-            f"O(n) broadcast-sketch scale path) or raise knn_max_windows."
-        )
-    matrix = _collect_matrix(windows, list(id_cols))
+    matrix = _collect_matrix(windows, list(id_cols), cfg)
     bc = spark.sparkContext.broadcast(matrix)
     # Spread the scoring across the cluster: the input is often a
     # single small parquet file = ONE scan task, which serializes the
@@ -97,6 +118,7 @@ def score_windows_knn(
     # Spark-side default chunk applies (reference auto-detects by GPU)
     k = cfg.k_neighbors
     chunk = cfg.scoring_batch_size or KNN_CHUNK_SIZE
+    dim = cfg.embedding_dim
     schema = T.StructType(windows.schema.fields + [_SCORE_FIELD])
 
     def score_partition(batches):
@@ -104,11 +126,7 @@ def score_windows_knn(
 
         cand = bc.value
         for pdf in batches:
-            if len(pdf) == 0:
-                yield pdf.assign(score=pd.Series(dtype="float64"))
-                continue
-            queries = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            scores = kernel.knn_scores(queries, cand, k, chunk)
+            scores = kernel.knn_scores(_window_vectors(pdf, dim), cand, k, chunk)
             yield pdf.assign(score=scores)
 
     return windows.mapInPandas(score_partition, schema)
@@ -123,14 +141,6 @@ _PARTIAL_SCHEMA = T.StructType(
         T.StructField("flat", T.ArrayType(T.DoubleType())),
     ]
 )
-
-
-def _window_vectors(pdf: pd.DataFrame, dim: int) -> np.ndarray:
-    if "embedding" in pdf.columns:
-        return np.array(pdf["embedding"].tolist(), dtype=np.float64)
-    from cordon_spark import kernel
-
-    return kernel.embed_texts(pdf["content"].fillna("").tolist(), dim)
 
 
 def _reduce(parts: list) -> tuple:
@@ -244,12 +254,7 @@ def score_windows_centroid(
     cheaper than carrying 64 doubles per window across the Arrow
     boundary and through a cache. Any other backend must embed first:
     without an `embedding` column it raises ValueError."""
-    if "embedding" not in windows.columns and cfg.backend != "hash":
-        raise ValueError(
-            f"centroid scoring re-embeds window content with the hash kernel, "
-            f"but cfg.backend={cfg.backend!r}: embed the windows first and "
-            f"pass them with an `embedding` column"
-        )
+    _vector_col(windows, cfg)
     dim = cfg.embedding_dim
     sum_map, count_map = template_centroids(windows, signature_col, dim)
     global_count = int(sum(count_map.values()))

@@ -4,8 +4,8 @@ Wires the stages parse -> window -> embed -> score -> threshold ->
 merge -> route -> sinks with:
 
   * per-stage snapshot records in `PipelineResult.metrics`
-    ({stage: {"rows": n}} for a written snapshot, {"resumed": 1.0} for
-    one read back on RESUME),
+    ({stage: {"rows": n}} from the snapshot's manifest, plus
+    "resumed": 1.0 for one read back on RESUME),
   * per-partition lineage records (north_rule), read from the parquet
     footers of the part files each snapshot write produced — the
     write is the only job that runs a checkpointed stage's plan,
@@ -70,7 +70,8 @@ def _checkpoint(
         return df_builder()
     snapshot_id = f"{run_id}-{stage}"
     if resume and catalog.has_snapshot(stage, snapshot_id):
-        metrics[stage] = {"resumed": 1.0}
+        manifest = catalog.manifest(stage, snapshot_id)
+        metrics[stage] = {"rows": float(manifest["rows"]), "resumed": 1.0}
     else:
         manifest = catalog.write_snapshot(df_builder(), stage, snapshot_id)
         metrics[stage] = {"rows": float(manifest["rows"])}
@@ -103,10 +104,7 @@ def analyze_transcripts(
             transcripts = enrich_roles(transcripts, role_taxonomy)
 
     # ---- parse (template extraction; feeds centroid signatures) ------
-    turns = transcripts
-    if templates or cfg.scorer == "centroid":
-        tpls = templates or []
-        turns = P.extract_templates(transcripts, tpls) if tpls else transcripts
+    turns = P.extract_templates(transcripts, templates) if templates else transcripts
 
     # ---- window + embed + score (one composed plan, checkpointed) ----
     def build_scored() -> DataFrame:
@@ -117,28 +115,21 @@ def analyze_transcripts(
         if cfg.scorer == "centroid" and not use_templates:
             # no parse stage -> one global centroid
             windows = windows.withColumn("signature", F.lit("?"))
-        if cfg.scorer == "centroid" and cfg.backend == "hash":
-            # persist the window rows (ids, bounds, signature, content):
-            # both centroid passes (partial sums + scoring) re-embed the
-            # content with the hash kernel inside their mapInPandas, so
-            # no vector is ever cached or shipped back to the JVM; the
-            # cache keeps the window plan from re-running per pass.
+        score = score_windows_centroid if cfg.scorer == "centroid" else score_windows_knn
+        if cfg.backend == "hash":
+            # persist the window rows: every scoring pass re-embeds the
+            # content with the hash kernel (kNN also once on the driver
+            # for its matrix), so no vector is cached or shipped back to
+            # the JVM; the cache keeps the window plan from re-running.
             windows = windows.persist()
             caches.append(windows)
-            return score_windows_centroid(spark, windows, cfg).drop("content")
-        # persist: the embedding UDF output feeds the scorer's passes and
-        # several downstream actions — without this the whole
-        # window+embed plan re-executes per action. content is projected
-        # away once embedded (column pruning keeps the cache at ids +
-        # bounds + vector).
+            return score(spark, windows, cfg).drop("content")
+        # model backends embed once and persist the UDF output (ids +
+        # bounds + vector), which feeds every scoring pass
         embedded = create_embedder(cfg)(windows, "content").drop("content").persist()
         caches.append(embedded)
-        if cfg.scorer == "centroid":
-            scored_df = score_windows_centroid(spark, embedded, cfg)
-        else:
-            scored_df = score_windows_knn(spark, embedded, cfg)
         # downstream (threshold/merge/route/stats) needs ids+bounds+score
-        return scored_df.drop("embedding")
+        return score(spark, embedded, cfg).drop("embedding")
 
     scored = _checkpoint(
         spark, catalog, run_id, "scored_windows", build_scored, metrics, resume
@@ -189,7 +180,8 @@ def analyze_transcripts(
     stats = dict(dist_stats)
     stats["total_windows"] = stats.pop("n")
     stats["significant_windows"] = significant.count()
-    stats["merged_blocks"] = blocks.count()
+    # a blocks snapshot's manifest already holds its row count
+    stats["merged_blocks"] = int(metrics["blocks"]["rows"]) if catalog else blocks.count()
 
     return PipelineResult(
         caches=caches,

@@ -66,6 +66,8 @@ def test_pipeline_resume_idempotent(spark, tiny_transcripts, tmp_path):
         for r in res1.blocks.collect()
     )
     counts1 = dict(res1.counts)
+    # merged_blocks is the blocks manifest's row count, not a recount
+    assert res1.stats["merged_blocks"] == res1.blocks.count() > 0
 
     # resume: all stages must be read back, not recomputed
     res2 = analyze_transcripts(spark, df, cfg, catalog=cat, run_id="r1", resume=True)
@@ -77,6 +79,7 @@ def test_pipeline_resume_idempotent(spark, tiny_transcripts, tmp_path):
     assert counts1 == res2.counts
     assert res2.metrics["scored_windows"].get("resumed") == 1.0
     assert res2.metrics["blocks"].get("resumed") == 1.0
+    assert res2.stats["merged_blocks"] == res2.blocks.count() == len(blocks1)
     # sink snapshots committed exactly once
     assert cat.snapshots("anomalous_turns") == ["r1-anomalous_turns"]
 

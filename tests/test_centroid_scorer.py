@@ -106,48 +106,53 @@ def test_centroid_tree_reduce_matches_flat_merge(spark):
         assert np.allclose(flat_sums[sig], tree_sums[sig], atol=1e-9), sig
 
 
-def test_knn_scorer_guard_refuses_above_limit(spark):
-    """score_windows_knn collects the full matrix to the driver — it must
-    refuse above cfg.knn_max_windows with a message pointing at the
-    centroid scale path, so defaults can't OOM a driver at 10^12 turns."""
+def _knn_windows(spark, form, values):
+    """(conv_id, window_id, <form>) rows: `embedding` vectors, or
+    `content` texts the scorer embeds with the hash kernel."""
     import pandas as pd
-    import pytest
-
-    from cordon_spark.config import AnalysisConfig
-    from cordon_spark.operators.scoring import score_windows_knn
 
     pdf = pd.DataFrame(
-        {
-            "conv_id": ["c"] * 8,
-            "window_id": range(8),
-            "embedding": [[1.0, 0.0]] * 8,
-        }
+        {"conv_id": "c", "window_id": np.arange(len(values)), form: list(values)}
     )
-    windows = spark.createDataFrame(pdf)
-    cfg = AnalysisConfig(knn_max_windows=5)
+    return spark.createDataFrame(pdf)
+
+
+@pytest.mark.parametrize("form", ["embedding", "content"])
+def test_knn_scorer_guard_refuses_above_limit(spark, form):
+    """score_windows_knn collects the full matrix to the driver — it must
+    refuse above cfg.knn_max_windows with a message pointing at the
+    centroid scale path, so defaults can't OOM a driver at 10^12 turns.
+    The guard is the matrix collect itself, for both input forms."""
+    from cordon_spark.operators.scoring import score_windows_knn
+
+    windows = _knn_windows(
+        spark, form, [[1.0, 0.0]] * 8 if form == "embedding" else ["disk full"] * 8
+    )
     with pytest.raises(ValueError, match="centroid"):
-        score_windows_knn(spark, windows, cfg)
+        score_windows_knn(spark, windows, AnalysisConfig(knn_max_windows=5))
     # at or below the limit it scores normally
     ok = score_windows_knn(spark, windows, AnalysisConfig(knn_max_windows=8))
     assert ok.count() == 8
 
 
-def test_knn_scores_partition_invariant(spark):
+@pytest.mark.parametrize("form", ["embedding", "content"])
+def test_knn_scores_partition_invariant(spark, form):
     """Exact kNN scores are bit-identical on 1 input partition and on
     defaultParallelism partitions, and equal the kernel run over the
-    whole matrix at once (the oracle's call)."""
-    import pandas as pd
-
+    whole matrix at once (the oracle's call) — for windows carrying an
+    `embedding` column and for content-only windows, which the scorer
+    embeds with the hash kernel on the driver and in each batch."""
     from cordon_spark import kernel
     from cordon_spark.operators.scoring import score_windows_knn
 
-    rng = np.random.RandomState(26)
-    emb = kernel.l2_normalize(rng.randn(1203, 64))
-    pdf = pd.DataFrame(
-        {"conv_id": "c", "window_id": np.arange(len(emb)), "embedding": list(emb)}
-    )
-    windows = spark.createDataFrame(pdf)
     cfg = AnalysisConfig(k_neighbors=5)
+    rng = np.random.RandomState(26)
+    if form == "embedding":
+        emb = values = kernel.l2_normalize(rng.randn(1203, 64))
+    else:
+        values = [" ".join(f"w{t}" for t in rng.randint(0, 400, 12)) for _ in range(1203)]
+        emb = kernel.embed_texts(values, cfg.embedding_dim)
+    windows = _knn_windows(spark, form, values)
     want = kernel.knn_scores(emb, emb, cfg.k_neighbors)
 
     def scores(df):
@@ -254,7 +259,7 @@ def test_centroid_pipeline_scores_match_numpy_kernel(spark, parity_windows, n_pa
 
 
 def test_centroid_scorer_edges(spark):
-    from cordon_spark.operators.scoring import score_windows_centroid
+    from cordon_spark.operators.scoring import score_windows_centroid, score_windows_knn
 
     cfg = AnalysisConfig(scorer="centroid")
     schema = "conv_id string, window_id long, signature string, content string"
@@ -262,7 +267,10 @@ def test_centroid_scorer_edges(spark):
     assert "score" in empty.columns and empty.count() == 0
     one = spark.createDataFrame([("c", 0, "a", "disk full on node 7")], schema)
     assert [r.score for r in score_windows_centroid(spark, one, cfg).collect()] == [0.0]
+    # content-only rows are re-embedded with the hash kernel, so both
+    # scorers refuse them for any other backend
+    model_cfg = AnalysisConfig(scorer="centroid", backend="sentence-transformers")
     with pytest.raises(ValueError, match="embedding"):
-        score_windows_centroid(
-            spark, one, AnalysisConfig(scorer="centroid", backend="sentence-transformers")
-        )
+        score_windows_centroid(spark, one, model_cfg)
+    with pytest.raises(ValueError, match="embedding"):
+        score_windows_knn(spark, one, model_cfg)
