@@ -1,4 +1,4 @@
-.PHONY: help install install-dev test coverage bench bench-trace verify clean
+.PHONY: help install install-dev test coverage bench bench-trace bench-pairs verify clean
 
 help:
 	@echo "cordon-spark development Makefile"
@@ -9,6 +9,8 @@ help:
 	@echo "                     optional WORKLOAD=<name> (default headline_centroid) SEED=<n> (default 1)"
 	@echo "  make bench-trace   The same run traced: per-layer and plans.pipeline.* metrics,"
 	@echo "                     e.g. make bench-trace WORKLOAD=knn_band_snapshots"
+	@echo "  make bench-pairs   Interleaved parent/change runs: PARENT=<checkout> (required)"
+	@echo "                     WORKLOAD=<name> PAIRS=<n> (default 5) SEED=<first seed>"
 	@echo "  make verify        Driver-contract correctness gate (all oracle queries vs DuckDB);"
 	@echo "                     optional SF=<sf dir> QUERIES=name,name"
 	@echo "  make clean         Remove caches and build artifacts"
@@ -33,6 +35,11 @@ bench:
 
 bench-trace:
 	python3 perfbench/run.py --workload $(WORKLOAD) --seed $(SEED) --seconds 1 --trace 1
+
+PAIRS ?= 5
+
+bench-pairs:
+	python3 scripts/bench_pairs.py --parent "$(PARENT)" --workload $(WORKLOAD) --pairs $(PAIRS) --seed $(SEED)
 
 verify:
 	python scripts/check_entry.py "$(SF)" "$(QUERIES)"

@@ -106,15 +106,20 @@ def _spread(df, path: str):
     would fool a partition-count-only gate — vs the scheduler's
     parallelism, so at real scale, where a table is many files/row
     groups and already wider than the cluster, this is a no-op and no
-    corpus-wide shuffle is ever added."""
+    corpus-wide shuffle is ever added. Footers are opened only when the
+    scan alone cannot decide: a scan narrower than the cluster spreads,
+    and one of at least as many files as slots is as wide as the cluster
+    (every file holds a row group) — so a wide many-file scan plans with
+    no footer read."""
     spark = df.sparkSession
     n_slots = spark.sparkContext.defaultParallelism
     if n_slots <= 1:
         return df
-    width = min(df.rdd.getNumPartitions(), _row_groups(path))
-    if width < n_slots:
+    if df.rdd.getNumPartitions() < n_slots:
         return df.repartition(n_slots)
-    return df
+    if len(df.inputFiles()) >= n_slots or _row_groups(path) >= n_slots:
+        return df
+    return df.repartition(n_slots)
 
 
 def _ts_lit(df, col_name: str, iso: str):
@@ -214,9 +219,14 @@ def _normalized_vectors(spark, sf_dir) -> DataFrame:
 
 
 def _knn_scored(spark, sf_dir) -> DataFrame:
+    """Exact kNN scores of the embeddings table, scored once: the
+    threshold queries read them three times (count/approx, the direct
+    collect, the kept rows). A lazy local checkpoint keeps the first
+    pass's rows without registering a cache that another query's plan
+    could be served from."""
     vecs = _normalized_vectors(spark, sf_dir).withColumnRenamed("v", "embedding")
     cfg = AnalysisConfig(k_neighbors=K)
-    return score_windows_knn(spark, vecs, cfg, id_cols=("vec_id",))
+    return score_windows_knn(spark, vecs, cfg, id_cols=("vec_id",)).localCheckpoint(eager=False)
 
 
 # ------------------------------------------------------------------ #

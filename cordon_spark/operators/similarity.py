@@ -161,6 +161,23 @@ def _sum_partials(pdf, shape: tuple) -> tuple[np.ndarray, np.ndarray]:
     return sums, cnts
 
 
+def _lloyd_accumulate(
+    mat: np.ndarray, books: np.ndarray, cosine: bool, sums: np.ndarray, cnts: np.ndarray
+) -> None:
+    """Fold one batch of rows into the running per-subspace (sums, cnts)
+    of _lloyd_fit: each row's subspace slice goes to the codeword with
+    the max dot (`cosine`) or the max dot - 0.5||c||^2 (true L2)."""
+    dsub = books.shape[2]
+    for j, c in enumerate(books):
+        sl = mat[:, j * dsub : (j + 1) * dsub]
+        scores = sl @ c.T
+        if not cosine:
+            scores = scores - 0.5 * np.sum(c * c, axis=1)
+        assign = np.argmax(scores, axis=1)
+        np.add.at(sums[j], assign, sl)
+        cnts[j] += np.bincount(assign, minlength=len(c))
+
+
 def _lloyd_fit(
     vectors: DataFrame,
     k: int,
@@ -242,15 +259,7 @@ def _lloyd_fit(
                         continue
                     seen = True
                     mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-                    for j, c in enumerate(cb):
-                        sl = mat[:, j * dsub : (j + 1) * dsub]
-                        if cosine:
-                            scores = sl @ c.T
-                        else:
-                            scores = sl @ c.T - 0.5 * np.sum(c * c, axis=1)
-                        assign = np.argmax(scores, axis=1)
-                        np.add.at(sums[j], assign, sl)
-                        cnts[j] += np.bincount(assign, minlength=len(c))
+                    _lloyd_accumulate(mat, cb, cosine, sums, cnts)
                 if seen:
                     yield _partial_frame(TaskContext.get().partitionId(), sums, cnts)
 

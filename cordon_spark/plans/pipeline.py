@@ -14,9 +14,15 @@ merge -> route -> sinks with:
     already committed is read back instead of recomputed (the analog of
     the reference benchmark's --resume, evaluate.py:898-965).
 
-The scored-windows DataFrame feeds three consumers (threshold, stats,
-filter); with a catalog it is materialized once as a snapshot, else
-persisted in memory.
+The scored-windows DataFrame feeds the threshold (which also yields the
+score distribution) and the filter in front of the merge; with a
+catalog it is materialized once as a snapshot, else persisted in memory.
+
+Counts come from data the pipeline already holds, not from jobs of
+their own: `total_windows`, the distribution and `significant_windows`
+from the threshold's pass (one job in all when a catalog supplies the
+scored_windows row count), and with a catalog `merged_blocks` and the
+per-sink `counts` from the blocks and sink snapshot manifests.
 """
 
 from __future__ import annotations
@@ -61,13 +67,9 @@ class PipelineResult:
                 pass
 
 
-def _checkpoint(
-    spark, catalog, run_id, stage, df_builder, metrics: dict, resume: bool
-) -> DataFrame:
-    """Build-or-load a stage through the snapshot catalog; a built
-    stage's plan runs once, in the snapshot write."""
-    if catalog is None:
-        return df_builder()
+def _snapshot(catalog, run_id, stage, df_builder, metrics: dict, resume: bool) -> str:
+    """Write a stage's snapshot, or find it committed on RESUME, and
+    record its manifest's `rows` in `metrics`; returns the snapshot id."""
     snapshot_id = f"{run_id}-{stage}"
     if resume and catalog.has_snapshot(stage, snapshot_id):
         manifest = catalog.manifest(stage, snapshot_id)
@@ -75,6 +77,17 @@ def _checkpoint(
     else:
         manifest = catalog.write_snapshot(df_builder(), stage, snapshot_id)
         metrics[stage] = {"rows": float(manifest["rows"])}
+    return snapshot_id
+
+
+def _checkpoint(
+    spark, catalog, run_id, stage, df_builder, metrics: dict, resume: bool
+) -> DataFrame:
+    """Build-or-load a stage through the snapshot catalog; a built
+    stage's plan runs once, in the snapshot write."""
+    if catalog is None:
+        return df_builder()
+    snapshot_id = _snapshot(catalog, run_id, stage, df_builder, metrics, resume)
     return catalog.read(spark, stage, snapshot_id)
 
 
@@ -139,7 +152,10 @@ def analyze_transcripts(
         caches.append(scored)
 
     # ---- threshold + score distribution (one percentile pass) --------
-    significant, lower, upper, dist_stats = TH.select_significant(scored, cfg)
+    # a scored_windows snapshot's manifest holds the row count, which
+    # lets the threshold skip its count job
+    n_scored = int(metrics["scored_windows"]["rows"]) if catalog else None
+    significant, lower, upper, dist_stats = TH.select_significant(scored, cfg, n_rows=n_scored)
 
     # ---- merge ---------------------------------------------------------
     blocks = _checkpoint(
@@ -168,18 +184,19 @@ def analyze_transcripts(
         metrics,
         resume,
     )
-    counts = sink_counts(routed)
-    if catalog is not None:
-        anomalous, routine = split_sinks(routed)
-        for name, df in (("anomalous_turns", anomalous), ("routine_turns", routine)):
-            sid = f"{run_id}-{name}"
-            if not (resume and catalog.has_snapshot(name, sid)):
-                catalog.write_snapshot(df, name, sid)
+    if catalog is None:
+        counts = sink_counts(routed)
+    else:
+        # each sink's count is its snapshot manifest's row count
+        counts = {}
+        for sink, df in zip(("anomalous", "routine"), split_sinks(routed)):
+            _snapshot(catalog, run_id, f"{sink}_turns", lambda df=df: df, metrics, resume)
+            counts[sink] = int(metrics[f"{sink}_turns"]["rows"])
 
     # ---- stats (OP-10) ---------------------------------------------------
     stats = dict(dist_stats)
     stats["total_windows"] = stats.pop("n")
-    stats["significant_windows"] = significant.count()
+    stats["significant_windows"] = stats.pop("kept")
     # a blocks snapshot's manifest already holds its row count
     stats["merged_blocks"] = int(metrics["blocks"]["rows"]) if catalog else blocks.count()
 

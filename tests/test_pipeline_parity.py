@@ -72,6 +72,34 @@ def test_exact_parity(spark, tiny_transcripts, tiny_df, cfg):
         assert np.isclose(res.stats[key], oracle.stats[key], atol=1e-12), key
 
 
+@pytest.mark.parametrize(
+    "scorer, with_catalog", [("knn", True), ("knn", False), ("centroid", False)]
+)
+def test_counts_from_data_in_hand(spark, tiny_transcripts, tiny_df, tmp_path, scorer, with_catalog):
+    """The kept count (from the threshold's own data) and the sink counts
+    (from the sink manifests with a catalog) equal recounts of the
+    result's DataFrames, and the oracle's counts for kNN."""
+    from cordon_spark.datagen import TEMPLATES
+    from cordon_spark.operators.routing import sink_counts
+    from cordon_spark.sources.catalog import SnapshotCatalog
+
+    pdf, _ = tiny_transcripts
+    cfg = AnalysisConfig(scorer=scorer)
+    catalog = SnapshotCatalog(tmp_path / "wh") if with_catalog else None
+    templates = TEMPLATES if scorer == "centroid" else None
+    res = analyze_transcripts(spark, tiny_df, cfg, templates=templates, catalog=catalog)
+    assert res.stats["significant_windows"] == res.significant.count() > 0
+    assert res.counts == sink_counts(res.routed)
+    if scorer == "knn":
+        oracle = run_oracle(pdf, cfg)
+        assert res.stats["significant_windows"] == oracle.stats["significant_windows"]
+        assert res.counts == {
+            "anomalous": oracle.stats["anomalous_turns"],
+            "routine": oracle.stats["routine_turns"],
+        }
+    res.unpersist()
+
+
 def test_formatted_blocks_golden(spark, tiny_transcripts, tiny_df):
     pdf, _ = tiny_transcripts
     cfg = AnalysisConfig()

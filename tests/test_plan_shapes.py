@@ -73,6 +73,27 @@ def test_windowed_segmentation_single_shuffle(spark):
     assert "partial_min(turn_idx" in c["plan"].split(keyed[0], 1)[1], c["plan"]
 
 
+def test_spread_decides_without_footers(spark, tmp_path, monkeypatch):
+    """_spread opens no parquet footer when the scan decides: a wide
+    many-file scan plans unchanged, a one-file scan narrower than the
+    cluster is spread."""
+    from cordon_spark import entry_queries as Q
+
+    def no_footers(path):
+        raise AssertionError(f"footer read under {path}")
+
+    monkeypatch.setattr(Q, "_row_groups", no_footers)
+    n_slots = spark.sparkContext.defaultParallelism
+    wide, narrow = str(tmp_path / "wide"), str(tmp_path / "narrow")
+    spark.range(0, 1000, numPartitions=2 * n_slots).write.parquet(wide)
+    spark.range(0, 1000, numPartitions=1).write.parquet(narrow)
+
+    scan = spark.read.parquet(wide)
+    assert scan.rdd.getNumPartitions() >= n_slots
+    assert _counts(Q._spread(scan, wide))["spreads"] == 0
+    assert _counts(Q._spread(spark.read.parquet(narrow), narrow))["spreads"] == 1
+
+
 def test_scan_pushdown_reaches_parquet(spark):
     """Filters and column pruning must reach the parquet scan: the
     brief's explicit requirement (a scan reading all columns for a

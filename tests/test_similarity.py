@@ -1,5 +1,10 @@
 """Similarity search: brute-force exactness vs numpy; LSH recall."""
 
+import os
+import pathlib
+import subprocess
+import sys
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -241,6 +246,45 @@ def test_kmeans_fit_tree_reduce_bit_reproducible(spark, fit):
     df, _ = _vec_df(spark, n=400, dim=8, seed=11)
     wide = df.repartition(80)  # > _TREE_FANIN=64 -> tree path
     assert np.array_equal(fit(wide), fit(wide))
+
+
+_THREADED_PARTIALS = """
+import sys
+import numpy as np
+sys.path.insert(0, sys.argv[1])
+from cordon_spark import kernel
+from cordon_spark.operators.similarity import _lloyd_accumulate
+rng = np.random.RandomState(26)
+out = {}
+# (dim, m, k, cosine): kmeans_fit's one cosine subspace, pq_fit's m L2 ones
+for dim, m, k, cosine in ((64, 1, 16, True), (384, 1, 64, True), (64, 8, 16, False), (384, 4, 256, False)):
+    for n in (500, 1203, 2999):
+        mat = kernel.l2_normalize(rng.randn(n, dim))
+        books = rng.randn(m, k, dim // m)
+        sums = np.zeros_like(books)
+        cnts = np.zeros(books.shape[:2], dtype=np.int64)
+        _lloyd_accumulate(mat, books, cosine, sums, cnts)
+        out[f"s{dim}-{m}-{k}-{n}"] = sums
+        out[f"c{dim}-{m}-{k}-{n}"] = cnts
+np.savez(sys.argv[2], **out)
+"""
+
+
+def test_lloyd_partials_independent_of_blas_threads(tmp_path):
+    """A Python worker's BLAS thread count must not move a Lloyd
+    partial: the IVF and PQ bake guards compare fits bit for bit."""
+    root = str(pathlib.Path(__file__).resolve().parent.parent)
+    got = {}
+    for threads in ("1", "2"):
+        env = dict(os.environ, OPENBLAS_NUM_THREADS=threads, OMP_NUM_THREADS=threads)
+        out = tmp_path / f"partials_{threads}.npz"
+        subprocess.run(
+            [sys.executable, "-c", _THREADED_PARTIALS, root, str(out)], env=env, check=True
+        )
+        got[threads] = np.load(out)
+    assert len(got["1"].files) == 24
+    for key in got["1"].files:
+        assert np.array_equal(got["1"][key], got["2"][key]), key
 
 
 def test_ivf_index_build_query_matches_inline(spark, tmp_path):
