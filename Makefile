@@ -10,7 +10,7 @@ help:
 	@echo "  make bench-trace   The same run traced: per-layer and plans.pipeline.* metrics,"
 	@echo "                     e.g. make bench-trace WORKLOAD=knn_band_snapshots"
 	@echo "  make bench-pairs   Interleaved parent/change runs: PARENT=<checkout> (required)"
-	@echo "                     WORKLOAD=<name> PAIRS=<n> (default 5) SEED=<first seed>"
+	@echo "                     WORKLOAD=<name>[,<name>...] PAIRS=<n> (default 5) SEED=<first seed>"
 	@echo "  make verify        Driver-contract correctness gate (all oracle queries vs DuckDB);"
 	@echo "                     optional SF=<sf dir> QUERIES=name,name"
 	@echo "  make clean         Remove caches and build artifacts"

@@ -76,20 +76,26 @@ def r4l_dec(col, name):
     return F.floor(scaled).cast("long").alias(name)
 
 
-def _row_groups(path: str) -> int:
-    """Total parquet row groups under `path` (file or directory) from
-    footer metadata only — the TRUE upper bound on scan parallelism for
-    a parquet source (byte-range splits beyond row-group count produce
-    empty tasks). Unreadable/foreign layouts return a large number so
-    the caller's gate stays inert."""
+def _footers(path: str) -> list:
+    """Parquet footer metadata of `path` (a file, or a directory's
+    *.parquet files); reads no data. Raises on unreadable layouts."""
     import pathlib
 
     import pyarrow.parquet as pq
 
+    p = pathlib.Path(path)
+    files = [p] if p.is_file() else sorted(p.glob("*.parquet"))
+    return [pq.ParquetFile(f).metadata for f in files]
+
+
+def _row_groups(path: str) -> int:
+    """Total parquet row groups under `path` from footer metadata only —
+    the TRUE upper bound on scan parallelism for a parquet source
+    (byte-range splits beyond row-group count produce empty tasks).
+    Unreadable/foreign layouts return a large number so the caller's
+    gate stays inert."""
     try:
-        p = pathlib.Path(path)
-        files = [p] if p.is_file() else sorted(p.glob("*.parquet"))
-        return sum(pq.ParquetFile(f).metadata.num_row_groups for f in files)
+        return sum(meta.num_row_groups for meta in _footers(path))
     except Exception:
         return 1 << 30
 
@@ -167,6 +173,18 @@ def _emb(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
+def _emb_rows(sf_dir) -> int | None:
+    """The embeddings table's row count from its footers, no job: the
+    threshold's `n_rows` wherever its input is one row per embeddings
+    row (the kNN scores, and projections of them). None when no footer
+    can be read, so the threshold counts for itself."""
+    try:
+        footers = _footers(f"{sf_dir}/embeddings.parquet")
+    except Exception:
+        return None
+    return sum(meta.num_rows for meta in footers) if footers else None
+
+
 def _events(spark, sf_dir):
     path = f"{sf_dir}/events.parquet"
     return _spread(spark.read.parquet(path), path)
@@ -219,8 +237,8 @@ def _normalized_vectors(spark, sf_dir) -> DataFrame:
 
 
 def _knn_scored(spark, sf_dir) -> DataFrame:
-    """Exact kNN scores of the embeddings table, scored once: the
-    threshold queries read them three times (count/approx, the direct
+    """Exact kNN scores of the embeddings table, one row per embeddings
+    row, scored once: the threshold queries read them twice (the direct
     collect, the kept rows). A lazy local checkpoint keeps the first
     pass's rows without registering a cache that another query's plan
     could be served from."""
@@ -268,7 +286,8 @@ SQL_KNN_SCORE = f"WITH {KNN_SQL} SELECT vec_id, floor(score*10000 + 0.5)/10000 A
 def q_threshold_percentile(spark, sf_dir):
     ship_package(spark)
     scored = _knn_scored(spark, sf_dir)
-    kept, _, _, _ = select_significant(scored, AnalysisConfig(anomaly_percentile=P))
+    cfg = AnalysisConfig(anomaly_percentile=P)
+    kept, _, _, _ = select_significant(scored, cfg, n_rows=_emb_rows(sf_dir))
     return kept.select("vec_id", r4(F.col("score"), "score"))
 
 
@@ -282,7 +301,7 @@ def q_threshold_range(spark, sf_dir):
     ship_package(spark)
     scored = _knn_scored(spark, sf_dir)
     cfg = AnalysisConfig(anomaly_range_min=0.05, anomaly_range_max=0.15)
-    kept, _, _, _ = select_significant(scored, cfg)
+    kept, _, _, _ = select_significant(scored, cfg, n_rows=_emb_rows(sf_dir))
     return kept.select("vec_id", r4(F.col("score"), "score"))
 
 
@@ -309,7 +328,9 @@ def q_merge_blocks(spark, sf_dir):
         ((F.col("vec_id") % 125) * 4 + 3).alias("end_idx"),
         "score",
     )
-    kept, _, _, _ = select_significant(intervals, AnalysisConfig(anomaly_percentile=P))
+    kept, _, _, _ = select_significant(
+        intervals, AnalysisConfig(anomaly_percentile=P), n_rows=_emb_rows(sf_dir)
+    )
     blocks = merge_blocks(kept)
     return blocks.select(
         "conv_id",

@@ -12,11 +12,15 @@ predicates inside whole-stage codegen — no Python boundary at all
 paid a full serialize/transpose round-trip of every row's text, which
 dominated the stage at 20M rows, ~8.5s -> ~2s measured). `rlike` is
 contains/search semantics, exactly like the reference's
-`pattern.search`; the compiled patterns are `re.escape`d literals with
-lazy `.*?` holes, on which Java and Python regex agree (asserted
-against the reference's own matcher in
-tests/test_reference_differential.py). Unmatched text -> template_id
-null (the parse-failure lineage counter picks these up)."""
+`pattern.search`. The compiled patterns are `re.escape`d literals with
+lazy `.*?` holes. Java's `.` does not match `\\r`, `\\x85`, `\\u2028` or
+`\\u2029`, where Python's `re` (the reference matcher) and DuckDB stop
+only at `\\n`; the Spark-side pattern therefore carries Java's `(?d)`
+(UNIX_LINES), under which `\\n` is the only line terminator and the two
+engines agree (tests/test_parse_enrich.py asserts it against `re.search`,
+the reference's matcher, for each of these characters). Unmatched
+text -> template_id null (the parse-failure lineage counter picks these
+up)."""
 
 from __future__ import annotations
 
@@ -48,7 +52,7 @@ def extract_templates(
     text = F.coalesce(F.col(text_col), F.lit(""))
     chain = None
     for tid, rx in compiled:
-        cond = text.rlike(rx)
+        cond = text.rlike("(?d)" + rx)
         chain = F.when(cond, F.lit(tid)) if chain is None else chain.when(
             cond, F.lit(tid)
         )

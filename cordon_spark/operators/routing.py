@@ -59,6 +59,11 @@ def split_sinks(routed: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 
 def sink_counts(routed: DataFrame) -> dict[str, int]:
+    """Per-sink row counts by a group-by over the routed turns: the
+    recount the tests check the pipeline's `counts` against, and the
+    staged routing layer of perfbench. The pipeline itself does not
+    call it (its counts come from the scored windows, or from the sink
+    snapshots' manifests with a catalog)."""
     rows = routed.groupBy("sink").count().collect()
     counts = {"anomalous": 0, "routine": 0}
     for r in rows:

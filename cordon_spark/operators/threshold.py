@@ -10,8 +10,9 @@ EXACT_PERCENTILE_DIRECT_LIMIT rows, kernel.exact_percentile runs over
 the collected column). `percentile_approx` does not implement the
 definition and is only used to BRACKET the threshold on the scale path.
 
-Tie rules copied verbatim (SURVEY.md §4), held by select_significant's
-filter and by the kept count thresholds_and_stats reports:
+Tie rules copied verbatim (SURVEY.md §4), held by kept_predicate (the
+filter of select_significant and of the pipeline's sink counts) and by
+the kept count thresholds_and_stats reports:
   percentile mode: keep score >= threshold (ties included, :76)
   range mode:      keep lower <= score < upper (:51-53)
   isclose(p, 1.0) -> keep all; isclose(p, 0.0) -> keep none (:63-68)
@@ -37,7 +38,7 @@ from __future__ import annotations
 from bisect import bisect_left
 
 import numpy as np
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from cordon_spark import kernel
 from cordon_spark.config import AnalysisConfig
@@ -197,13 +198,20 @@ def select_significant(
     Sorting score-desc (thresholder.py:79) is left to consumers — a
     global orderBy is only warranted at output time."""
     lower, upper, stats = thresholds_and_stats(scored, cfg, score_col, n_rows)
+    return scored.filter(kept_predicate(cfg, lower, upper, score_col)), lower, upper, stats
+
+
+def kept_predicate(
+    cfg: AnalysisConfig, lower: float | None, upper: float | None, score_col: str = "score"
+) -> Column:
+    """The rows select_significant keeps, as one boolean Column over the
+    cuts thresholds_and_stats returned: the tie rules above. A null
+    score is kept only by keep-all (the comparisons yield null)."""
     score = F.col(score_col)
     if cfg.keep_none:
-        kept = scored.filter(F.lit(False))
-    elif cfg.keep_all:
-        kept = scored
-    elif cfg.range_mode:
-        kept = scored.filter((score >= F.lit(lower)) & (score < F.lit(upper)))
-    else:
-        kept = scored.filter(score >= F.lit(lower))
-    return kept, lower, upper, stats
+        return F.lit(False)
+    if cfg.keep_all:
+        return F.lit(True)
+    if cfg.range_mode:
+        return (score >= F.lit(lower)) & (score < F.lit(upper))
+    return score >= F.lit(lower)

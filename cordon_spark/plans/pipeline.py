@@ -22,7 +22,10 @@ Counts come from data the pipeline already holds, not from jobs of
 their own: `total_windows`, the distribution and `significant_windows`
 from the threshold's pass (one job in all when a catalog supplies the
 scored_windows row count), and with a catalog `merged_blocks` and the
-per-sink `counts` from the blocks and sink snapshot manifests.
+per-sink `counts` from the blocks and sink snapshot manifests. Without
+a catalog the per-sink `counts` are one aggregate over the persisted
+scored windows (the kept windows' `n_turns`), not a recount of the
+routed turns, so `routed` stays a lazy plan nothing in the call runs.
 """
 
 from __future__ import annotations
@@ -36,11 +39,7 @@ from cordon_spark.config import AnalysisConfig
 from cordon_spark.functions.embeddings import create_embedder
 from cordon_spark.operators import parse as P
 from cordon_spark.operators.merge import merge_blocks
-from cordon_spark.operators.routing import (
-    route_turns,
-    sink_counts,
-    split_sinks,
-)
+from cordon_spark.operators.routing import route_turns, split_sinks
 from cordon_spark.operators import threshold as TH
 from cordon_spark.operators.scoring import score_windows_centroid, score_windows_knn
 from cordon_spark.operators.windowing import segment_windows
@@ -185,7 +184,25 @@ def analyze_transcripts(
         resume,
     )
     if catalog is None:
-        counts = sink_counts(routed)
+        # the per-sink counts from ONE aggregate over the scored windows,
+        # equal to a recount of the routed turns (routing.sink_counts):
+        # tumbling windows split a conversation's turns by a monotone
+        # function of turn_idx, so a window's [start_idx, end_idx] holds
+        # exactly its own turns (duplicate rows included); a merged
+        # block's range is the union of adjacent kept windows' ranges,
+        # so the router sends exactly the kept windows' turns to
+        # `anomalous`. A null conv_id or turn_idx never matches the
+        # router's equi-join, so such a turn is `routine` — hence the
+        # guard on its window's null conv_id or window_id. perfbench's
+        # headline reference counts the same way (`n_in[keep].sum()`).
+        keyed = F.col("conv_id").isNotNull() & F.col("window_id").isNotNull()
+        kept = TH.kept_predicate(cfg, lower, upper) & keyed
+        row = scored.agg(
+            F.sum("n_turns").alias("total"),
+            F.sum(F.when(kept, F.col("n_turns"))).alias("anomalous"),
+        ).first()
+        total, anomalous = int(row["total"] or 0), int(row["anomalous"] or 0)
+        counts = {"anomalous": anomalous, "routine": total - anomalous}
     else:
         # each sink's count is its snapshot manifest's row count
         counts = {}

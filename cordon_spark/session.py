@@ -83,6 +83,18 @@ def get_spark(
     arrow_batch: int = 10_000,
     extra_conf: dict | None = None,
 ) -> SparkSession:
+    """The session every entry point runs on; `extra_conf` is applied
+    last, so it overrides any setting below.
+
+    PySpark's DataFrame debugging (`spark.python.sql.dataFrameDebugging.
+    enabled`) is off. With it on, each `F.*`/`Column` call captures its
+    Python call site through py4j (a conf read, an origin set and a
+    clear), about half of a pipeline call's py4j round trips, and the
+    first capture imports IPython. The trade-off: an analysis error's
+    DataFrame query context no longer names the Python line that built
+    the failing expression. Pass
+    `extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}`
+    to get it back; PySpark reads the flag once per process."""
     pin_blas_threads()
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -118,6 +130,8 @@ def get_spark(
         # (measured 12x slowdown on a 500-row mapInPandas); data is
         # storage-disaggregated at scale anyway, so don't wait for it
         .config("spark.locality.wait", "0s")
+        # no per-Column call-site capture (the docstring has the cost)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for var in _BLAS_VARS:  # belt-and-braces for non-local deployments
         builder = builder.config(f"spark.executorEnv.{var}", "1")

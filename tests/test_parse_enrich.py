@@ -40,6 +40,25 @@ def test_extract_templates_first_match_wins(spark):
     assert got[2] == "T03"
 
 
+def test_extract_templates_line_terminators_match_python(spark):
+    """A `[*]` hole spans the characters Java's `.` stops at by default
+    (\\r, \\x85, \\u2028, \\u2029) as Python's `re` does, and stops at
+    \\n as `re` does."""
+    templates = [("T1", "user [*] logged in")]
+    ((_, rx),) = compile_templates(templates)
+    texts = [f"user bo{ch}b logged in" for ch in ("\r", "\x85", "\u2028", "\u2029", "\n")]
+    pdf = pd.DataFrame(
+        {"conv_id": "c", "turn_idx": pd.Series(range(len(texts)), dtype="int32"), "text": texts}
+    )
+    got = {
+        r.turn_idx: r.template_id
+        for r in extract_templates(spark.createDataFrame(pdf), templates).collect()
+    }
+    want = {i: "T1" if re.search(rx, t) else None for i, t in enumerate(texts)}
+    assert want == {0: "T1", 1: "T1", 2: "T1", 3: "T1", 4: None}
+    assert got == want
+
+
 def test_enrich_tools_broadcast_left_join(spark):
     turns = spark.createDataFrame(
         pd.DataFrame({"tool": ["bash", "fetch", None], "turn_idx": pd.Series([0, 1, 2], dtype="int32")})

@@ -100,6 +100,62 @@ def test_counts_from_data_in_hand(spark, tiny_transcripts, tiny_df, tmp_path, sc
     res.unpersist()
 
 
+@pytest.fixture(scope="module")
+def irregular_df(spark, tiny_transcripts):
+    """The tiny fixture with the keys the window arithmetic must not
+    miscount: a null conv_id, null turn_idx rows, a duplicated
+    (conv_id, turn_idx), turn_idx gaps and negative turn_idx."""
+    pdf, _ = tiny_transcripts
+    convs = sorted(pdf.conv_id.unique())
+    rows = pdf.drop(columns="ts").astype(object)
+    rows = rows[~((rows.conv_id == convs[0]) & rows.turn_idx.between(5, 12))]  # gap
+    rows = rows[~((rows.conv_id == convs[1]) & (rows.turn_idx == 2))]  # one-turn gap
+    dup = rows[(rows.conv_id == convs[2]) & rows.turn_idx.isin([3, 4])]
+    neg = rows[rows.conv_id == convs[3]].copy()
+    neg["turn_idx"] = neg.turn_idx - 6
+    null_conv = rows[rows.conv_id == convs[4]].head(9).copy()
+    null_conv["conv_id"] = None
+    null_turn = rows[rows.conv_id == convs[5]].head(3).copy()
+    null_turn["turn_idx"] = None
+    rows = pd.concat(
+        [rows[rows.conv_id != convs[3]], dup, neg, null_conv, null_turn], ignore_index=True
+    )
+    schema = "conv_id string, turn_idx int, role string, text string, tool string"
+    return spark.createDataFrame(list(rows.itertuples(index=False, name=None)), schema)
+
+
+_MODES = {
+    "keep-all": dict(anomaly_percentile=1.0),
+    "percentile": dict(anomaly_percentile=0.1),
+    "range": dict(anomaly_range_min=0.05, anomaly_range_max=0.15),
+    "keep-none": dict(anomaly_percentile=0.0),
+}
+
+
+@pytest.mark.parametrize("mode", list(_MODES))
+@pytest.mark.parametrize("scorer", ["knn", "centroid"])
+def test_counts_on_irregular_keys(spark, irregular_df, scorer, mode):
+    """Without a catalog the sink counts come from the kept windows'
+    n_turns; they equal a recount of the routed turns whatever the keys:
+    rows a null conv_id or turn_idx keeps out of every window's range
+    are routine, duplicated rows count twice, gaps and negative turn
+    indices change nothing."""
+    from cordon_spark.datagen import TEMPLATES
+    from cordon_spark.operators.routing import sink_counts
+
+    cfg = AnalysisConfig(scorer=scorer, **_MODES[mode])
+    templates = TEMPLATES if scorer == "centroid" else None
+    res = analyze_transcripts(spark, irregular_df, cfg, templates=templates)
+    recount = sink_counts(res.routed)
+    assert res.counts == recount
+    assert sum(recount.values()) == irregular_df.count()
+    if mode == "keep-all":
+        assert recount["routine"] == 12  # the null-key rows
+    if mode == "keep-none":
+        assert recount["anomalous"] == 0
+    res.unpersist()
+
+
 def test_formatted_blocks_golden(spark, tiny_transcripts, tiny_df):
     pdf, _ = tiny_transcripts
     cfg = AnalysisConfig()
