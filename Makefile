@@ -1,4 +1,4 @@
-.PHONY: help install install-dev test coverage bench bench-trace bench-pairs verify clean
+.PHONY: help install install-dev test coverage bench bench-trace bench-pairs verify loc clean
 
 help:
 	@echo "cordon-spark development Makefile"
@@ -13,6 +13,9 @@ help:
 	@echo "                     WORKLOAD=<name>[,<name>...] PAIRS=<n> (default 5) SEED=<first seed>"
 	@echo "  make verify        Driver-contract correctness gate (all oracle queries vs DuckDB);"
 	@echo "                     optional SF=<sf dir> QUERIES=name,name"
+	@echo "  make loc           Lines added, removed and net under cordon_spark/ and tests/"
+	@echo "                     against BASE=<rev> (default HEAD), from git diff --numstat;"
+	@echo "                     new files count once staged; LOC_PATHS= picks other paths"
 	@echo "  make clean         Remove caches and build artifacts"
 
 install:
@@ -43,6 +46,17 @@ bench-pairs:
 
 verify:
 	python scripts/check_entry.py "$(SF)" "$(QUERIES)"
+
+BASE ?= HEAD
+LOC_PATHS ?= cordon_spark tests
+
+loc:
+	@for p in $(LOC_PATHS); do \
+		git diff --numstat $(BASE) -- $$p | awk -v p="$$p/" \
+			'{a += $$1; r += $$2} END {printf "%-24s +%d -%d net %+d\n", p, a, r, a - r}'; \
+	done
+	@git diff --numstat $(BASE) -- $(LOC_PATHS) | awk \
+		'{a += $$1; r += $$2} END {printf "%-24s +%d -%d net %+d\n", "total", a, r, a - r}'
 
 clean:
 	rm -rf .pytest_cache .build cordon_spark.egg-info

@@ -12,6 +12,7 @@ cordon_spark.entry_queries with exact DuckDB mirrors.
 
 from __future__ import annotations
 
+import functools
 import pathlib
 import sys
 from collections.abc import Callable
@@ -23,17 +24,32 @@ if str(ROOT) not in sys.path:
 from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 
 
+def _shipped(query: Callable[[SparkSession, str], DataFrame]):
+    """`query` run on a session that has the package zip: the harness's
+    session does not come from get_spark, and ship_package is a no-op
+    once the zip is registered."""
+
+    @functools.wraps(query)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        from cordon_spark import session
+
+        session.ship_package(spark)
+        return query(spark, sf_dir)
+
+    return run
+
+
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
     from cordon_spark.entry_queries import q_pipeline_blocks
 
-    return q_pipeline_blocks(spark, "/root/testdata/sf0.001")
+    return _shipped(q_pipeline_blocks)(spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from cordon_spark.entry_queries import QUERIES
 
-    return dict(QUERIES)
+    return {name: _shipped(query) for name, query in QUERIES.items()}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -34,9 +34,8 @@ from cordon_spark.operators.merge import merge_blocks
 from cordon_spark.operators.parse import extract_templates
 from cordon_spark.operators.routing import route_turns
 from cordon_spark.operators.scoring import score_windows_knn
-from cordon_spark.operators.threshold import select_significant
+from cordon_spark.operators.threshold import select_significant, thresholds_and_stats
 from cordon_spark.operators.windowing import segment_windows
-from cordon_spark.session import ship_package
 
 K = 5
 WS = 4
@@ -251,7 +250,6 @@ def _knn_scored(spark, sf_dir) -> DataFrame:
 # OP-3: window segmentation
 # ------------------------------------------------------------------ #
 def q_window_segment(spark, sf_dir):
-    ship_package(spark)
     t = derived_transcripts(spark, sf_dir)
     cfg = AnalysisConfig(window_size=WS)
     return segment_windows(t, cfg).select(
@@ -273,7 +271,6 @@ FROM s GROUP BY conv_id, turn_idx // {WS}
 # OP-5: exact k-NN scoring over the embeddings table
 # ------------------------------------------------------------------ #
 def q_knn_score(spark, sf_dir):
-    ship_package(spark)
     return _knn_scored(spark, sf_dir).select("vec_id", r4(F.col("score"), "score"))
 
 
@@ -284,7 +281,6 @@ SQL_KNN_SCORE = f"WITH {KNN_SQL} SELECT vec_id, floor(score*10000 + 0.5)/10000 A
 # OP-6: percentile threshold (tie-inclusive >=) and band mode
 # ------------------------------------------------------------------ #
 def q_threshold_percentile(spark, sf_dir):
-    ship_package(spark)
     scored = _knn_scored(spark, sf_dir)
     cfg = AnalysisConfig(anomaly_percentile=P)
     kept, _, _, _ = select_significant(scored, cfg, n_rows=_emb_rows(sf_dir))
@@ -298,7 +294,6 @@ SELECT vec_id, floor(score*10000 + 0.5)/10000 AS score FROM ks, thr WHERE score 
 
 
 def q_threshold_range(spark, sf_dir):
-    ship_package(spark)
     scored = _knn_scored(spark, sf_dir)
     cfg = AnalysisConfig(anomaly_range_min=0.05, anomaly_range_max=0.15)
     kept, _, _, _ = select_significant(scored, cfg, n_rows=_emb_rows(sf_dir))
@@ -317,7 +312,6 @@ FROM ks, thr WHERE score >= thr.lo AND score < thr.up
 # OP-7: gaps-and-islands interval merge
 # ------------------------------------------------------------------ #
 def q_merge_blocks(spark, sf_dir):
-    ship_package(spark)
     scored = _knn_scored(spark, sf_dir)
     intervals = scored.select(
         F.concat(F.lit("c"), F.floor(F.col("vec_id") / 125).cast("long").cast("string")).alias(
@@ -368,15 +362,18 @@ SELECT conv_id, start_idx, end_idx, n_windows,
 # OP-10: score distribution aggregate
 # ------------------------------------------------------------------ #
 def q_score_distribution(spark, sf_dir):
-    ship_package(spark)
-    scored = _knn_scored(spark, sf_dir)
-    return scored.agg(
-        r4(F.min("score"), "min_s"),
-        r4(F.max("score"), "max_s"),
-        r4(F.avg("score"), "mean_s"),
-        r4(F.expr("percentile(score, 0.5)"), "median_s"),
-        r4(F.expr("percentile(score, 0.90)"), "p90_s"),
+    """The pipeline's own OP-10 plan: thresholds_and_stats (keep-all, so
+    no cut) gives the numbers numpy gives, and one row carries them."""
+    _, _, stats = thresholds_and_stats(
+        _knn_scored(spark, sf_dir),
+        AnalysisConfig(anomaly_percentile=1.0),
+        n_rows=_emb_rows(sf_dir),
     )
+    keys = ("min", "max", "mean", "median", "p90")
+    row = spark.createDataFrame(
+        [tuple(float(stats[k]) for k in keys)], ", ".join(f"{k} double" for k in keys)
+    )
+    return row.select(*[r4(F.col(k), f"{k}_s") for k in keys])
 
 
 SQL_SCORE_DISTRIBUTION = f"""
@@ -435,7 +432,6 @@ def _vec_pipeline(spark, sf_dir):
 
 
 def q_pipeline_blocks(spark, sf_dir):
-    ship_package(spark)
     _, blocks = _vec_pipeline(spark, sf_dir)
     return blocks.select(
         "conv_id",
@@ -481,7 +477,6 @@ SELECT conv_id, start_idx, end_idx, n_windows,
 
 
 def q_route_counts(spark, sf_dir):
-    ship_package(spark)
     turns, blocks = _vec_pipeline(spark, sf_dir)
     routed = route_turns(turns, blocks)
     return routed.groupBy("sink").agg(F.count(F.lit(1)).alias("n"))
@@ -509,7 +504,6 @@ PARSE_TEMPLATES = [
 
 
 def q_parse_templates(spark, sf_dir):
-    ship_package(spark)
     docs = _docs(spark, sf_dir)
     parsed = extract_templates(docs, PARSE_TEMPLATES)
     return (
@@ -543,7 +537,6 @@ EVENT_DIM = [
 
 
 def q_enrich_events(spark, sf_dir):
-    ship_package(spark)
     events = _events(spark, sf_dir)
     dim = spark.createDataFrame(EVENT_DIM, "event_type string, category string, risk int")
     joined = events.join(F.broadcast(dim), on="event_type", how="left")
@@ -580,7 +573,6 @@ FROM j GROUP BY category
 # Dedup suite
 # ------------------------------------------------------------------ #
 def q_dedup_exact(spark, sf_dir):
-    ship_package(spark)
     return D.exact_dedup(_docs(spark, sf_dir)).select(
         "doc_id", F.col("n_copies").cast("long").alias("n_copies")
     )
@@ -615,7 +607,6 @@ sh AS (SELECT doc_id, CASE WHEN len(toks) = 0 THEN []::VARCHAR[]
 
 
 def q_dedup_ngram_jaccard(spark, sf_dir):
-    ship_package(spark)
     pairs = D.ngram_jaccard_pairs(_docs(spark, sf_dir), n=3, threshold=NGRAM_TAU)
     return pairs.select("doc_a", "doc_b", r4(F.col("jaccard"), "jaccard"))
 
@@ -631,7 +622,6 @@ SELECT doc_a, doc_b, floor(j*10000 + 0.5)/10000 AS jaccard FROM p WHERE j >= {NG
 
 
 def q_dedup_minhash(spark, sf_dir):
-    ship_package(spark)
     pairs = D.minhash_lsh_pairs(
         _docs(spark, sf_dir), n=3, bands=8, rows=2, verify_threshold=MINHASH_TAU
     )
@@ -661,7 +651,6 @@ def q_dedup_clusters(spark, sf_dir):
     component's min doc_id (keep the rep, drop the rest — the step a
     dedup pipeline runs after pairing). Oracle = recursive-CTE
     transitive closure; any correct algorithm agrees on the fixpoint."""
-    ship_package(spark)
     pairs = D.minhash_lsh_pairs(
         _docs(spark, sf_dir), n=3, bands=8, rows=2, verify_threshold=MINHASH_TAU
     )
@@ -697,7 +686,6 @@ def q_dedup_apply(spark, sf_dir):
     connected components -> FINAL corpus keeping only component
     representatives (one anti join). The count drop is exactly the
     non-representative cluster membership."""
-    ship_package(spark)
     docs = _docs(spark, sf_dir)
     pairs = D.minhash_lsh_pairs(
         docs, n=3, bands=8, rows=2, verify_threshold=MINHASH_TAU
@@ -719,7 +707,6 @@ LEFT JOIN drops USING (doc_id) WHERE drops.doc_id IS NULL
 
 
 def q_dedup_embedding_cosine(spark, sf_dir):
-    ship_package(spark)
     vecs = _normalized_vectors(spark, sf_dir)
     pairs = D.embedding_cosine_pairs(vecs, threshold=COSINE_TAU)
     return pairs.select("vec_a", "vec_b", r4(F.col("cosine"), "cosine"))
@@ -738,7 +725,6 @@ WHERE list_dot_product(a.v, b.v) >= {COSINE_TAU}
 # Similarity search
 # ------------------------------------------------------------------ #
 def q_ann_topk(spark, sf_dir):
-    ship_package(spark)
     vecs = _normalized_vectors(spark, sf_dir)
     queries = vecs.filter(F.col("vec_id") < ANN_NQ)
     topk = S.brute_force_topk(queries, vecs, k=ANN_K)
@@ -776,7 +762,6 @@ def q_pq_ann(spark, sf_dir):
     fit), decoded + renormalized as zero-shuffle literal projections,
     then ranked by the same brute top-k as the exact path. The oracle
     replays encode/decode/rank in SQL from the same baked constants."""
-    ship_package(spark)
     vecs = _normalized_vectors(spark, sf_dir)
     queries = vecs.filter(F.col("vec_id") < ANN_NQ)
     out = S.pq_ann(queries, vecs, _pq_books(), k=ANN_K)
@@ -826,7 +811,6 @@ SELECT qid, rank, nid, floor(dist*10000 + 0.5)::BIGINT AS dist_e4 FROM r WHERE r
 # Text analysis
 # ------------------------------------------------------------------ #
 def q_token_count(spark, sf_dir):
-    ship_package(spark)
     return TX.token_count_cols(_docs(spark, sf_dir)).select(
         "doc_id", "n_tokens", "n_alnum_tokens", "n_chars"
     )
@@ -844,7 +828,6 @@ _STOP_SQL = "['" + "','".join(TX.EN_STOPWORDS) + "']"
 
 
 def q_lang_id(spark, sf_dir):
-    ship_package(spark)
     return TX.lang_id_cols(_docs(spark, sf_dir)).select(
         "doc_id", "pred_lang", "en_hits_distinct"
     )
@@ -862,7 +845,6 @@ FROM h
 
 
 def q_quality_score(spark, sf_dir):
-    ship_package(spark)
     docs = _docs(spark, sf_dir)
     return docs.select("doc_id", r4(TX.quality_score_col(), "quality"))
 
@@ -879,7 +861,6 @@ SELECT doc_id, floor(quality*10000 + 0.5)/10000 AS quality FROM q
 
 
 def q_doc_fingerprint(spark, sf_dir):
-    ship_package(spark)
     docs = _docs(spark, sf_dir)
     return TX.with_fingerprint(docs, n=5).select("doc_id", "fingerprint")
 
@@ -899,7 +880,6 @@ FROM (SELECT doc_id, unnest(shingles) AS s1 FROM sh) GROUP BY doc_id
 # Multimodal metadata (binary plumbing; decode stays stubbed)
 # ------------------------------------------------------------------ #
 def q_multimodal_meta(spark, sf_dir):
-    ship_package(spark)
     from cordon_spark.operators.multimodal import binary_metadata
 
     docs = _docs(spark, sf_dir).withColumn("payload", F.encode("text", "UTF-8"))
@@ -917,7 +897,6 @@ FROM documents
 # (ground truth: deterministic label lang == 'zh' on the doc table)
 # ------------------------------------------------------------------ #
 def q_eval_turn_metrics(spark, sf_dir):
-    ship_package(spark)
     import math
 
     from cordon_spark.plans.evaluate import turn_level_metrics
@@ -980,7 +959,6 @@ FROM pr
 # Event-stream operators (sessionize / top-k / rollup / prop parse)
 # ------------------------------------------------------------------ #
 def q_sessionize(spark, sf_dir):
-    ship_package(spark)
     from cordon_spark.operators.events import sessionize
 
     out = sessionize(_events(spark, sf_dir))
@@ -1019,7 +997,6 @@ def q_sessionize_chunked(spark, sf_dir):
     """Skew-hardened two-phase sessionize: the ORACLE is the plain
     sessionize SQL — the scale-hardened plan must hash-match the
     straightforward spelling exactly."""
-    ship_package(spark)
     from cordon_spark.operators.events import sessionize_chunked
 
     out = sessionize_chunked(_events(spark, sf_dir))
@@ -1033,7 +1010,6 @@ def q_sessionize_chunked(spark, sf_dir):
 
 
 def q_topk_per_group(spark, sf_dir):
-    ship_package(spark)
     from cordon_spark.operators.events import topk_per_group
 
     return topk_per_group(_events(spark, sf_dir), k=3)
@@ -1048,7 +1024,6 @@ SELECT event_type, rank, event_id, value FROM r WHERE rank <= 3
 
 
 def q_time_window_rollup(spark, sf_dir):
-    ship_package(spark)
     from cordon_spark.operators.events import time_window_rollup
 
     out = time_window_rollup(_events(spark, sf_dir))
@@ -1063,7 +1038,6 @@ FROM events GROUP BY 1, 2
 
 
 def q_parse_props(spark, sf_dir):
-    ship_package(spark)
     from cordon_spark.operators.events import parse_props
 
     out = parse_props(_events(spark, sf_dir))
@@ -1088,7 +1062,6 @@ def q_pipeline_text_blocks(spark, sf_dir):
     hash embedding is md5-based, so the ENTIRE text pipeline has an
     exact DuckDB oracle (SQL_PIPELINE_TEXT_BLOCKS) in addition to the
     numpy-oracle parity in pytest."""
-    ship_package(spark)
     from cordon_spark.plans.pipeline import analyze_transcripts
 
     t = derived_transcripts(spark, sf_dir)
@@ -1157,7 +1130,6 @@ SELECT conv_id, start_idx, end_idx, n_windows,
 
 
 def q_ann_lsh(spark, sf_dir):
-    ship_package(spark)
     vecs = _normalized_vectors(spark, sf_dir)
     queries = vecs.filter(F.col("vec_id") < ANN_NQ)
     out = S.lsh_ann(queries, vecs, k=ANN_K, n_planes=8)
@@ -1182,7 +1154,6 @@ def q_ivf_ann(spark, sf_dir):
     drifted, the driver's hash gate would catch it. Recall vs brute
     force + full-probe==exact are additionally asserted in
     tests/test_similarity.py."""
-    ship_package(spark)
     vecs = _normalized_vectors(spark, sf_dir)
     queries = vecs.filter(F.col("vec_id") < ANN_NQ)
     out = S.ivf_ann(queries, vecs, k=ANN_K, n_clusters=16, n_probe=2, iters=3)
@@ -1253,7 +1224,6 @@ def q_dedup_embedding_lsh(spark, sf_dir):
     within-bucket cosine verify (hash-checked: the md5-derived planes
     reproduce exactly in SQL; recall vs the exact operator is
     additionally asserted in tests/test_dedup.py)."""
-    ship_package(spark)
     vecs = _normalized_vectors(spark, sf_dir)
     pairs = D.embedding_lsh_pairs(vecs, threshold=COSINE_TAU, n_planes=8, n_probes=9)
     return pairs.select("vec_a", "vec_b", r4(F.col("cosine"), "cosine"))
@@ -1320,7 +1290,6 @@ SELECT qid, rank, nid, floor(dist*10000 + 0.5)/10000 AS dist FROM rk WHERE rank 
 
 
 def q_dedup_simhash(spark, sf_dir):
-    ship_package(spark)
     return D.simhash_pairs(_docs(spark, sf_dir), max_hamming=16)
 
 
@@ -1361,7 +1330,6 @@ def q_normalize_text(spark, sf_dir):
     over documents with injected messy text (the corpus itself is
     clean ASCII). Python unicodedata and DuckDB nfc_normalize share the
     UCD tables, so the oracle is exact."""
-    ship_package(spark)
     from cordon_spark.functions.text import normalize_text_cols
 
     docs = _docs(spark, sf_dir).withColumn(
@@ -1392,7 +1360,6 @@ def q_hopping_rollup(spark, sf_dir):
     """Hopping-window rollup (1h window, 15m hop): every event in 4
     overlapping windows via Spark's native window(); value sums as
     scaled longs."""
-    ship_package(spark)
     from cordon_spark.operators.events import hopping_window_rollup
 
     out = hopping_window_rollup(_events(spark, sf_dir))
@@ -1419,7 +1386,6 @@ def q_quantize_embeddings(spark, sf_dir):
     """int8 embedding quantization (the 4-8x storage path for 100 TB
     embedding corpora): per-vector scale + comma-joined int codes so
     the comparator sees scalars, not list types."""
-    ship_package(spark)
     vecs = _emb(spark, sf_dir).select("vec_id", F.col("embedding").alias("v"))
     out = S.quantize_embeddings(vecs)
     return out.select(
@@ -1448,7 +1414,6 @@ def q_repetition_quality(spark, sf_dir):
     most-common-2-gram token coverage, duplicate-3-gram fraction —
     per-row JVM array math, no shuffle (the oracle recomputes the
     same statistics relationally)."""
-    ship_package(spark)
     from cordon_spark.functions.text import repetition_cols
 
     out = repetition_cols(_docs(spark, sf_dir))
@@ -1495,7 +1460,6 @@ def q_asof_join(spark, sf_dir):
     picks the latest prior-or-simultaneous purchase value of the same
     user. Right side deduped to one row per (user, ts) (max value) so
     the match is well-defined on both engines."""
-    ship_package(spark)
     from cordon_spark.operators.events import asof_join
 
     from cordon_spark.operators.events import wall_micros
@@ -1527,7 +1491,6 @@ def q_rollup_hierarchy(spark, sf_dir):
     """Hypertable-style hierarchical rollup: (day, event_type) -> (day)
     -> grand total in one Expand + hash-agg pass; grouping_id marks the
     level. Value sums decimal-exact and emitted as scaled longs."""
-    ship_package(spark)
     from cordon_spark.operators.events import hierarchical_rollup
 
     out = hierarchical_rollup(_events(spark, sf_dir))
@@ -1588,7 +1551,6 @@ def q_pii_scrub(spark, sf_dir):
     """Regex-tier PII redaction counts + redacted-text md5 (the
     patterns are chosen to behave identically under Java regex and
     RE2 — verified on adversarial fixtures in tests/test_curation)."""
-    ship_package(spark)
     out = C.pii_scrub(_pii_docs(spark, sf_dir))
     return out.select(
         "doc_id", "n_emails", "n_ips", "n_phones",
@@ -1623,7 +1585,6 @@ def q_decontaminate(spark, sf_dir):
     """n-gram-overlap decontamination of the corpus against a held-out
     'benchmark' subset (doc_id % 11 == 0), n=3 to match the corpus's
     short synthetic texts."""
-    ship_package(spark)
     docs = _docs(spark, sf_dir)
     bench = docs.filter(F.col("doc_id") % 11 == 0)
     out = C.decontaminate(docs, bench, n=3)
@@ -1643,7 +1604,6 @@ FROM documents d LEFT JOIN hits h ON h.doc_id = d.doc_id
 def q_contamination_score(spark, sf_dir):
     """Graded contamination fraction vs the same held-out benchmark
     subset (doc_id % 11 == 0) as q_decontaminate, n=3."""
-    ship_package(spark)
     docs = _docs(spark, sf_dir)
     bench = docs.filter(F.col("doc_id") % 11 == 0)
     return C.contamination_score(docs, bench, n=3)
@@ -1672,7 +1632,6 @@ def q_stratified_sample(spark, sf_dir):
     """Deterministic per-language sampling: membership is a pure
     function of md5(doc_id|salt), so the sample reproduces across
     engines/partitionings (unlike seeded per-partition RNG)."""
-    ship_package(spark)
     out = C.stratified_sample(_docs(spark, sf_dir), STRAT_FRACTIONS)
     return out.select("doc_id", "lang")
 
@@ -1690,7 +1649,6 @@ WHERE u < CASE lang WHEN 'en' THEN 0.5 WHEN 'de' THEN 0.3 WHEN 'zh' THEN 0.1 ELS
 def q_pack_sequences(spark, sf_dir):
     """Streaming-fill sequence packing per language shard, 500-token
     budget, deterministic doc_id order."""
-    ship_package(spark)
     from cordon_spark.functions.text import token_count_cols
 
     docs = token_count_cols(_docs(spark, sf_dir))
@@ -1718,7 +1676,6 @@ def q_split_dataset(spark, sf_dir):
     intervals — membership is a pure function of doc_id, so adding
     documents later never reassigns existing ones (df.randomSplit
     cannot promise that). Zero-shuffle projection."""
-    ship_package(spark)
     out = C.split_dataset(_docs(spark, sf_dir), SPLIT_WEIGHTS)
     return out.select("doc_id", "lang", "split")
 
@@ -1740,7 +1697,6 @@ def q_token_budget_sample(spark, sf_dir):
     """Token-budget sampling: ~2000 tokens of each language, documents
     ranked by a deterministic md5 priority, kept only while they fit
     entirely. One window cumsum per language shard."""
-    ship_package(spark)
     from cordon_spark.functions.text import token_count_cols
 
     docs = token_count_cols(_docs(spark, sf_dir))
@@ -1769,7 +1725,6 @@ BM25_QUERY = ["spark", "join", "window"]
 def q_tfidf_terms(spark, sf_dir):
     """Top-5 TF-IDF terms per document (keyword extraction for
     curation/triage); tfidf exposed as a scaled long."""
-    ship_package(spark)
     from cordon_spark.operators.ranking import tfidf_top_terms
 
     out = tfidf_top_terms(_docs(spark, sf_dir), k=5)
@@ -1798,7 +1753,6 @@ def q_bm25_search(spark, sf_dir):
     """BM25 retrieval scores for a fixed 3-term query over documents;
     the per-term partial scores sum in decimal so the total is
     order-independent (same convention as the event value sums)."""
-    ship_package(spark)
     from cordon_spark.operators.ranking import bm25_search
 
     out = bm25_search(_docs(spark, sf_dir), BM25_QUERY)
@@ -1831,7 +1785,6 @@ FROM s GROUP BY doc_id
 
 def q_char_entropy(spark, sf_dir):
     """Per-document character-entropy quality signal (bits/char)."""
-    ship_package(spark)
     from cordon_spark.functions.text import char_entropy_cols
 
     out = char_entropy_cols(_docs(spark, sf_dir))
@@ -1859,7 +1812,6 @@ def q_curate_corpus(spark, sf_dir):
     scrub -> exact dedup -> survivors) as one plan; every stage is
     individually oracle-proven, and the composition itself is
     hash-checked here end-to-end."""
-    ship_package(spark)
     out = C.curate_corpus(_docs(spark, sf_dir), min_tokens=20)
     return out.select(
         "doc_id", "n_copies", "n_tokens",
@@ -1914,7 +1866,6 @@ def q_tpch_pricing_summary(spark, sf_dir):
     """TPC-H Q1 shape: pricing summary report — one scan, one
     map-side-combined hash agg, filter pushed to parquet. The classic
     'is your scan-agg path right' probe."""
-    ship_package(spark)
     li0 = _lineitem(spark, sf_dir)
     l = li0.filter(F.col("l_shipdate") <= _ts_lit(li0, "l_shipdate", "1998-09-02"))
     # operands cast at their REAL scale (2 dp in this data): every
@@ -1962,7 +1913,6 @@ def q_tpch_shipping_priority(spark, sf_dir):
     filtered dimension, shuffle the facts once, top-10 revenue orders.
     The 'is your join path right' probe (dim filter -> broadcast,
     pushdown on both date predicates)."""
-    ship_package(spark)
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet").filter(
         F.col("c_mktsegment") == "BUILDING"
     )
@@ -2032,7 +1982,6 @@ def q_tpch_local_supplier_volume(spark, sf_dir):
     shuffle-join path and the supplier chain rides the broadcast. The
     date filter reaches the orders parquet scan (plan-shape-tested
     with the broadcasts)."""
-    ship_package(spark)
     region = spark.read.parquet(f"{sf_dir}/region.parquet").filter(
         F.col("r_name") == "ASIA"
     )
@@ -2100,7 +2049,6 @@ def q_tpch_large_orders(spark, sf_dir):
     the one aggregation; the already-computed per-order quantity sum
     rides along instead of being re-aggregated. All money/quantity
     math exact decimal."""
-    ship_package(spark)
     li = _lineitem(spark, sf_dir)
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
@@ -2148,7 +2096,6 @@ def q_conversation_stats(spark, sf_dir):
     the first profiling pass any log/transcript pipeline runs (one
     map-side-combined hash agg on the conversation key; all-integer
     outputs)."""
-    ship_package(spark)
     t = derived_transcripts(spark, sf_dir)
     chars = F.length(F.coalesce(F.col("text"), F.lit("")))
     return t.groupBy("conv_id").agg(
@@ -2188,7 +2135,6 @@ def q_semdedup(spark, sf_dir):
 
     from cordon_spark.ivf_centroids_sf001 import IVF_CENTROIDS_SF001
 
-    ship_package(spark)
     vecs = _normalized_vectors(spark, sf_dir)
     return D.semdedup(
         vecs,
@@ -2234,7 +2180,6 @@ def q_tpch_volume_shipping(spark, sf_dir):
     ((n1, n2) in the two allowed orientations) closing the filter.
     Grouped decimal revenue by (supp_nation, cust_nation, year) —
     map-side combined, all money math exact decimal."""
-    ship_package(spark)
     nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
     pair = nation.filter(F.col("n_name").isin("NATION_1", "NATION_2"))
     n1 = pair.select(
@@ -2308,7 +2253,6 @@ def q_tpch_order_priority(spark, sf_dir):
     the non-equi date predicate inside the join condition — the probe
     stops at the first matching line, so there is no fact-x-fact row
     blowup and no DISTINCT pass, then a tiny map-side-combined count."""
-    ship_package(spark)
     orders0 = spark.read.parquet(f"{sf_dir}/orders.parquet")
     orders = orders0.filter(
         (F.col("o_orderdate") >= _ts_lit(orders0, "o_orderdate", "1997-01-01"))
@@ -2350,7 +2294,6 @@ def q_tpch_parts_supplier(spark, sf_dir):
     two-phase expand (partial distinct on (group keys, suppkey), final
     count) — skew-safe where a collect_set would concentrate a hot
     group on one task."""
-    ship_package(spark)
     part = spark.read.parquet(f"{sf_dir}/part.parquet").filter(
         (F.col("p_brand") != "Brand#45") & (F.col("p_size") <= 10)
     )
@@ -2391,7 +2334,6 @@ def q_rolling_metrics(spark, sf_dir):
     accumulator inside each sorted partition — no self-join, no
     explode, no second shuffle. The sum accumulates in decimal =>
     order-independent => hash-proof scaled long."""
-    ship_package(spark)
     from pyspark.sql import Window as W
 
     from cordon_spark.operators.events import wall_micros
@@ -2437,7 +2379,6 @@ def q_argmax_event(spark, sf_dir):
     spelling (row_number over a per-user sort, cf. topk_per_group)
     must SORT every user's history; struct-max keeps one row of state
     per key per partition — the right argmax shape at 10^12 turns."""
-    ship_package(spark)
     from cordon_spark.operators.events import wall_micros
 
     ev0 = _events(spark, sf_dir)
@@ -2479,7 +2420,6 @@ def q_cube_rollup(spark, sf_dir):
     4 rows BEFORE the partial aggregation, so the exchange still
     carries only group totals; grouping_id disambiguates levels.
     Decimal sums => hash-proof scaled longs."""
-    ship_package(spark)
     from cordon_spark.operators.events import wall_ntz
 
     ev0 = _events(spark, sf_dir)
@@ -2513,7 +2453,6 @@ def q_group_median(spark, sf_dir):
     exact percentile sorts per group WITHIN the hash agg's partial
     state (no global sort, no window); groups here are the 5 event
     types, so state is bounded."""
-    ship_package(spark)
     ev = _events(spark, sf_dir)
     return ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -2544,7 +2483,6 @@ def q_pivot_event_counts(spark, sf_dir):
     pivotfirst exchange (2 shuffles), and an IMPLICIT pivot adds a
     distinct-collect on the driver on top; count-if needs none of
     that at 10^9 users."""
-    ship_package(spark)
     ev = _events(spark, sf_dir).select("user_id", "event_type")
     return ev.groupBy("user_id").agg(
         *[
@@ -2573,7 +2511,6 @@ def q_substring_dup_spans(spark, sf_dir):
     rolling k-token md5 window fingerprints, corpus-wide repeated-window
     detection via a map-side-combined hash agg, per-doc equal-width
     interval merge. All-integer output: hash-proof across engines."""
-    ship_package(spark)
     return D.substring_dup_spans(_docs(spark, sf_dir), k=SUBSTR_K)
 
 
@@ -2611,7 +2548,6 @@ FUNNEL_STEPS = ("signup", "view", "click", "purchase")
 
 
 def q_funnel_steps(spark, sf_dir):
-    ship_package(spark)
     from cordon_spark.operators.events import funnel_steps
 
     return funnel_steps(_events(spark, sf_dir), steps=FUNNEL_STEPS)
@@ -2652,7 +2588,6 @@ SELECT 4::BIGINT, 'purchase', coalesce(sum(r3), 0)::BIGINT FROM u
 
 
 def q_funnel_latency(spark, sf_dir):
-    ship_package(spark)
     from cordon_spark.operators.events import funnel_latency
 
     return funnel_latency(_events(spark, sf_dir), steps=FUNNEL_STEPS)
@@ -2675,7 +2610,6 @@ FROM p GROUP BY pair
 
 
 def q_cohort_retention(spark, sf_dir):
-    ship_package(spark)
     from cordon_spark.operators.events import cohort_retention
 
     return cohort_retention(_events(spark, sf_dir))
@@ -2692,7 +2626,6 @@ GROUP BY f.cohort_day, day_offset
 
 
 def q_event_transitions(spark, sf_dir):
-    ship_package(spark)
     from cordon_spark.operators.events import event_transitions
 
     return event_transitions(_events(spark, sf_dir))
@@ -2711,7 +2644,6 @@ FROM c
 
 
 def q_fill_gaps(spark, sf_dir):
-    ship_package(spark)
     from cordon_spark.operators.events import fill_gaps
 
     return fill_gaps(_events(spark, sf_dir))
@@ -2728,7 +2660,6 @@ FROM s LEFT JOIN c ON c.user_id = s.user_id AND c.bucket = s.bucket
 
 
 def q_interpolate_gaps(spark, sf_dir):
-    ship_package(spark)
     from cordon_spark.operators.events import interpolate_gaps
 
     out = interpolate_gaps(_events(spark, sf_dir))
@@ -2768,7 +2699,6 @@ FROM w
 
 
 def q_last_touch_attribution(spark, sf_dir):
-    ship_package(spark)
     from cordon_spark.operators.events import last_touch_attribution
 
     return last_touch_attribution(_events(spark, sf_dir))
@@ -2795,7 +2725,6 @@ def q_tpch_customer_distribution(spark, sf_dir):
     sides on custkey once; both downstream aggs are map-side-combined
     hash aggs over ever-shrinking frames (|customers| rows, then
     |distinct counts| rows)."""
-    ship_package(spark)
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
         F.col("o_orderpriority") != "1-URGENT"

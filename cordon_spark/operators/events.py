@@ -181,8 +181,7 @@ def topk_per_group(
 def time_window_rollup(
     events: DataFrame, window_seconds: int = 3600, ts_col: str = "ts"
 ) -> DataFrame:
-    """Tumbling time-window counts + sums per event type (batch analog
-    of the streaming windowed_anomaly_counts)."""
+    """Tumbling time-window counts + sums per event type."""
     return events.groupBy(
         _time_bucket(events, ts_col, window_seconds).alias("window_id"), "event_type"
     ).agg(

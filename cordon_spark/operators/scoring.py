@@ -32,6 +32,11 @@ the centroid of the window's template signature. That is one map-side
 partial sum per partition over a tiny key space, one broadcast dict and
 one mapInPandas scoring pass running kernel.centroid_scores_loo — O(n),
 no join, no shuffle of vectors.
+
+score_windows_frozen scores new windows (a stream's, or a later
+batch's) against the sums an earlier batch's template_centroids
+returned. Every scorer is the same mapInPandas pass, `_score_pass`,
+with its own kernel call; a missing signature is "?" in every pass.
 """
 
 from __future__ import annotations
@@ -40,6 +45,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from cordon_spark import kernel
 from cordon_spark.config import AnalysisConfig
 from cordon_spark.kernel import KNN_CHUNK_SIZE
 
@@ -62,9 +68,31 @@ def _vector_col(windows: DataFrame, cfg: AnalysisConfig) -> str:
 def _window_vectors(pdf: pd.DataFrame, dim: int) -> np.ndarray:
     if "embedding" in pdf.columns:
         return np.array(pdf["embedding"].tolist(), dtype=np.float64)
-    from cordon_spark import kernel
-
     return kernel.embed_texts(pdf["content"].fillna("").tolist(), dim)
+
+
+def _signatures(pdf: pd.DataFrame, signature_col: str | None) -> pd.Series:
+    """The batch's signature keys; a missing one (or no column) is "?",
+    the key the windower gives a turn without a template."""
+    if signature_col is None:
+        return pd.Series("?", index=pdf.index, dtype=object)
+    return pdf[signature_col].fillna("?")
+
+
+def _score_pass(windows: DataFrame, dim: int, state, scores) -> DataFrame:
+    """windows -> windows(+score) in ONE mapInPandas pass: `state` goes
+    to the executors as one broadcast, and each Arrow batch is scored
+    by `scores(vectors, batch, state)` over the batch's `_window_vectors`.
+    Every window scorer is this pass with its own kernel call."""
+    bc = windows.sparkSession.sparkContext.broadcast(state)
+    schema = T.StructType(windows.schema.fields + [_SCORE_FIELD])
+
+    def score_partition(batches):
+        value = bc.value
+        for pdf in batches:
+            yield pdf.assign(score=scores(_window_vectors(pdf, dim), pdf, value))
+
+    return windows.mapInPandas(score_partition, schema)
 
 
 def _collect_matrix(windows: DataFrame, id_cols: list, cfg: AnalysisConfig) -> np.ndarray:
@@ -103,7 +131,6 @@ def score_windows_knn(
     driver-bound by design); the scale path is scorer="centroid".
     """
     matrix = _collect_matrix(windows, list(id_cols), cfg)
-    bc = spark.sparkContext.broadcast(matrix)
     # Spread the scoring across the cluster: the input is often a
     # single small parquet file = ONE scan task, which serializes the
     # whole O(n^2) matmul through one python worker (measured 34s for
@@ -118,18 +145,12 @@ def score_windows_knn(
     # Spark-side default chunk applies (reference auto-detects by GPU)
     k = cfg.k_neighbors
     chunk = cfg.scoring_batch_size or KNN_CHUNK_SIZE
-    dim = cfg.embedding_dim
-    schema = T.StructType(windows.schema.fields + [_SCORE_FIELD])
-
-    def score_partition(batches):
-        from cordon_spark import kernel
-
-        cand = bc.value
-        for pdf in batches:
-            scores = kernel.knn_scores(_window_vectors(pdf, dim), cand, k, chunk)
-            yield pdf.assign(score=scores)
-
-    return windows.mapInPandas(score_partition, schema)
+    return _score_pass(
+        windows,
+        cfg.embedding_dim,
+        matrix,
+        lambda vecs, pdf, cand: kernel.knn_scores(vecs, cand, k, chunk),
+    )
 
 
 _TREE_FANIN = 64
@@ -211,7 +232,7 @@ def template_centroids(
         )
 
     partial_df = windows.select(
-        F.col(signature_col).alias("signature"), vec_col
+        F.coalesce(signature_col, F.lit("?")).alias("signature"), vec_col
     ).mapInPandas(partials, _PARTIAL_SCHEMA)
     # treeAggregate-style two-level reduce: above _TREE_FANIN input
     # partitions, the one-row-per-partition partials are themselves
@@ -261,17 +282,44 @@ def score_windows_centroid(
     if global_count <= 1:
         return windows.withColumn("score", F.lit(0.0))
     global_sum = np.sum(np.stack(list(sum_map.values())), axis=0)
-    bc = spark.sparkContext.broadcast((sum_map, count_map, global_sum, global_count))
-    schema = T.StructType(windows.schema.fields + [_SCORE_FIELD])
+    return _score_pass(
+        windows,
+        dim,
+        (sum_map, count_map, global_sum, global_count),
+        lambda vecs, pdf, state: kernel.centroid_scores_loo(
+            vecs, _signatures(pdf, signature_col), *state
+        ),
+    )
 
-    def score_partition(batches):
-        from cordon_spark import kernel
 
-        state = bc.value
-        for pdf in batches:
-            vecs = _window_vectors(pdf, dim)
-            yield pdf.assign(
-                score=kernel.centroid_scores_loo(vecs, pdf[signature_col], *state)
-            )
+def score_windows_frozen(
+    windows: DataFrame,
+    sum_map: dict,
+    cfg: AnalysisConfig,
+    signature_col: str | None = None,
+) -> DataFrame:
+    """windows -> windows(+score) against FROZEN state, the per-signature
+    sums template_centroids returned for an earlier batch:
+    kernel.centroid_scores, the cosine distance to the normalized sum of
+    the window's signature. An unseen signature falls back to the
+    normalized sum of all sums, the LOO scorer's global centroid. No
+    self-exclusion: the scored windows are not in the state.
 
-    return windows.mapInPandas(score_partition, schema)
+    Without `signature_col` every window has signature "?", the key of
+    a run without templates. The state must come from the backend that
+    embeds these windows: a non-hash backend without an `embedding`
+    column raises ValueError."""
+    _vector_col(windows, cfg)
+    if not sum_map:
+        raise ValueError("empty sum_map: build it with template_centroids")
+    sums = np.stack(list(sum_map.values()))
+    centroids = dict(zip(sum_map, kernel.l2_normalize(sums)))
+    default = kernel.l2_normalize(np.sum(sums, axis=0)[None, :])[0]
+    return _score_pass(
+        windows,
+        cfg.embedding_dim,
+        (centroids, default),
+        lambda vecs, pdf, state: kernel.centroid_scores(
+            vecs, _signatures(pdf, signature_col), *state
+        ),
+    )

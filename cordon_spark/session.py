@@ -16,6 +16,7 @@ from pathlib import Path
 from pyspark.sql import SparkSession
 
 _REPO_ROOT = Path(__file__).resolve().parent.parent
+_ZIP_NAME = "cordon_spark.zip"
 
 
 def package_zip(out_dir: str | Path | None = None) -> str:
@@ -23,7 +24,7 @@ def package_zip(out_dir: str | Path | None = None) -> str:
     pkg_dir = Path(__file__).resolve().parent
     out_dir = Path(out_dir) if out_dir else _REPO_ROOT / ".build"
     out_dir.mkdir(parents=True, exist_ok=True)
-    zip_path = out_dir / "cordon_spark.zip"
+    zip_path = out_dir / _ZIP_NAME
     src_mtimes = max(p.stat().st_mtime for p in pkg_dir.rglob("*.py"))
     if zip_path.exists() and zip_path.stat().st_mtime >= src_mtimes:
         return str(zip_path)
@@ -36,16 +37,18 @@ def package_zip(out_dir: str | Path | None = None) -> str:
 
 
 def ship_package(spark: SparkSession) -> None:
-    """Register the package zip on an existing session (idempotent).
+    """Register the package zip on a session, once: a session that
+    already lists the zip among its Python includes (get_spark's, or a
+    `--py-files cordon_spark.zip` submit) is left as it is. Spark does
+    not raise on a second addPyFile; it warns and still appends the zip
+    to the includes and the driver's sys.path again.
 
     Needed when the session was created by an external driver (e.g. the
     verify harness) rather than by get_spark().
     """
-    try:
-        spark.sparkContext.addPyFile(package_zip())
-    except Exception:
-        # already registered under the same name — fine
-        pass
+    sc = spark.sparkContext
+    if _ZIP_NAME not in sc._python_includes:
+        sc.addPyFile(package_zip())
 
 
 _BLAS_VARS = (

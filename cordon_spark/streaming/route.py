@@ -1,11 +1,13 @@
-"""Streaming variants of the parse -> score -> route stages.
+"""Streaming variants of the window -> score -> route stages.
 
 The reference is batch-only; this module is the graft's streaming
 extension for continuously-arriving transcript turns:
 
-  * stateless: score turns against FROZEN broadcast state (centroids
-    built by a batch run) and route by a fixed threshold — pure maps,
-    no state store; watermarked windowed anomaly counts for late data.
+  * stateless: route scored rows by a fixed threshold (route_stream) —
+    a pure map, no state store. Scoring is the batch module's
+    operators.scoring.score_windows_frozen against the per-signature
+    sums a batch run's template_centroids returned; turn-level scoring
+    is the same call over turns with `content = text`.
   * stateful (applyInPandasWithState): gap sessionization
     (sessionize_stream) and tumbling count-window assembly
     (window_stream), both keyed O(1)-ish state with event-time-timeout
@@ -14,37 +16,12 @@ extension for continuously-arriving transcript turns:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from cordon_spark.config import AnalysisConfig
-
-
-def score_turns_streaming(
-    turns: DataFrame, centroid_map: dict, default: np.ndarray, cfg: AnalysisConfig
-) -> DataFrame:
-    """Per-TURN streaming scores: embed each turn, cosine distance to its
-    template centroid (broadcast dict captured in the UDF closure)."""
-    spark = turns.sparkSession
-    bc = spark.sparkContext.broadcast((dict(centroid_map), np.asarray(default)))
-    dim = cfg.embedding_dim
-
-    @F.pandas_udf(T.DoubleType())
-    def score_udf(texts: pd.Series, sigs: pd.Series) -> pd.Series:
-        from cordon_spark import kernel
-
-        cmap, dflt = bc.value
-        emb = kernel.embed_texts(texts.fillna("").tolist(), dim)
-        return pd.Series(
-            kernel.centroid_scores(emb, sigs.fillna("?").tolist(), cmap, dflt)
-        )
-
-    return turns.withColumn(
-        "score", score_udf(F.col("text"), F.coalesce("template_id", F.lit("?")))
-    )
+from cordon_spark.operators.scoring import score_windows_frozen
 
 
 def route_stream(scored: DataFrame, threshold: float) -> DataFrame:
@@ -357,80 +334,19 @@ def window_stream(
     )
 
 
-def score_windows_streaming(
-    windows: DataFrame,
-    centroid_map: dict,
-    default: np.ndarray,
-    cfg: AnalysisConfig,
-    signature_col: str | None = None,
-) -> DataFrame:
-    """Embed window contents and score against FROZEN centroid state,
-    spelled as mapInPandas: the scalar-pandas-UDF form hits a Spark
-    row-representation cast bug (GenericInternalRow/ColumnarBatchRow ->
-    UnsafeRow) when it directly consumes applyInPandasWithState output;
-    mapInPandas takes the Arrow path that accepts any row form.
-
-    The stream embeds with the deterministic hash kernel only. Centroid
-    state built by a batch run under any other backend (transformer /
-    llama-cpp / remote) lives in a different vector space — scoring hash
-    vectors against it would silently produce meaningless scores, so we
-    refuse up front instead.
-    """
-    if cfg.backend != "hash":
-        raise ValueError(
-            "score_windows_streaming embeds with the deterministic 'hash' "
-            f"kernel, but cfg.backend={cfg.backend!r}: centroid state built "
-            "by that backend is in a different embedding space and the "
-            "stream's scores would be meaningless. Re-build the centroid "
-            "state with backend='hash', or score this stream in batch mode."
-        )
-    spark = windows.sparkSession
-    bc = spark.sparkContext.broadcast((dict(centroid_map), np.asarray(default)))
-    dim = cfg.embedding_dim
-    schema = T.StructType(windows.schema.fields + [T.StructField("score", T.DoubleType())])
-
-    def score_batches(batches):
-        from cordon_spark import kernel
-
-        cmap, dflt = bc.value
-        for pdf in batches:
-            emb = kernel.embed_texts(pdf["content"].fillna("").tolist(), dim)
-            sigs = (
-                pdf[signature_col].fillna("?").tolist()
-                if signature_col
-                else ["?"] * len(pdf)
-            )
-            yield pdf.assign(score=kernel.centroid_scores(emb, sigs, cmap, dflt))
-
-    return windows.mapInPandas(score_batches, schema)
-
-
 def pipeline_stream(
     turns: DataFrame,
-    centroid_map: dict,
-    default: np.ndarray,
+    sum_map: dict,
     cfg: AnalysisConfig,
     threshold: float,
     watermark: str = "30 minutes",
 ) -> DataFrame:
     """The FULL pipeline on a continuous turn stream: stateful window
-    assembly (window_stream) -> embed + cosine score against FROZEN
-    centroid state (built by a batch run) -> threshold route. One keyed
-    shuffle (conv_id) + pure maps; the percentile threshold necessarily
-    comes from the batch side — a stream cannot sort globally."""
+    assembly (window_stream) -> embed + cosine score against the FROZEN
+    per-signature sums a batch run's template_centroids returned
+    (operators.scoring.score_windows_frozen) -> threshold route. One
+    keyed shuffle (conv_id) + pure maps; the percentile threshold
+    necessarily comes from the batch side — a stream cannot sort
+    globally."""
     windows = window_stream(turns, cfg.window_size, watermark=watermark)
-    scored = score_windows_streaming(windows, centroid_map, default, cfg)
-    return route_stream(scored, threshold)
-
-
-def windowed_anomaly_counts(
-    routed: DataFrame, ts_col: str = "ts", window: str = "5 minutes", watermark: str = "10 minutes"
-) -> DataFrame:
-    """Watermarked tumbling-time-window counts per sink (late rows beyond
-    the watermark are dropped by the engine)."""
-    return (
-        routed.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window).alias("w"), "sink")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("window_start"), "sink", "n")
-    )
+    return route_stream(score_windows_frozen(windows, sum_map, cfg), threshold)

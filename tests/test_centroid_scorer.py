@@ -274,3 +274,23 @@ def test_centroid_scorer_edges(spark):
         score_windows_centroid(spark, one, model_cfg)
     with pytest.raises(ValueError, match="embedding"):
         score_windows_knn(spark, one, model_cfg)
+
+
+def test_centroid_null_signature_scores_as_question_mark(spark):
+    """A window without a signature belongs to "?", the windower's key
+    for a turn without a template, in both passes: it scores exactly
+    like the same window with "?" (a null used to crash the sums)."""
+    from cordon_spark.operators.scoring import score_windows_centroid
+
+    cfg = AnalysisConfig(scorer="centroid")
+    texts = ["disk full on node 7", "disk full on node 9", "user login ok",
+             "user login ok again", "kernel panic xyzzy", "disk full on node 3"]
+    sigs = ["a", "a", "?", "?", "b", None]
+    schema = "conv_id string, window_id long, signature string, content string"
+
+    def scores(signatures):
+        rows = [("c", i, s, t) for i, (s, t) in enumerate(zip(signatures, texts))]
+        scored = score_windows_centroid(spark, spark.createDataFrame(rows, schema), cfg)
+        return [r.score for r in scored.orderBy("window_id").collect()]
+
+    assert scores(sigs) == scores([s if s is not None else "?" for s in sigs])

@@ -4,6 +4,8 @@ import pathlib
 import subprocess
 import sys
 
+import pytest
+
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 FLAG = "spark.python.sql.dataFrameDebugging.enabled"
 
@@ -31,3 +33,46 @@ def test_extra_conf_overrides_dataframe_debugging():
     )
     assert out.returncode == 0, out.stderr[-2000:]
     assert out.stdout.strip().splitlines()[-1] == "true True"
+
+
+def test_ship_package_registers_once(spark):
+    """A second ship leaves the session as it is: Spark would append the
+    zip to the Python includes and the driver's sys.path again."""
+    from cordon_spark.session import ship_package
+
+    def registered():
+        return (
+            spark.sparkContext._python_includes.count("cordon_spark.zip"),
+            sum(p.endswith("cordon_spark.zip") for p in sys.path),
+        )
+
+    before = registered()
+    for _ in range(3):
+        ship_package(spark)
+    assert registered() == before
+    assert before[0] == 1
+
+
+def test_every_harness_callable_ships(monkeypatch):
+    """entry() and every queries() callable ship the package before the
+    query runs: the harness's session does not come from get_spark."""
+    import __spark_entry__ as E
+    from cordon_spark import session
+
+    class Shipped(Exception):
+        pass
+
+    shipped = []
+
+    def ship(spark):
+        shipped.append(spark)
+        raise Shipped
+
+    monkeypatch.setattr(session, "ship_package", ship)
+    queries = E.queries()
+    for query in queries.values():
+        with pytest.raises(Shipped):
+            query("harness session", "sf dir")
+    with pytest.raises(Shipped):
+        E.entry("harness session")
+    assert shipped == ["harness session"] * (len(queries) + 1)

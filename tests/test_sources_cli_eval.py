@@ -239,9 +239,12 @@ def test_cli_llama_backend_mocked_e2e(spark, tmp_path):
 
 
 def test_streaming_route_memory_sink(spark, tmp_path):
+    """Turn-level stream scoring is window scoring with content = text;
+    a turn without a template scores under "?"."""
     from cordon_spark.config import AnalysisConfig
     from cordon_spark.datagen import generate_transcripts, write_parquet
-    from cordon_spark.streaming.route import route_stream, score_turns_streaming
+    from cordon_spark.operators.scoring import score_windows_frozen
+    from cordon_spark.streaming.route import route_stream
 
     pdf, _ = generate_transcripts(n_convs=3, mean_turns=20, seed=9, with_edge_cases=False)
     src = tmp_path / "stream_src"
@@ -249,14 +252,18 @@ def test_streaming_route_memory_sink(spark, tmp_path):
     write_parquet(pdf, str(src / "part0.parquet"))
 
     cfg = AnalysisConfig(scorer="centroid")
-    centroids = {"?": np.ones(cfg.embedding_dim) / np.sqrt(cfg.embedding_dim)}
     schema = spark.read.parquet(str(src)).schema
     stream = spark.readStream.schema(schema).parquet(str(src))
-    scored = score_turns_streaming(
-        stream.withColumn("template_id", F.lit(None).cast("string")),
-        centroids,
-        centroids["?"],
+    scored = score_windows_frozen(
+        stream.select(
+            "conv_id",
+            "turn_idx",
+            F.col("text").alias("content"),
+            F.lit(None).cast("string").alias("template_id"),
+        ),
+        {"?": np.ones(cfg.embedding_dim)},
         cfg,
+        signature_col="template_id",
     )
     routed = route_stream(scored, threshold=0.5)
     q = (
@@ -418,14 +425,16 @@ def test_streaming_window_assembly_matches_batch(spark, tmp_path):
 
 
 def test_streaming_full_pipeline(spark, tmp_path):
-    """pipeline_stream: window assembly + frozen-state scoring + route
-    on a live stream; scores match the batch kernel on identical window
-    contents."""
+    """pipeline_stream: window assembly + scoring against a batch run's
+    template_centroids sums + route on a live stream; scores match the
+    shared kernel on identical window contents."""
     import datetime as dt
 
     from cordon_spark import kernel
     from cordon_spark.config import AnalysisConfig
     from cordon_spark.datagen import write_parquet
+    from cordon_spark.operators.scoring import template_centroids
+    from cordon_spark.operators.windowing import segment_windows
     from cordon_spark.streaming.route import pipeline_stream
 
     t0 = dt.datetime(2026, 1, 1)
@@ -443,12 +452,16 @@ def test_streaming_full_pipeline(spark, tmp_path):
     src.mkdir()
     write_parquet(pdf, str(src / "b0.parquet"))
 
+    # the frozen state: the per-signature sums the batch scorer's first
+    # pass returns over a batch run's windows (no templates: "?")
     cfg = AnalysisConfig(scorer="centroid")
-    centroid = np.ones(cfg.embedding_dim) / np.sqrt(cfg.embedding_dim)
-    cmap = {"?": centroid}
+    batch = segment_windows(spark.createDataFrame(pdf.drop(columns="ts")), cfg)
+    sum_map, _ = template_centroids(
+        batch.withColumn("signature", F.lit("?")), embedding_dim=cfg.embedding_dim
+    )
     schema = spark.read.parquet(str(src)).schema
     stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(str(src))
-    routed = pipeline_stream(stream, cmap, centroid, cfg, threshold=0.9, watermark="1 hour")
+    routed = pipeline_stream(stream, sum_map, cfg, threshold=0.9, watermark="1 hour")
     q = (
         routed.writeStream.outputMode("append")
         .format("memory")
@@ -468,11 +481,14 @@ def test_streaming_full_pipeline(spark, tmp_path):
         q.stop()
 
     assert len(got) == 4  # 16 turns / window_size 4
-    # scores match the shared kernel on the same contents
+    # scores match the shared kernel against the normalized batch sums
+    centroid = kernel.l2_normalize(sum_map["?"][None, :])[0]
     for r in got:
         emb = kernel.embed_texts([r.content], cfg.embedding_dim)
-        exp = kernel.centroid_scores(emb, ["?"], cmap, centroid)[0]
+        exp = kernel.centroid_scores(emb, ["?"], {"?": centroid}, centroid)[0]
         assert abs(r.score - exp) < 1e-12
+    # the window holding the planted turn 8 sits farthest from the state
+    assert max(got, key=lambda r: r.score).window_id == 2
     assert {r.sink for r in got} <= {"anomalous", "routine"}
 
 
@@ -866,14 +882,14 @@ def test_load_dataset_config_manifest(tmp_path):
 
 
 def test_streaming_score_refuses_foreign_backend(spark):
-    """Streaming scorer embeds with the hash kernel: centroid state
-    built by another backend lives in a different vector space, so a
-    non-hash cfg.backend must refuse loudly instead of silently scoring
-    garbage."""
+    """The frozen-state scorer embeds window content with the hash
+    kernel: state built by another backend lives in a different vector
+    space, so a non-hash cfg.backend must refuse loudly instead of
+    silently scoring garbage."""
     import numpy as np
 
     from cordon_spark.config import AnalysisConfig
-    from cordon_spark.streaming.route import score_windows_streaming
+    from cordon_spark.operators.scoring import score_windows_frozen
 
     windows = spark.createDataFrame(
         [("c0", 0, 3, "text", "sig")],
@@ -881,7 +897,7 @@ def test_streaming_score_refuses_foreign_backend(spark):
     )
     cfg = AnalysisConfig(backend="sentence-transformers", model_name="all-MiniLM-L6-v2")
     with pytest.raises(ValueError, match="backend"):
-        score_windows_streaming(windows, {}, np.zeros(64), cfg)
+        score_windows_frozen(windows, {"sig": np.ones(64)}, cfg, signature_col="signature")
 
 
 def test_evaluate_cli_end_to_end(spark, tmp_path, capsys):
