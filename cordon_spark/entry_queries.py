@@ -425,7 +425,9 @@ def _vec_pipeline(spark, sf_dir):
     ).drop("vs")
     windows = S.normalize(windows, "embedding")
     cfg = AnalysisConfig(k_neighbors=K, anomaly_percentile=P)
-    scored = score_windows_knn(spark, windows, cfg)
+    # scored once, as in _knn_scored: the threshold's actions and the
+    # merge read these rows
+    scored = score_windows_knn(spark, windows, cfg).localCheckpoint(eager=False)
     kept, _, _, _ = select_significant(scored, cfg)
     blocks = merge_blocks(kept)
     return turns, blocks

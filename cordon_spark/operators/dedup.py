@@ -24,7 +24,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, Observation, functions as F, types as T
 
 
 def tokens_col(text_col: str = "text") -> Column:
@@ -438,22 +438,21 @@ def dedup_clusters(
             hop = stepped.select(
                 F.col("node").alias("_hn"), F.col("lab").alias("_hl")
             )
-            new_labels = ckpt(
+            # convergence is observed on the checkpoint's own job: the
+            # previous round's label rides along in _old, so no join and
+            # no probe job per round
+            moved = Observation()
+            labels = ckpt(
                 stepped.join(hop, stepped.lab == hop._hn, "left")
                 .select(
                     "node",
                     F.least(F.col("lab"), F.coalesce("_hl", F.col("lab"))).alias("lab"),
                     "_old",
                 )
+                .observe(moved, F.count(F.when(F.col("lab") != F.col("_old"), 1)).alias("n"))
+                .select("node", "lab")
             )
-            # convergence probe is a SCAN of the just-checkpointed
-            # partitions — the previous round's label rides along in
-            # _old, so no join (and no shuffle job) per round
-            changed = (
-                new_labels.filter(F.col("lab") != F.col("_old")).limit(1).count()
-            )
-            labels = new_labels.select("node", "lab")
-            if changed == 0:
+            if moved.get["n"] == 0:
                 if stats is not None:  # rounds-to-convergence, for benches
                     stats["rounds"] = _round + 1
                 return labels.select(

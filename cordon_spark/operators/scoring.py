@@ -155,104 +155,105 @@ def score_windows_knn(
 
 _TREE_FANIN = 64
 
-_PARTIAL_SCHEMA = T.StructType(
-    [
-        T.StructField("sigs", T.ArrayType(T.StringType())),
-        T.StructField("cnts", T.ArrayType(T.LongType())),
-        T.StructField("flat", T.ArrayType(T.DoubleType())),
-    ]
-)
+_PARTIAL_SCHEMA = "pid long, keys array<string>, flat array<double>"
 
 
-def _reduce(parts: list) -> tuple:
-    """Merge (sigs, cnts, sum-matrix) partials into one per signature —
-    a factorize + np.add.at, no per-row Python."""
-    sigs = [sig for part in parts for sig in part[0]]
-    codes, uniques = pd.factorize(np.asarray(sigs, dtype=object), sort=False)
-    mat = np.vstack([part[2] for part in parts])
+def _key_sums(keys, mat: np.ndarray) -> tuple[list, np.ndarray]:
+    """(distinct keys, per-key sums of `mat`'s rows): a factorize +
+    np.add.at, each key's rows summed from zeros in row order."""
+    codes, uniques = pd.factorize(np.asarray(keys, dtype=object), sort=False)
     sums = np.zeros((len(uniques), mat.shape[1]), dtype=np.float64)
     np.add.at(sums, codes, mat)
-    cnts = np.bincount(
-        codes,
-        weights=np.concatenate([np.asarray(part[1], dtype=np.float64) for part in parts]),
-        minlength=len(uniques),
-    )
-    return list(uniques), cnts.astype(np.int64).tolist(), sums
+    return list(uniques), sums
 
 
-def _unpack(pdf: pd.DataFrame) -> list:
-    """Rows of the partial schema -> (sigs, cnts, sum-matrix) partials."""
-    return [
-        (list(sigs), cnts, np.asarray(flat, dtype=np.float64).reshape(len(sigs), -1))
-        for sigs, cnts, flat in zip(pdf["sigs"], pdf["cnts"], pdf["flat"])
-        if len(sigs)
+def _merge_partials(pdf: pd.DataFrame) -> tuple[list, np.ndarray]:
+    """_key_sums of partial rows taken in pid order."""
+    pdf = pdf.sort_values("pid", kind="mergesort")
+    mats = [
+        np.asarray(flat, dtype=np.float64).reshape(len(keys), -1)
+        for keys, flat in zip(pdf["keys"], pdf["flat"])
     ]
+    return _key_sums(np.concatenate(pdf["keys"].tolist()), np.vstack(mats))
 
 
-def _pack(parts: list):
-    """One partial-schema row holding the merge of `parts` (none if empty)."""
-    if parts:
-        sigs, cnts, sums = _reduce(parts)
-        yield pd.DataFrame({"sigs": [sigs], "cnts": [cnts], "flat": [sums.ravel()]})
+def _partial_row(pid: int, keys: list, sums: np.ndarray) -> pd.DataFrame:
+    return pd.DataFrame({"pid": [pid], "keys": [list(keys)], "flat": [sums.ravel()]})
 
 
-def _merge_partial_rows(batches):
-    """Combine rows of the partial schema into one row per partition —
-    the executor-side level of the tree reduce."""
-    yield from _pack([part for pdf in batches for part in _unpack(pdf)])
+def _partial_sums(df: DataFrame, fold) -> dict:
+    """{key: float64 sum vector} over `df` by MAP-SIDE PARTIAL
+    AGGREGATION, the one reduce behind template_centroids, the Lloyd
+    fits and pca_fit. `fold(batches)` reduces a partition's Arrow
+    batches to (keys, one row of sums per key) or None; each partition
+    emits that as ONE (pid, keys, flat) row, pid its partition id, so
+    the payload is O(keys x width) per partition whatever its row count.
+
+    Above _TREE_FANIN partitions the rows are first merged
+    executor-side (treeAggregate shape: repartition to ~sqrt(P), each
+    merged row tagged with its smallest pid), so the driver sees
+    O(sqrt(P)) rows. Every merge sums each key from zeros in pid order,
+    never in shuffle arrival order, so the result is bit-reproducible
+    for a fixed input partitioning at any parallelism. Counts ride in
+    the sums as float64, exact below 2**53."""
+
+    def partials(batches):
+        from pyspark import TaskContext
+
+        part = fold(batches)
+        if part is not None:
+            yield _partial_row(TaskContext.get().partitionId(), *part)
+
+    def merge(batches):
+        frames = [pdf for pdf in batches if len(pdf)]
+        if frames:
+            pdf = pd.concat(frames)
+            yield _partial_row(int(pdf["pid"].min()), *_merge_partials(pdf))
+
+    partial_df = df.mapInPandas(partials, _PARTIAL_SCHEMA)
+    n_parts = partial_df.rdd.getNumPartitions()
+    if n_parts > _TREE_FANIN:
+        partial_df = partial_df.repartition(max(2, int(n_parts**0.5))).mapInPandas(
+            merge, _PARTIAL_SCHEMA
+        )
+    pdf = partial_df.toPandas()
+    return dict(zip(*_merge_partials(pdf))) if len(pdf) else {}
 
 
 def template_centroids(
     windows: DataFrame, signature_col: str = "signature", embedding_dim: int = 64
 ) -> tuple[dict, dict]:
-    """(sum_map, count_map) of per-signature embedding SUMS via
-    MAP-SIDE PARTIAL AGGREGATION (sums rather than normalized centroids
-    so the scorer can do leave-one-out subtraction): each
-    partition reduces its windows to ONE (sigs, cnts, flat sum-matrix)
-    row inside one mapInPandas pass — numpy sums, no exploded shuffle —
-    and the tiny partials merge on the driver. At 10^12 turns this is
-    the only aggregation shape that works: the shuffle payload is
-    O(signatures x dim) per partition, independent of row count.
+    """(sum_map, count_map) of per-signature embedding SUMS (sums rather
+    than normalized centroids so the scorer can do leave-one-out
+    subtraction), reduced by _partial_sums: each partition's windows
+    fold to one row of [sum vector, count] per signature. At 10^12
+    turns this is the only aggregation shape that works: no exploded
+    shuffle of vectors.
 
     Vectors come from the `embedding` column when `windows` has one,
     else from the hash kernel over `content` (`embedding_dim` wide)."""
     vec_col = "embedding" if "embedding" in windows.columns else "content"
 
-    def partials(batches):
+    def fold(batches):
         # each Arrow batch reduces to its own sums before the next is read,
         # so a partition never holds more than one batch of vectors
-        yield from _pack(
-            [
-                _reduce(
-                    [(pdf["signature"], np.ones(len(pdf)), _window_vectors(pdf, embedding_dim))]
-                )
-                for pdf in batches
-                if len(pdf)
-            ]
-        )
+        parts = [
+            _key_sums(
+                pdf["signature"],
+                np.hstack([_window_vectors(pdf, embedding_dim), np.ones((len(pdf), 1))]),
+            )
+            for pdf in batches
+            if len(pdf)
+        ]
+        if parts:
+            return _key_sums(
+                [sig for sigs, _ in parts for sig in sigs], np.vstack([s for _, s in parts])
+            )
 
-    partial_df = windows.select(
-        F.coalesce(signature_col, F.lit("?")).alias("signature"), vec_col
-    ).mapInPandas(partials, _PARTIAL_SCHEMA)
-    # treeAggregate-style two-level reduce: above _TREE_FANIN input
-    # partitions, the one-row-per-partition partials are themselves
-    # combined executor-side (repartition to ~sqrt(P) then merge rows of
-    # the partial schema with the same vectorized combiner), so the
-    # driver sees O(sqrt(partitions)) rows instead of O(partitions) —
-    # the shape that holds at 1000+ executors. Partial-sum merge order
-    # changes the result only in the last float ulp (asserted at 1e-9 in
-    # tests).
-    n_parts = partial_df.rdd.getNumPartitions()
-    if n_parts > _TREE_FANIN:
-        fanin = max(2, int(n_parts**0.5))
-        partial_df = partial_df.repartition(fanin).mapInPandas(
-            _merge_partial_rows, _PARTIAL_SCHEMA
-        )
-    parts = _unpack(partial_df.toPandas())
-    if not parts:
-        return {}, {}
-    sigs, cnts, sums = _reduce(parts)
-    return dict(zip(sigs, sums)), dict(zip(sigs, cnts))
+    sums = _partial_sums(
+        windows.select(F.coalesce(signature_col, F.lit("?")).alias("signature"), vec_col), fold
+    )
+    return {sig: s[:-1] for sig, s in sums.items()}, {sig: int(s[-1]) for sig, s in sums.items()}
 
 
 def score_windows_centroid(

@@ -23,8 +23,9 @@ renormalized decoded vector.
 
 Each step has one implementation that the searches share:
   - _lloyd_fit: the deterministic Lloyd loop behind kmeans_fit (one
-    cosine subspace) and pq_fit (m L2 subspaces), with per-partition
-    partials and a tree reduce summed in source-partition order;
+    cosine subspace) and pq_fit (m L2 subspaces); its per-partition
+    sums reduce through scoring._partial_sums, the reduce the centroid
+    scorer and visualize.pca_fit share;
   - _assign_clusters / _probe_clusters: nearest-centroid assignment of
     candidates and top-n_probe centroid selection of queries;
   - _probe_topk / _top_k: equi-join against the broadcast probe side,
@@ -129,38 +130,6 @@ def brute_force_topk(
 # ------------------------------------------------------------------ #
 # Deterministic Lloyd fit: k-means (IVF quantizer) and PQ codebooks
 # ------------------------------------------------------------------ #
-_PARTIAL_SCHEMA = "pid long, sub long, cnt array<long>, flat array<double>"
-
-
-def _partial_frame(pid: int, sums: np.ndarray, cnts: np.ndarray):
-    """One partial row per subspace: (pid, sub, cnt, flat)."""
-    import pandas as pd
-
-    return pd.DataFrame(
-        {
-            "pid": [pid] * len(sums),
-            "sub": list(range(len(sums))),
-            "cnt": [c.tolist() for c in cnts],
-            "flat": [s.ravel().tolist() for s in sums],
-        }
-    )
-
-
-def _sum_partials(pdf, shape: tuple) -> tuple[np.ndarray, np.ndarray]:
-    """(sums, cnts) of partial rows for (m, k, dsub) codebooks, summed
-    from zeros sorted by (sub, pid). Float addition is not associative
-    and shuffle arrival order is not deterministic; summing each
-    subspace in source-partition-id order keeps the fit bit-reproducible
-    for a fixed input partitioning at every merge level."""
-    sums = np.zeros(shape, dtype=np.float64)
-    cnts = np.zeros(shape[:2], dtype=np.int64)
-    rows = pdf.sort_values(["sub", "pid"])[["sub", "cnt", "flat"]]
-    for sub, cnt, flat in rows.itertuples(index=False):
-        sums[sub] += np.asarray(flat, dtype=np.float64).reshape(shape[1:])
-        cnts[sub] += np.asarray(cnt, dtype=np.int64)
-    return sums, cnts
-
-
 def _lloyd_accumulate(
     mat: np.ndarray, books: np.ndarray, cosine: bool, sums: np.ndarray, cnts: np.ndarray
 ) -> None:
@@ -203,21 +172,17 @@ def _lloyd_fit(
 
     Each partition folds its rows into one running (sum, count)
     accumulator per subspace (np.add.at in row order across Arrow
-    batches) and emits it tagged with its partition id. Above
-    _TREE_FANIN partitions the partials combine executor-side first
-    (the scoring.template_centroids tree reduce) so the driver sees
-    O(sqrt(P)) rows. Both levels sum in (sub, pid) order
-    (_sum_partials), so the fit is bit-reproducible for a fixed input
-    partitioning at any parallelism, tree path included. Changing the
-    input PARTITIONING still moves the last ulp; the baked-oracle
-    generators pin it for that reason.
+    batches); scoring._partial_sums reduces them, key str(j) carrying
+    subspace j's [sums, counts]. It sums every subspace in partition-id
+    order at each merge level, so the fit is bit-reproducible for a
+    fixed input partitioning at any parallelism, tree path included.
+    Changing the input PARTITIONING still moves the last ulp; the
+    baked-oracle generators pin it for that reason.
 
     The input is persisted for the fit unless `persist` is False or it
     is already cached (persist=None): without it every iteration re-runs
     the upstream scan."""
-    import pandas as pd
-
-    from cordon_spark.operators.scoring import _TREE_FANIN
+    from cordon_spark.operators.scoring import _partial_sums
 
     spark = vectors.sparkSession
     owns_cache = (not vectors.is_cached) if persist is None else persist
@@ -242,40 +207,26 @@ def _lloyd_fit(
             raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
         dsub = dim // m
         books = np.stack([seed[:, j * dsub : (j + 1) * dsub] for j in range(m)])
-        shape = books.shape
+        keys = [str(j) for j in range(m)]
+        width = books[0].size
 
         for _ in range(iters):
             bc = spark.sparkContext.broadcast(books)
 
-            def partials(batches):
-                from pyspark import TaskContext
-
+            def fold(batches):
                 cb = bc.value
                 sums = np.zeros_like(cb)
                 cnts = np.zeros(cb.shape[:2], dtype=np.int64)
-                seen = False
                 for pdf in batches:
-                    if len(pdf) == 0:
-                        continue
-                    seen = True
-                    mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-                    _lloyd_accumulate(mat, cb, cosine, sums, cnts)
-                if seen:
-                    yield _partial_frame(TaskContext.get().partitionId(), sums, cnts)
+                    if len(pdf):
+                        mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+                        _lloyd_accumulate(mat, cb, cosine, sums, cnts)
+                if cnts.any():  # every row counts in each subspace
+                    return keys, np.hstack([sums.reshape(m, -1), cnts])
 
-            def merge(batches):
-                frames = [pdf for pdf in batches if len(pdf)]
-                if frames:
-                    part = pd.concat(frames)
-                    yield _partial_frame(int(part["pid"].min()), *_sum_partials(part, shape))
-
-            partial_df = vectors.select(vec_col).mapInPandas(partials, _PARTIAL_SCHEMA)
-            n_parts = partial_df.rdd.getNumPartitions()
-            if n_parts > _TREE_FANIN:
-                partial_df = partial_df.repartition(
-                    max(2, int(n_parts**0.5))
-                ).mapInPandas(merge, _PARTIAL_SCHEMA)
-            sums, cnts = _sum_partials(partial_df.toPandas(), shape)
+            total = _partial_sums(vectors.select(vec_col), fold)
+            acc = np.stack([total[key] for key in keys])
+            sums, cnts = acc[:, :width].reshape(books.shape), acc[:, width:]
             books = books.copy()
             for j in range(m):
                 nz = cnts[j] > 0
@@ -780,7 +731,7 @@ def pq_fit(
     row is [*codeword, half_cc] (pq_with_half_cc).
 
     Same determinism as kmeans_fit: md5(id) init (the same rows seed
-    every subspace) and partials summed in (sub, pid) order, tree
+    every subspace) and partials summed in partition-id order, tree
     reduce included. Assignment is TRUE L2 (argmax of
     dot - 0.5||c||^2 — identical ranking rule to pq_encode, so fit
     and encode can never disagree near boundaries); codewords are

@@ -23,19 +23,14 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from cordon_spark.operators.routing import _block_turns
 
 
-def flagged_turns(turns: DataFrame, blocks: DataFrame) -> DataFrame:
-    """(conv_id, turn_idx) inside any block — a left-semi join to the
-    turns each block covers."""
-    return turns.select("conv_id", "turn_idx").join(
-        _block_turns(blocks), ["conv_id", "turn_idx"], "left_semi"
-    )
-
-
 def turn_level_metrics(
     turns: DataFrame, blocks: DataFrame, label_col: str = "is_anomaly"
 ) -> dict:
-    """Precision/recall/F1 of flagged turns vs boolean ground truth."""
-    flagged = flagged_turns(turns, blocks).withColumn("flagged", F.lit(True))
+    """Precision/recall/F1 of flagged turns vs boolean ground truth.
+    Each turn row left-joins the turns the blocks cover; merged blocks
+    are disjoint, so it matches at most one row and a turn key that
+    repeats in `turns` counts once per row."""
+    flagged = _block_turns(blocks).select("conv_id", "turn_idx", F.lit(True).alias("flagged"))
     joined = turns.join(flagged, on=["conv_id", "turn_idx"], how="left").select(
         F.coalesce("flagged", F.lit(False)).alias("flagged"), F.col(label_col)
     )
@@ -61,9 +56,8 @@ def template_metrics(
     weighted recall over turns carrying template attribution."""
     labeled = turns.filter(F.col(template_col).isNotNull())
     freq = labeled.groupBy(template_col).agg(F.count(F.lit(1)).alias("freq"))
-    flagged = flagged_turns(turns, blocks)
     flagged_templates = (
-        labeled.join(flagged, on=["conv_id", "turn_idx"], how="left_semi")
+        labeled.join(_block_turns(blocks), on=["conv_id", "turn_idx"], how="left_semi")
         .select(template_col)
         .distinct()
     )

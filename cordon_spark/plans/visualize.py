@@ -24,6 +24,8 @@ from pathlib import Path
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
+from cordon_spark.operators.routing import _block_turns
+
 DEFAULT_BINS = 50
 
 
@@ -87,9 +89,7 @@ def template_coverage_data(
     visualize.py:388-489): a template is `detected` when any of its
     anomalous turns falls inside a merged block. One turn-in-block
     join + one hash agg; output is O(#templates)."""
-    from cordon_spark.plans.evaluate import flagged_turns
-
-    flagged = flagged_turns(turns, blocks).withColumn("_flag", F.lit(True))
+    flagged = _block_turns(blocks).select("conv_id", "turn_idx", F.lit(True).alias("_flag"))
     per_tpl = (
         turns.filter(F.col(label_col))
         .join(flagged, on=["conv_id", "turn_idx"], how="left")
@@ -139,23 +139,22 @@ def window_labels(
     )
 
 
-def _pca_partials(vec_col: str, dim: int):
-    """mapInPandas factory: per-partition (n, sum-vector, flattened
-    X^T X) — the O(dim^2)-per-partition shape that makes distributed
-    PCA one pass at any corpus size."""
-    from pyspark.sql import types as T
+def pca_fit(vectors: DataFrame, vec_col: str = "embedding", k: int = 2) -> dict:
+    """Top-k principal axes from distributed (n, sum, X^T X) partials
+    (scoring._partial_sums, one key: the O(dim^2)-per-partition shape
+    that makes distributed PCA one pass at any corpus size) + a
+    driver-side eigh on the dim x dim covariance. No RNG anywhere;
+    sign fixed by forcing each component's largest-|.| entry positive,
+    so runs reproduce exactly for a fixed partitioning and only at the
+    float-ulp level across partitionings (partial-sum merge order)."""
+    from cordon_spark.operators.scoring import _partial_sums
 
-    schema = T.StructType(
-        [
-            T.StructField("n", T.LongType()),
-            T.StructField("s", T.ArrayType(T.DoubleType())),
-            T.StructField("g", T.ArrayType(T.DoubleType())),
-        ]
-    )
+    first = vectors.select(vec_col).first()
+    if first is None:
+        return {"mean": [], "components": []}
+    dim = len(first[0])
 
-    def partials(batches):
-        import pandas as pd
-
+    def fold(batches):
         n = 0
         s = np.zeros(dim)
         g = np.zeros((dim, dim))
@@ -166,31 +165,11 @@ def _pca_partials(vec_col: str, dim: int):
             n += mat.shape[0]
             s += mat.sum(axis=0)
             g += mat.T @ mat
-        if n == 0:
-            return
-        yield pd.DataFrame({"n": [n], "s": [s.tolist()], "g": [g.ravel().tolist()]})
+        if n:
+            return ["pca"], np.concatenate([[n], s, g.ravel()])[None, :]
 
-    return partials, schema
-
-
-def pca_fit(vectors: DataFrame, vec_col: str = "embedding", k: int = 2) -> dict:
-    """Top-k principal axes from distributed (X^T X, sum, n) partials +
-    a driver-side eigh on the dim x dim covariance. No RNG anywhere;
-    sign fixed by forcing each component's largest-|.| entry positive,
-    so runs reproduce exactly for a fixed partitioning and only at the
-    float-ulp level across partitionings (partial-sum merge order)."""
-    first = vectors.select(vec_col).first()
-    if first is None:
-        return {"mean": [], "components": []}
-    dim = len(first[0])
-    partials, schema = _pca_partials(vec_col, dim)
-    rows = vectors.select(vec_col).mapInPandas(partials, schema).collect()
-    n = sum(r["n"] for r in rows)
-    s = np.zeros(dim)
-    g = np.zeros((dim, dim))
-    for r in rows:
-        s += np.asarray(r["s"])
-        g += np.asarray(r["g"]).reshape(dim, dim)
+    total = _partial_sums(vectors.select(vec_col), fold)["pca"]
+    n, s, g = total[0], total[1 : dim + 1], total[dim + 1 :].reshape(dim, dim)
     mean = s / n
     cov = g / n - np.outer(mean, mean)
     vals, vecs = np.linalg.eigh(cov)  # ascending

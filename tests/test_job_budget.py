@@ -80,3 +80,30 @@ def test_threshold_query_job_budget(spark, tmp_path, query):
     pq.write_table(table, tmp_path / "embeddings.parquet")
     fn = getattr(entry_queries, query)
     assert _jobs(spark, lambda: fn(spark, str(tmp_path)).collect()) == 5
+
+
+@pytest.mark.parametrize(
+    "query, budget",
+    [
+        ("q_dedup_clusters", 30),
+        ("q_pipeline_blocks", 15),
+        ("q_route_counts", 19),
+        ("q_eval_turn_metrics", 22),
+    ],
+    ids=["dedup_clusters", "pipeline_blocks", "route_counts", "eval_turn_metrics"],
+)
+def test_entry_query_job_budget(spark, tmp_path, query, budget):
+    """The heaviest entry queries, over a copy of the sf0.001 tables so
+    no plan another test cached can serve them. Each
+    dedup_clusters round takes its convergence from the checkpoint's
+    own job; the pipeline queries score their windows once."""
+    import shutil
+
+    from test_entry_contract import SF_DIR
+
+    from cordon_spark import entry_queries
+
+    for table in ("documents", "embeddings"):
+        shutil.copy(f"{SF_DIR}/{table}.parquet", tmp_path)
+    fn = getattr(entry_queries, query)
+    assert _jobs(spark, lambda: fn(spark, str(tmp_path)).collect()) == budget

@@ -229,20 +229,44 @@ def test_quantized_ann_recall(spark):
     assert zr.q_scale == 0.0 and list(zr.qv) == [0, 0]
 
 
+def _centroid_sums(df):
+    """template_centroids over 7 signatures, as one array."""
+    from pyspark.sql import functions as F
+
+    from cordon_spark.operators.scoring import template_centroids
+
+    sums, cnts = template_centroids(
+        df.select(
+            F.concat(F.lit("s"), (F.col("vec_id") % 7).cast("string")).alias("signature"),
+            F.col("v").alias("embedding"),
+        )
+    )
+    return np.stack([np.append(sums[sig], cnts[sig]) for sig in sorted(sums)])
+
+
+def _pca(df):
+    from cordon_spark.plans.visualize import pca_fit
+
+    model = pca_fit(df, vec_col="v", k=2)
+    return np.array([model["mean"], *model["components"]])
+
+
 @pytest.mark.parametrize(
     "fit",
     [
         lambda df: S.kmeans_fit(df, k=6, iters=3),
         lambda df: S.pq_fit(df, m=4, n_codes=6, iters=3),
+        _centroid_sums,
+        _pca,
     ],
-    ids=["kmeans_fit", "pq_fit"],
+    ids=["kmeans_fit", "pq_fit", "template_centroids", "pca_fit"],
 )
 def test_kmeans_fit_tree_reduce_bit_reproducible(spark, fit):
-    """With >_TREE_FANIN partitions the two-level tree reduce engages
-    for both fits of the shared Lloyd loop; partials carry their source
-    partition id and merge in (sub, pid) order, so repeated fits are
-    BIT-identical (not just allclose) even though the shuffle arrival
-    order varies run to run."""
+    """With >_TREE_FANIN partitions the two-level tree reduce of
+    scoring._partial_sums engages for every caller; partials carry
+    their source partition id and every merge sums in pid order, so
+    repeated fits are BIT-identical (not just allclose) even though the
+    shuffle arrival order varies run to run."""
     df, _ = _vec_df(spark, n=400, dim=8, seed=11)
     wide = df.repartition(80)  # > _TREE_FANIN=64 -> tree path
     assert np.array_equal(fit(wide), fit(wide))

@@ -144,6 +144,32 @@ def test_eval_metrics(spark):
     assert 0 < tm["weighted_recall"] < 1
 
 
+def test_flagged_turn_metrics_count_duplicate_keys_once(spark):
+    """A (conv_id, turn_idx) key that occurs twice in the turns is two
+    turns, each counted once: the block turns hold every key at most
+    once, so the join does not square a repeated key."""
+    from cordon_spark.plans.evaluate import template_metrics, turn_level_metrics
+    from cordon_spark.plans.visualize import template_coverage_data
+
+    turns = spark.createDataFrame(
+        [
+            ("c0", 0, True, "T1"),
+            ("c0", 0, True, "T1"),
+            ("c0", 1, False, "T3"),
+            ("c0", 5, True, "T2"),
+        ],
+        "conv_id string, turn_idx int, is_anomaly boolean, template_id string",
+    )
+    blocks = spark.createDataFrame([("c0", 0, 1)], "conv_id string, start_idx int, end_idx int")
+    m = turn_level_metrics(turns, blocks)
+    assert (m["tp"], m["fp"], m["fn"]) == (2, 1, 1)
+    cov = {c["template_id"]: c for c in template_coverage_data(turns, blocks)}
+    assert cov["T1"] == {"template_id": "T1", "count": 2, "detected": True}
+    assert cov["T2"] == {"template_id": "T2", "count": 1, "detected": False}
+    tm = template_metrics(turns, blocks, rare_threshold=3)
+    assert tm["n_templates"] == 3 and tm["template_coverage"] == pytest.approx(2 / 3)
+
+
 def test_contiguous_sample_seeded(spark):
     """Reference read_log_sample semantics (evaluate.py:46-74): N
     CONSECUTIVE turns from a seeded random offset; same seed -> same
