@@ -10,7 +10,7 @@ help:
 	@echo "  make bench-trace   The same run traced: per-layer and plans.pipeline.* metrics,"
 	@echo "                     e.g. make bench-trace WORKLOAD=knn_band_snapshots"
 	@echo "  make bench-pairs   Interleaved parent/change runs: PARENT=<checkout> (required)"
-	@echo "                     WORKLOAD=<name>[,<name>...] PAIRS=<n> (default 5) SEED=<first seed>"
+	@echo "                     WORKLOAD=<name>[,<name>...] PAIRS=<n> (default 10) SEED=<first seed>"
 	@echo "  make verify        Driver-contract correctness gate (all oracle queries vs DuckDB);"
 	@echo "                     optional SF=<sf dir> QUERIES=name,name"
 	@echo "  make loc           Lines added, removed and net under cordon_spark/ and tests/"
@@ -39,7 +39,7 @@ bench:
 bench-trace:
 	python3 perfbench/run.py --workload $(WORKLOAD) --seed $(SEED) --seconds 1 --trace 1
 
-PAIRS ?= 5
+PAIRS ?= 10
 
 bench-pairs:
 	python3 scripts/bench_pairs.py --parent "$(PARENT)" --workload $(WORKLOAD) --pairs $(PAIRS) --seed $(SEED)

@@ -130,6 +130,12 @@ def score_windows_knn(
     rows and refuses if it got more (the exact test-scale oracle is
     driver-bound by design); the scale path is scorer="centroid".
     """
+    return _knn_counted(spark, windows, cfg, id_cols)[0]
+
+
+def _knn_counted(spark, windows, cfg, id_cols=("conv_id", "window_id")):
+    """(score_windows_knn's result, its row count): the collected
+    matrix holds one row per window."""
     matrix = _collect_matrix(windows, list(id_cols), cfg)
     # Spread the scoring across the cluster: the input is often a
     # single small parquet file = ONE scan task, which serializes the
@@ -145,17 +151,26 @@ def score_windows_knn(
     # Spark-side default chunk applies (reference auto-detects by GPU)
     k = cfg.k_neighbors
     chunk = cfg.scoring_batch_size or KNN_CHUNK_SIZE
-    return _score_pass(
+    scored = _score_pass(
         windows,
         cfg.embedding_dim,
         matrix,
         lambda vecs, pdf, cand: kernel.knn_scores(vecs, cand, k, chunk),
     )
+    return scored, len(matrix)
 
 
 _TREE_FANIN = 64
 
-_PARTIAL_SCHEMA = "pid long, keys array<string>, flat array<double>"
+# a StructType, not a DDL string: PySpark parses DDL through a JVM
+# round trip (PythonSQLUtils.ddlToJson) on every mapInPandas call
+_PARTIAL_SCHEMA = T.StructType(
+    [
+        T.StructField("pid", T.LongType()),
+        T.StructField("keys", T.ArrayType(T.StringType())),
+        T.StructField("flat", T.ArrayType(T.DoubleType())),
+    ]
+)
 
 
 def _key_sums(keys, mat: np.ndarray) -> tuple[list, np.ndarray]:
@@ -276,14 +291,20 @@ def score_windows_centroid(
     cheaper than carrying 64 doubles per window across the Arrow
     boundary and through a cache. Any other backend must embed first:
     without an `embedding` column it raises ValueError."""
+    return _centroid_counted(spark, windows, cfg, signature_col)[0]
+
+
+def _centroid_counted(spark, windows, cfg, signature_col="signature"):
+    """(score_windows_centroid's result, its row count): the sums'
+    counts add up to one per window."""
     _vector_col(windows, cfg)
     dim = cfg.embedding_dim
     sum_map, count_map = template_centroids(windows, signature_col, dim)
     global_count = int(sum(count_map.values()))
     if global_count <= 1:
-        return windows.withColumn("score", F.lit(0.0))
+        return windows.withColumn("score", F.lit(0.0)), global_count
     global_sum = np.sum(np.stack(list(sum_map.values())), axis=0)
-    return _score_pass(
+    scored = _score_pass(
         windows,
         dim,
         (sum_map, count_map, global_sum, global_count),
@@ -291,6 +312,7 @@ def score_windows_centroid(
             vecs, _signatures(pdf, signature_col), *state
         ),
     )
+    return scored, global_count
 
 
 def score_windows_frozen(

@@ -19,8 +19,9 @@ the kept count thresholds_and_stats reports:
 
 One percentile plan, thresholds_and_stats, whose jobs depend on what
 the caller knows:
-  * row count given (`n_rows`, e.g. a snapshot manifest's `rows`) and
-    at most EXACT_PERCENTILE_DIRECT_LIMIT: ONE job collects the score
+  * row count given (`n_rows`: the pipeline's scorer count, a snapshot
+    manifest's `rows`, the parquet footers' count) and at most
+    EXACT_PERCENTILE_DIRECT_LIMIT: ONE job collects the score
     column, and kernel.score_distribution + kernel.exact_percentile —
     the oracle's own calls — give the stats and the cuts;
   * otherwise a fused job computes count/min/max/avg plus

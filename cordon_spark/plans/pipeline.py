@@ -20,12 +20,14 @@ catalog it is materialized once as a snapshot, else persisted in memory.
 
 Counts come from data the pipeline already holds, not from jobs of
 their own: `total_windows`, the distribution and `significant_windows`
-from the threshold's pass (one job in all when a catalog supplies the
-scored_windows row count), and with a catalog `merged_blocks` and the
-per-sink `counts` from the blocks and sink snapshot manifests. Without
-a catalog the per-sink `counts` are one aggregate over the persisted
-scored windows (the kept windows' `n_turns`), not a recount of the
-routed turns, so `routed` stays a lazy plan nothing in the call runs.
+from the threshold's pass (one job in all up to
+EXACT_PERCENTILE_DIRECT_LIMIT rows, as the scorer or a scored_windows
+snapshot manifest supplies the row count), and with a catalog
+`merged_blocks` and the per-sink `counts` from the blocks and sink
+snapshot manifests. Without a catalog the per-sink `counts` are one
+aggregate over the persisted scored windows (the kept windows'
+`n_turns`), not a recount of the routed turns, so `routed` stays a
+lazy plan nothing in the call runs.
 """
 
 from __future__ import annotations
@@ -41,7 +43,7 @@ from cordon_spark.operators import parse as P
 from cordon_spark.operators.merge import merge_blocks
 from cordon_spark.operators.routing import route_turns, split_sinks
 from cordon_spark.operators import threshold as TH
-from cordon_spark.operators.scoring import score_windows_centroid, score_windows_knn
+from cordon_spark.operators.scoring import _centroid_counted, _knn_counted
 from cordon_spark.operators.windowing import segment_windows
 
 
@@ -119,6 +121,8 @@ def analyze_transcripts(
     turns = P.extract_templates(transcripts, templates) if templates else transcripts
 
     # ---- window + embed + score (one composed plan, checkpointed) ----
+    scorer_rows: list[int] = []  # the scorer's row count, once it ran
+
     def build_scored() -> DataFrame:
         use_templates = cfg.scorer == "centroid" and bool(templates)
         windows = segment_windows(
@@ -127,21 +131,24 @@ def analyze_transcripts(
         if cfg.scorer == "centroid" and not use_templates:
             # no parse stage -> one global centroid
             windows = windows.withColumn("signature", F.lit("?"))
-        score = score_windows_centroid if cfg.scorer == "centroid" else score_windows_knn
+        score = _centroid_counted if cfg.scorer == "centroid" else _knn_counted
         if cfg.backend == "hash":
             # persist the window rows: every scoring pass re-embeds the
             # content with the hash kernel (kNN also once on the driver
             # for its matrix), so no vector is cached or shipped back to
             # the JVM; the cache keeps the window plan from re-running.
-            windows = windows.persist()
-            caches.append(windows)
-            return score(spark, windows, cfg).drop("content")
-        # model backends embed once and persist the UDF output (ids +
-        # bounds + vector), which feeds every scoring pass
-        embedded = create_embedder(cfg)(windows, "content").drop("content").persist()
-        caches.append(embedded)
+            vec_col = "content"
+        else:
+            # model backends embed once and persist the UDF output (ids +
+            # bounds + vector), which feeds every scoring pass
+            windows = create_embedder(cfg)(windows, "content").drop("content")
+            vec_col = "embedding"
+        windows = windows.persist()
+        caches.append(windows)
+        scored, n = score(spark, windows, cfg)
+        scorer_rows.append(n)
         # downstream (threshold/merge/route/stats) needs ids+bounds+score
-        return score(spark, embedded, cfg).drop("embedding")
+        return scored.drop(vec_col)
 
     scored = _checkpoint(
         spark, catalog, run_id, "scored_windows", build_scored, metrics, resume
@@ -151,9 +158,10 @@ def analyze_transcripts(
         caches.append(scored)
 
     # ---- threshold + score distribution (one percentile pass) --------
-    # a scored_windows snapshot's manifest holds the row count, which
-    # lets the threshold skip its count job
-    n_scored = int(metrics["scored_windows"]["rows"]) if catalog else None
+    # the row count is known, so the threshold runs no count job: a
+    # scored_windows snapshot's manifest holds it (also on RESUME, where
+    # the scorer never ran), else the scorer's sums or matrix do
+    n_scored = int(metrics["scored_windows"]["rows"]) if catalog else scorer_rows[0]
     significant, lower, upper, dist_stats = TH.select_significant(scored, cfg, n_rows=n_scored)
 
     # ---- merge ---------------------------------------------------------

@@ -97,7 +97,25 @@ def get_spark(
     DataFrame query context no longer names the Python line that built
     the failing expression. Pass
     `extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}`
-    to get it back; PySpark reads the flag once per process."""
+    to get it back; PySpark reads the flag once per process.
+
+    `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` is on
+    (pyspark 4.1.2 leaves it off). Off, a persisted plan keeps its
+    `spark.sql.shuffle.partitions` output partitions however few bytes
+    they hold, so the pipeline's 15,000 headline windows (about 2MB)
+    went through both centroid `mapInPandas` passes and every tail
+    aggregate as that many tiny tasks, each paying the Python worker
+    and task overhead. On, AQE coalesces a cached plan's output by its
+    bytes as it does every other plan's (the advisory-size comment
+    below has the rule): the tiny stages run as one task each, while a
+    cache of at least defaultParallelism MB keeps defaultParallelism
+    partitions. Measured on perfbench's `headline_centroid` (4 vCPUs,
+    `local[4]`, 10 interleaved pairs): process-tree CPU per call
+    11.49 -> 9.50 s median, better in 10 of 10 pairs; 15 -> 11 jobs.
+    The cost: a cache no longer promises its hash partitioning, so a
+    later query that relied on it for a join or aggregate may plan one
+    more exchange. No consumer in this package relies on it; the kNN
+    scorer repartitions explicitly."""
     pin_blas_threads()
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -118,11 +136,18 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # AQE's byte-based coalescing is blind to python-UDF cost: with
-        # the 64MB default it squeezed the embed stage onto 4 workers
-        # (measured). 8MB keeps UDF stages as wide as the cluster while
-        # still coalescing genuinely tiny shuffles.
+        # With coalescePartitions.parallelismFirst on (the default), AQE
+        # targets min(advisory size, stage bytes / defaultParallelism)
+        # per partition, floored at minPartitionSize (1MB): a stage of
+        # at least defaultParallelism MB keeps defaultParallelism
+        # partitions whatever this value is. The advisory size is only
+        # a ceiling; 8MB (not the 64MB default) splits a stage above
+        # defaultParallelism x 8MB into more, smaller python-UDF tasks
+        # (measured at dp=2: 40MB -> 5 partitions at 8m, 3 at 64m).
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
+        # a persisted plan's output is coalesced by the same rule (the
+        # docstring has why and the cost)
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch))

@@ -14,8 +14,17 @@ checkout, so each side builds what it runs from its own source.
 
 Prints every run's `correct` and wall time as it finishes, then, per
 workload and end-to-end metric of the change checkout's BENCHMARK.json:
-the median and min of each side, the parent's interquartile range, and
-in how many pairs the change was better.
+the median and min of each side, the parent's interquartile range, in
+how many pairs the change was better, and one verdict:
+
+  WORSE         the change's median is worse than the parent's by more
+                than the metric's relative `bound`;
+  unresolved    the parent's IQR is wider than `bound` of its median,
+                too wide a spread to tell, and not every change run is
+                better than every parent run;
+  gain          the change was better in at least 9 of 10 pairs and
+                its median is better by more than the parent's IQR;
+  within bound  none of these.
 """
 
 from __future__ import annotations
@@ -51,10 +60,29 @@ def iqr(values: list[float]) -> float:
     return q3 - q1
 
 
+GAIN_SHARE = 0.9  # a gain is better in at least 9 of 10 pairs
+
+
+def verdict(par: list[float], chg: list[float], wins: int, metric: dict) -> str:
+    """The verdict the module docstring defines, for one metric."""
+    sign = 1.0 if metric["better"] == "lower" else -1.0
+    med_par, spread = statistics.median(par), iqr(par)
+    slack = metric["bound"] * abs(med_par)
+    gain = sign * (med_par - statistics.median(chg))
+    if -gain > slack:
+        return "WORSE"
+    beats_all = sign * (min(sign * p for p in par) - max(sign * c for c in chg)) > 0
+    if spread > slack and not beats_all:
+        return "unresolved"
+    if wins >= GAIN_SHARE * len(chg) and gain > spread:
+        return "gain"
+    return "within bound"
+
+
 def summarize(workload: str, runs: dict[str, list[dict]], e2e: list[dict], pairs: int) -> None:
     print(f"\n{workload}: {pairs} pairs, medians parent -> change")
     print(f"  {'metric':12s} {'parent':>10s} {'change':>10s} {'min par':>10s} "
-          f"{'min chg':>10s} {'par IQR':>10s}  better")
+          f"{'min chg':>10s} {'par IQR':>10s}  better  verdict")
     for m in e2e:
         name = m["name"]
         par = [r["metrics"][name]["value"] for r in runs["parent"] if name in r["metrics"]]
@@ -65,7 +93,8 @@ def summarize(workload: str, runs: dict[str, list[dict]], e2e: list[dict], pairs
         sign = 1.0 if m["better"] == "lower" else -1.0
         wins = sum(sign * (p - c) > 0 for p, c in zip(par, chg))
         print(f"  {name:12s} {statistics.median(par):10.4g} {statistics.median(chg):10.4g} "
-              f"{min(par):10.4g} {min(chg):10.4g} {iqr(par):10.4g}  {wins}/{len(chg)}")
+              f"{min(par):10.4g} {min(chg):10.4g} {iqr(par):10.4g}  {wins:>2d}/{len(chg):<2d}   "
+              f"{verdict(par, chg, wins, m)}")
 
 
 def main(argv=None) -> int:
@@ -73,7 +102,7 @@ def main(argv=None) -> int:
     ap.add_argument("--parent", required=True, type=Path, help="parent source checkout")
     ap.add_argument("--change", default=ROOT, type=Path, help="change source checkout")
     ap.add_argument("--workload", required=True, help="workload name(s), comma-separated")
-    ap.add_argument("--pairs", type=int, default=5)
+    ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed", type=int, default=1, help="seed of the first pair")
     args = ap.parse_args(argv)
 

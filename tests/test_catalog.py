@@ -140,7 +140,7 @@ def test_lineage_recorded(spark, tiny_transcripts, tmp_path):
 # local[4] session with 4 shuffle partitions.
 PINNED_LINEAGE = {
     "tiny": {
-        "scored_windows": (780, [(0, 196), (1, 195), (2, 194), (3, 195)]),
+        "scored_windows": (780, [(0, 195), (1, 195), (2, 195), (3, 195)]),
         "blocks": (71, [(0, 71)]),
         "routed_turns": (3113, [(0, 778), (1, 778), (2, 778), (3, 779)]),
     },

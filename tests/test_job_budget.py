@@ -42,7 +42,7 @@ def budget_df(spark):
 
 @pytest.mark.parametrize(
     "scorer, with_catalog, budget",
-    [("knn", True, 12), ("knn", False, 14), ("centroid", False, 13)],
+    [("knn", True, 12), ("knn", False, 11), ("centroid", False, 9)],
     # ids without the pinned number, so lowering a pin renames no test
     ids=["knn-catalog", "knn", "centroid"],
 )
@@ -61,6 +61,34 @@ def test_pipeline_job_budget(spark, budget_df, tmp_path, scorer, with_catalog, b
         # a resumed run reads every stage back and recomputes nothing:
         # its one job is the threshold's collect of the score column
         assert _jobs(spark, lambda: run(resume=True).unpersist()) == 1
+
+
+def test_persisted_stages_sized_by_bytes(spark, budget_df):
+    """AQE coalesces a persisted plan's output by its bytes, as it does
+    any other plan's (get_spark's canChangeCachedPlanOutputPartitioning):
+    the tiny centroid run's persisted stages run as one task each, not
+    as spark.sql.shuffle.partitions tiny ones, while the kNN scorer's
+    explicit repartition keeps its O(n^2) pass defaultParallelism wide."""
+    shuffle_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert shuffle_partitions > 1
+
+    def partitions(scorer):
+        res = analyze_transcripts(
+            spark,
+            budget_df,
+            AnalysisConfig(scorer=scorer),
+            templates=TEMPLATES if scorer == "centroid" else None,
+        )
+        try:
+            return {
+                "scored_windows": res.scored_windows.rdd.getNumPartitions(),
+                "blocks": res.blocks.rdd.getNumPartitions(),
+            }
+        finally:
+            res.unpersist()
+
+    assert partitions("centroid") == {"scored_windows": 1, "blocks": 1}
+    assert partitions("knn")["scored_windows"] == spark.sparkContext.defaultParallelism
 
 
 @pytest.mark.parametrize("query", ["q_threshold_range", "q_threshold_percentile"])
